@@ -194,7 +194,8 @@ def main() -> None:
                 },
                 f,
             )
-        out["samples_file"] = os.path.basename(samples_file)
+        # relative to the repo root, so it resolves wherever it points
+        out["samples_file"] = os.path.relpath(os.path.abspath(samples_file), REPO)
     except OSError as exc:  # read-only checkout: keep the bench green
         print(f"# samples sidecar not written: {exc}", file=sys.stderr)
     if errors:

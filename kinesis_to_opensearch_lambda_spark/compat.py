@@ -19,9 +19,9 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from .config import EngineConfig
-from .operators import pipeline as P
 from .sinks import OpenSearchBulkSink, SplunkHECSink
 from .sinks.splunk import is_disabled
+from .streaming.pipeline import decode_stream
 
 
 def records_to_envelope_df(spark: SparkSession, event: dict[str, Any]):
@@ -55,9 +55,10 @@ def handler(
     denominator.  Counter quirk carried over exactly: the reference
     prints ``success/total`` where ``total = len(processed_records)``
     for BOTH branches (lambda_function.py:87-88,137-138) — the
-    denominator counts records the ES branch skipped for a missing
-    ``random_id`` (the ``None``-guard at :78-79), so a run that skips
-    one record reports ``1/2``, not ``1/1``.
+    denominator counts records a sink's guard skipped — a missing
+    ``random_id`` for the ES branch (the ``None``-guard at :78-79), a
+    payload that is not a parsed JSON object for both — so a run that
+    skips one record reports ``1/2``, not ``1/1``.
     """
     if spark is None:
         from .session import get_session
@@ -65,21 +66,13 @@ def handler(
         spark = get_session(app_name="lambda-compat")
     config = config or EngineConfig()
 
-    env = records_to_envelope_df(spark, event)
-    df = P.decode_kinesis(env)
-    df = P.with_event_timestamp(df)
-    df = P.nullify_empty_ip(df)
+    df = decode_stream(records_to_envelope_df(spark, event))
     df.persist()  # one decode, two sinks (lambda_function.py:141,144,148)
     try:
         total = df.count()  # the reference's shared denominator
         result = {"elasticsearch": 0, "splunk": 0, "total": total}
         if es_sink is not None:
-            # The None/null-key guard applies ONLY to the ES branch
-            # (lambda_function.py:78-79 skips, :81 keys on random_id);
-            # the Splunk branch receives every successfully parsed
-            # record regardless of random_id (:117-126,148).  The sink
-            # itself filters null ids (sinks/opensearch.py serialize).
-            ok, _ = es_sink.write(P.drop_null_records(df))
+            ok, _ = es_sink.write(df)
             result["elasticsearch"] = ok
             print(f"Successfully processed {ok}/{total} items for opensearch")
         if splunk_sink is not None and not is_disabled(config.splunk_disabled):

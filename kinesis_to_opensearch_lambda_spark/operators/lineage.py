@@ -81,17 +81,19 @@ _CUT_HEAP_FRACTION = 64
 def _heap_bytes(df: DataFrame) -> int:
     """Heap of the JVM that will hold localCheckpoint blocks.
 
-    Under a ``local[*]`` master the executor IS the driver JVM, so the
-    budget must come from ``spark.driver.memory`` even when a
+    Under a ``local`` / ``local[...]`` master the executor IS the driver
+    JVM, so the budget must come from ``spark.driver.memory`` even when a
     cluster-style conf also sets ``spark.executor.memory`` (r13 ADVICE:
     preferring the executor value unconditionally would size the budget
     from the wrong — typically larger — heap and re-admit the sf10 OOM
-    this guard exists to prevent).  Spark memory strings allow an
+    this guard exists to prevent).  ``local-cluster[...]`` launches
+    separate executor JVMs and reads ``spark.executor.memory`` like any
+    cluster master.  Spark memory strings allow an
     optional trailing 'b' ('512mb', '16gb'); any unparseable value
     degrades to the conservative 1g default instead of raising.
     """
     conf = df.sparkSession.sparkContext.getConf()
-    if conf.get("spark.master", "").startswith("local"):
+    if re.fullmatch(r"local(\[.*\])?", conf.get("spark.master", "")):
         raw = conf.get("spark.driver.memory", None) or "1g"
     else:
         raw = conf.get("spark.executor.memory", None) or conf.get(

@@ -1,4 +1,4 @@
-"""Reference-parity pipeline operators (SURVEY.md §2A, R2-R9, R13).
+"""Reference-parity pipeline operators (SURVEY.md §2A, R2-R9).
 
 The reference processes each Kinesis record with eager per-row Python
 (`/root/reference/lambda_function.py:43-54`):
@@ -18,8 +18,6 @@ executor cores; the only state is the sink.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -74,13 +72,7 @@ AUDIT_SCHEMA = T.StructType(
 )
 
 
-def decode_kinesis(
-    df: DataFrame,
-    data_col: str = "kinesis_data",
-    schema: T.StructType = AUDIT_SCHEMA,
-    keep_raw: bool = True,
-    tolerant: bool = False,
-) -> DataFrame:
+def decode_kinesis(df: DataFrame, tolerant: bool = False) -> DataFrame:
     """R2+R3: base64-decode the Kinesis payload and parse the JSON.
 
     Reference: ``base64.b64decode`` + ``json.loads`` at
@@ -91,11 +83,11 @@ def decode_kinesis(
     fails the batch — the reference's behaviour exactly (a decode error
     in the :141 list comprehension fails the whole Lambda invocation and
     Kinesis redelivers).  ``tolerant=True`` switches to ``try_to_binary``:
-    undecodable records become NULL rows that R7 drops (or a dead-letter
-    branch captures) and the stream keeps going.
+    undecodable records become NULL rows that the sinks' guards skip (or
+    a dead-letter branch captures) and the stream keeps going.
 
-    Returns one column per schema field, plus ``_raw`` (the decoded JSON
-    string) when ``keep_raw`` — the schemaless Splunk passthrough.
+    Returns one column per ``AUDIT_SCHEMA`` field plus ``_raw`` (the
+    decoded JSON string) — the schemaless Splunk passthrough.
 
     The decode is wrapped in a one-element ``explode`` (a Generate
     node): generated attributes are a predicate-pushdown and
@@ -106,33 +98,31 @@ def decode_kinesis(
     the null-filter below any repartition — onto the narrow scan stage).
     """
     if tolerant:
-        raw = F.try_to_binary(F.col(data_col), F.lit("base64")).cast("string")
+        raw = F.try_to_binary(F.col("kinesis_data"), F.lit("base64")).cast("string")
     else:
-        raw = F.unbase64(F.col(data_col)).cast("string")
+        raw = F.unbase64(F.col("kinesis_data")).cast("string")
     decoded = F.struct(
-        F.from_json(raw, schema).alias("p"), raw.alias("raw")
+        F.from_json(raw, AUDIT_SCHEMA).alias("p"), raw.alias("raw")
     )
-    out = df.select(
-        *[F.col(c) for c in df.columns if c != data_col],
-        F.explode(F.array(decoded)).alias("_dec"),
+    passthrough = [F.col(c) for c in df.columns if c != "kinesis_data"]
+    out = df.select(*passthrough, F.explode(F.array(decoded)).alias("_dec"))
+    return out.select(
+        *passthrough,
+        *[F.col("_dec.p." + f.name).alias(f.name) for f in AUDIT_SCHEMA.fields],
+        F.col("_dec.raw").alias("_raw"),
     )
-    cols = [F.col("_dec.p." + f.name).alias(f.name) for f in schema.fields]
-    if keep_raw:
-        cols.append(F.col("_dec.raw").alias("_raw"))
-    passthrough = [c for c in df.columns if c != data_col]
-    return out.select(*[F.col(c) for c in passthrough], *cols)
 
 
-def with_event_timestamp(df: DataFrame, source_col: str = "datetime") -> DataFrame:
+def with_event_timestamp(df: DataFrame) -> DataFrame:
     """R4: derive ``@timestamp`` as a verbatim copy of ``datetime``.
 
     Reference: lambda_function.py:46-47 — string copy, no tz
     normalization, set unconditionally.
     """
-    return df.withColumn("@timestamp", F.col(source_col))
+    return df.withColumn("@timestamp", F.col("datetime"))
 
 
-def nullify_empty_ip(df: DataFrame, col: str = "ip") -> DataFrame:
+def nullify_empty_ip(df: DataFrame) -> DataFrame:
     """R5: drop a falsy ``ip`` (empty string -> absent).
 
     Reference: lambda_function.py:48-49 pops the key when
@@ -141,12 +131,10 @@ def nullify_empty_ip(df: DataFrame, col: str = "ip") -> DataFrame:
     serialization time (``to_json`` omits null fields by default),
     matching the reference's sink-visible behaviour.
     """
-    if col not in df.columns:
-        return df
-    return df.withColumn(col, F.nullif(F.col(col), F.lit("")))
+    return df.withColumn("ip", F.nullif(F.col("ip"), F.lit("")))
 
 
-def project_es(df: DataFrame, allowed: tuple[str, ...] = ES_ALLOWED_FIELDS) -> DataFrame:
+def project_es(df: DataFrame) -> DataFrame:
     """R6: allowlist projection for the OpenSearch branch.
 
     Reference: ``_filter_for_es`` dict comprehension at
@@ -155,13 +143,11 @@ def project_es(df: DataFrame, allowed: tuple[str, ...] = ES_ALLOWED_FIELDS) -> D
     Fields absent from the frame are simply not selected (dict-semantics
     parity: the comprehension keeps only keys present in the record).
     """
-    keep = [c for c in allowed if c in df.columns]
+    keep = [c for c in ES_ALLOWED_FIELDS if c in df.columns]
     return df.select(*[df[c] for c in keep])
 
 
-def daily_index_col(
-    prefix: str, datetime_col: str = "datetime"
-) -> Column:
+def daily_index_col(prefix: str) -> Column:
     """R8: daily index routing key: ``prefix + yyyy-MM-dd(datetime)``.
 
     Reference: lambda_function.py:80 —
@@ -169,28 +155,16 @@ def daily_index_col(
     """
     return F.concat(
         F.lit(prefix),
-        F.date_format(F.to_timestamp(F.col(datetime_col)), "yyyy-MM-dd"),
+        F.date_format(F.to_timestamp(F.col("datetime")), "yyyy-MM-dd"),
     ).alias("es_index")
 
 
-def with_daily_index(
-    df: DataFrame, prefix: str, datetime_col: str = "datetime"
-) -> DataFrame:
+def with_daily_index(df: DataFrame, prefix: str) -> DataFrame:
     """R8 as a transform: add the ``es_index`` routing column."""
-    return df.withColumn("es_index", daily_index_col(prefix, datetime_col))
+    return df.withColumn("es_index", daily_index_col(prefix))
 
 
-def drop_null_records(df: DataFrame, key_col: str = "random_id") -> DataFrame:
-    """R7: skip records that failed decode (None-guard).
-
-    Reference: ``if message is None: continue`` in both sinks
-    (lambda_function.py:78-79,117-119).  A record whose JSON failed to
-    parse has a NULL key column after ``from_json``.
-    """
-    return df.filter(F.col(key_col).isNotNull())
-
-
-def dedup_by_doc_id(df: DataFrame, id_col: str = "random_id") -> DataFrame:
+def dedup_by_doc_id(df: DataFrame) -> DataFrame:
     """R9: deterministic doc-id replay dedup, batch flavour.
 
     Reference: OpenSearch ``_id = random_id`` (lambda_function.py:81)
@@ -198,87 +172,15 @@ def dedup_by_doc_id(df: DataFrame, id_col: str = "random_id") -> DataFrame:
     drop duplicate ids within the batch; the streaming flavour is
     ``dropDuplicatesWithinWatermark`` (see streaming.pipeline).
     """
-    return df.dropDuplicates([id_col])
+    return df.dropDuplicates(["random_id"])
 
 
-# escape-aware JSON string-value pattern (handles \" inside values)
-_JSTR = r'"(?:[^"\\]|\\.)*"'
-
-
-def _strip_json_field(col: Column, field: str, value_pattern: str = _JSTR) -> Column:
-    """Textually remove ``"field": <value>`` from a JSON object string,
-    keeping the object well-formed (field-with-trailing-comma, then
-    comma-preceded-last-field, then lone-field)."""
-    f = re.escape(field)
-    out = F.regexp_replace(col, f'"{f}"\\s*:\\s*{value_pattern}\\s*,', "")
-    out = F.regexp_replace(out, f',\\s*"{f}"\\s*:\\s*{value_pattern}', "")
-    return F.regexp_replace(out, f'"{f}"\\s*:\\s*{value_pattern}', "")
-
-
-def splunk_event_json(df: DataFrame) -> Column:
-    """The Splunk-branch event payload: the POST-processed record with
-    full schemaless passthrough.
-
-    Reference semantics (lambda_function.py:141,148 + SURVEY §2A fine
-    points): Splunk sees the record AFTER ``@timestamp`` derivation and
-    empty-``ip`` removal but WITHOUT the ES projection, including any
-    unknown fields.  Spark is schema-first, so unknown fields live in
-    the raw JSON; the two derived mutations are applied to the raw text
-    itself (escape-safe regex + ``to_json`` for quoting), keeping the
-    whole path JVM-side:
-
-    - any pre-existing ``@timestamp`` is replaced (dict-assignment
-      parity), the new value injected via ``to_json`` so escaping is
-      correct;
-    - ``"ip": ""`` / ``"ip": null`` is removed (falsy-pop parity).
-    """
-    raw = _strip_json_field(F.col("_raw"), "@timestamp")
-    raw = _strip_json_field(raw, "ip", '(?:""|null)')
-    frag = F.to_json(F.struct(F.col("datetime").alias("@timestamp")))
-    # '{"@timestamp":"..."}' -> '"@timestamp":"..."'
-    ts_pair = F.substring(frag, 2, F.length(frag) - 2)
-    injected = F.concat(
-        F.lit("{"),
-        ts_pair,
-        F.when(F.regexp_like(raw, F.lit(r"^\{\s*\}$")), F.lit("")).otherwise(
-            F.lit(",")
-        ),
-        F.substring(raw, 2, F.length(raw) - 1),
-    )
-    return F.when(F.col("datetime").isNull(), raw).otherwise(injected)
-
-
-def splunk_envelope(
-    df: DataFrame, splunk_index: str, sourcetype: str = "json"
-) -> DataFrame:
-    """R13: wrap the full record in the Splunk HEC event envelope.
-
-    Reference: lambda_function.py:121-125 —
-    ``{"event": message, "sourcetype": "json", "index": splunk_index}``.
-
-    When the frame carries ``_raw`` (schemaless passthrough) the event
-    payload is :func:`splunk_event_json` — post-processed raw JSON, so
-    unknown fields survive exactly; else the struct of all columns is
-    serialized (``to_json`` drops nulls, matching dict-key absence).
-    """
-    if "_raw" in df.columns and "datetime" in df.columns:
-        event = splunk_event_json(df)
-    else:
-        event = F.to_json(F.struct(*[df[c] for c in df.columns]))
-    return df.select(
-        event.alias("event"),
-        F.lit(sourcetype).alias("sourcetype"),
-        F.lit(splunk_index).alias("index"),
-    )
-
-
-def encode_kinesis(df: DataFrame, payload_cols: list[str] | None = None) -> DataFrame:
+def encode_kinesis(df: DataFrame) -> DataFrame:
     """Inverse of :func:`decode_kinesis` — build the Kinesis envelope
     (base64 of a JSON document) from typed columns.
 
     Used by tests and fixtures to synthesize the stream the reference
     consumes (test_lambda_function.py:64-67 builds the same envelope).
     """
-    cols = payload_cols or df.columns
-    doc = F.to_json(F.struct(*[df[c] for c in cols]))
+    doc = F.to_json(F.struct(*[df[c] for c in df.columns]))
     return df.select(F.base64(doc.cast("binary")).alias("kinesis_data"))

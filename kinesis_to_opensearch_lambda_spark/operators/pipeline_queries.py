@@ -1,7 +1,7 @@
 """Oracle-checked queries for the reference-parity pipeline operators
 (SURVEY.md §2A: R2 base64 decode, R3 JSON parse, R4 @timestamp copy,
-R5 empty-ip drop, R6 ES projection, R7 null-record filter, R8 daily
-index key, R9 doc-id dedup).
+R5 empty-ip drop, R6 ES projection, R8 daily index key, R9 doc-id
+dedup, R13 HEC envelope).
 
 Each query synthesizes the Kinesis envelope from the ``events`` table
 (deterministic reshape — sources.kinesis), runs the REAL decode chain in
@@ -16,8 +16,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import register
+from ..sinks.splunk import SplunkHECSink
 from ..sources.batch import fan_out, load_table
 from ..sources.kinesis import audit_events_from_events, kinesis_envelope
+from ..streaming.pipeline import decode_stream
 from . import pipeline as P
 
 # Shared oracle fragments mirroring sources.kinesis.audit_events_from_events.
@@ -29,14 +31,10 @@ _SQL_IP = (
 
 
 def decoded_audit_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events -> audit records -> Kinesis envelope -> full decode chain
-    (R2+R3 decode, R4 @timestamp, R5 empty-ip drop, R7 null guard)."""
+    """events -> audit records -> Kinesis envelope -> the decode chain
+    (R2+R3 decode, R4 @timestamp, R5 empty-ip drop)."""
     events = fan_out(load_table(spark, sf_dir, "events"))
-    env = kinesis_envelope(audit_events_from_events(events))
-    df = P.decode_kinesis(env)
-    df = P.with_event_timestamp(df)
-    df = P.nullify_empty_ip(df)
-    return P.drop_null_records(df)
+    return decode_stream(kinesis_envelope(audit_events_from_events(events)))
 
 
 @register(
@@ -103,14 +101,8 @@ def pipeline_es_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(lambda_function.py:81).",
 )
 def pipeline_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = fan_out(load_table(spark, sf_dir, "events"))
-    env = kinesis_envelope(audit_events_from_events(events))
-    redelivered = env.union(env)  # at-least-once redelivery
-    df = P.decode_kinesis(redelivered)
-    df = P.with_event_timestamp(df)
-    df = P.nullify_empty_ip(df)
-    df = P.drop_null_records(df)
-    df = P.dedup_by_doc_id(df)
+    df = decoded_audit_stream(spark, sf_dir)
+    df = P.dedup_by_doc_id(df.union(df))  # at-least-once redelivery
     df = P.with_daily_index(df, "logs-")
     return df.groupBy("es_index").agg(F.count("*").alias("n_docs"))
 
@@ -133,13 +125,18 @@ def pipeline_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(reference lambda_function.py:121-125,148).",
 )
 def pipeline_splunk_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = P.splunk_envelope(decoded_audit_stream(spark, sf_dir), "audit")
+    sink = SplunkHECSink(transport_factory=None, splunk_index="audit")
+    df = sink.serialize(decoded_audit_stream(spark, sf_dir))
     return df.agg(
         F.count("*").alias("n_events"),
-        F.count_distinct("sourcetype").alias("n_sourcetypes"),
-        F.count_distinct("index").alias("n_indexes"),
+        F.count_distinct(F.get_json_object("payload", "$.sourcetype")).alias(
+            "n_sourcetypes"
+        ),
+        F.count_distinct(F.get_json_object("payload", "$.index")).alias("n_indexes"),
         F.sum(
-            F.when(F.get_json_object("event", "$.request_url").isNotNull(), 1).otherwise(0)
+            F.when(
+                F.get_json_object("payload", "$.event.request_url").isNotNull(), 1
+            ).otherwise(0)
         ).alias("n_with_url"),
     )
 
@@ -177,7 +174,7 @@ def pipeline_ip_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="R11 error containment as an oracle-checked batch query: every "
     "7th envelope is corrupted to invalid base64 and every 7th+1 to "
     "valid-base64/invalid-JSON, the tolerant decode (try_to_binary + "
-    "from_json — pipeline.decode_kinesis(tolerant=True)) classifies "
+    "from_json — streaming.pipeline.decode_stream(tolerant=True)) classifies "
     "rows into ok / bad_base64 / bad_json without failing the batch, "
     "and the class counts must match the corruption rule exactly.  "
     "This is the dead-letter-queue split the strict reference lacks "
@@ -203,7 +200,7 @@ def pipeline_dlq_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("kinesis_data"))
         .alias("kinesis_data"),
     )
-    dec = P.decode_kinesis(corrupted, tolerant=True)
+    dec = decode_stream(corrupted, tolerant=True)
     classed = dec.select(
         F.when(F.col("_raw").isNull(), "bad_base64")
         .when(F.col("random_id").isNull(), "bad_json")

@@ -791,7 +791,6 @@ def streaming_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from ..operators import pipeline as P
     from ..sources.kinesis import audit_events_from_events
     from ..streaming.pipeline import split_dead_letters
 
@@ -818,7 +817,7 @@ def streaming_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = (
             spark.readStream.schema("kinesis_data string").parquet(f"{d}/src")
         )
-        decoded = P.decode_kinesis(stream, tolerant=True)
+        decoded = decode_stream(stream, tolerant=True)
 
         def _route(batch_df, epoch_id):
             # r13 measured dead end: persisting batch_df before the dual

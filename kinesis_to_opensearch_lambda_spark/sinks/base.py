@@ -108,7 +108,6 @@ class ChunkedTransportSink:
     name: str = "sink"
     max_batch_size: int = 500  # lambda_function.py:115
     max_retries: int = 3  # lambda_function.py:84
-    contain_errors: bool = True  # raise_on_error=False semantics
 
     #: filled by write(): driver-visible counters (R17)
     last_success: int = field(default=0, init=False)
@@ -126,7 +125,6 @@ class ChunkedTransportSink:
         factory = self.transport_factory
         batch_size = self.max_batch_size
         retries = self.max_retries
-        contain = self.contain_errors
 
         def deliver(partition: Iterator[Any]) -> None:
             transport = factory()  # connection per partition
@@ -141,14 +139,12 @@ class ChunkedTransportSink:
                     except Exception as exc:  # noqa: BLE001 - containment
                         attempt += 1
                         if attempt > retries:
-                            if contain:
-                                # logged-not-raised (lambda_function.py:85-86)
-                                print(
-                                    f"[{type(exc).__name__}] chunk dropped "
-                                    f"after {retries} retries: {exc}"
-                                )
-                                break
-                            raise
+                            # logged-not-raised (lambda_function.py:85-86)
+                            print(
+                                f"[{type(exc).__name__}] chunk dropped "
+                                f"after {retries} retries: {exc}"
+                            )
+                            break
 
         payloads.foreachPartition(deliver)
         self.last_success, self.last_total = acc_ok.value, acc_total.value

@@ -9,8 +9,11 @@ Reproduces the action shape and semantics:
   (lambda_function.py:81);
 - bulk chunks with ``max_retries=3`` and error containment
   (lambda_function.py:84-86);
-- null records skipped (the :78-79 None-guard; unlike the reference's
-  reporting quirk they are not counted in the delivered total).
+- the reference's ES None-guard (:78-79) is owned here, and only here:
+  a record with a NULL ``random_id`` (a failed parse, or a valid record
+  without an id) is skipped.  The decode chain keeps every row, so the
+  Splunk sink still sees it; unlike the reference's reporting quirk a
+  skipped record is not counted in this sink's delivered total.
 
 Each delivered line is one bulk action serialized JVM-side as
 ``{"_index": ..., "_id": ..., "_source": {...}}``; a production
@@ -36,21 +39,18 @@ from .base import ChunkedTransportSink
 class OpenSearchBulkSink(ChunkedTransportSink):
     name: str = "opensearch"
     index_prefix: str = "logs-"
-    id_col: str = "random_id"
-    datetime_col: str = "datetime"
-    project: bool = True  # apply the ES allowlist (lambda_function.py:144)
 
     def serialize(self, df: DataFrame) -> DataFrame:
-        doc = project_es(df) if self.project else df
+        doc = project_es(df)  # the ES allowlist (lambda_function.py:144)
         # to_json drops null fields -> dict-key-absence parity with the
         # reference's popped keys (SURVEY.md §7 "absent-vs-null").
         action = F.to_json(
             F.struct(
-                daily_index_col(self.index_prefix, self.datetime_col).alias("_index"),
-                F.col(self.id_col).alias("_id"),
+                daily_index_col(self.index_prefix).alias("_index"),
+                F.col("random_id").alias("_id"),
                 F.struct(*[doc[c] for c in doc.columns]).alias("_source"),
             )
         )
-        return df.filter(F.col(self.id_col).isNotNull()).select(
+        return df.filter(F.col("random_id").isNotNull()).select(
             action.alias("payload")
         )

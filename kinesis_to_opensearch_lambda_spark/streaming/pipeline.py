@@ -30,24 +30,27 @@ from ..operators import pipeline as P
 
 
 def decode_stream(envelope_stream: DataFrame, tolerant: bool = False) -> DataFrame:
-    """R2-R5+R7 over a streaming envelope frame (narrow ops only — the
-    streaming plan stays stateless and shuffle-free).
+    """R2-R5: the engine's one decode chain — ``decode_kinesis`` ->
+    ``with_event_timestamp`` -> ``nullify_empty_ip`` — over a batch or
+    streaming envelope frame (narrow ops only: the plan stays stateless
+    and shuffle-free).
 
-    ``tolerant=True`` keeps undecodable records in the frame as NULL-key
-    rows (use :func:`split_dead_letters` to route them); the default
-    strict mode fails the batch on structurally invalid base64, matching
-    the reference's redelivery semantics.
+    Every row stays in the frame, as in the reference, where each sink
+    applies its own None-guard (lambda_function.py:78-79,117-119): the
+    OpenSearch sink skips a NULL ``random_id`` and the Splunk sink skips
+    a record that is not a parsed JSON object.  The default strict mode
+    fails the batch on structurally invalid base64, matching the
+    reference's redelivery semantics; ``tolerant=True`` turns such
+    records into NULL rows instead (route them with
+    :func:`split_dead_letters`).
     """
     df = P.decode_kinesis(envelope_stream, tolerant=tolerant)
-    df = P.with_event_timestamp(df)
-    df = P.nullify_empty_ip(df)
-    if tolerant:
-        return df  # caller splits dead letters; don't drop them silently
-    return P.drop_null_records(df)
+    return P.nullify_empty_ip(P.with_event_timestamp(df))
 
 
-def split_dead_letters(decoded: DataFrame, key_col: str = "random_id"):
-    """Route a tolerant-mode stream into (good, dead) frames.
+def split_dead_letters(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Route a tolerant-mode stream into (good, dead) frames by
+    ``random_id``.
 
     Dead letters keep only the raw payload + a reason tag — enough to
     replay after a fix.  Both frames derive from one decode (the
@@ -55,10 +58,8 @@ def split_dead_letters(decoded: DataFrame, key_col: str = "random_id"):
     consumer branch inside the same foreachBatch pass when the batch is
     persisted).
     """
-    from pyspark.sql import functions as F
-
-    good = decoded.filter(F.col(key_col).isNotNull())
-    dead = decoded.filter(F.col(key_col).isNull()).select(
+    good = decoded.filter(F.col("random_id").isNotNull())
+    dead = decoded.filter(F.col("random_id").isNull()).select(
         F.col("_raw").alias("raw_payload"),
         F.lit("decode_or_parse_failure").alias("reason"),
     )

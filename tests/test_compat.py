@@ -134,3 +134,22 @@ def test_handler_counter_denominator_quirk(spark, sinks, capsys):
     out = capsys.readouterr().out
     assert "Successfully processed 1/2 items for opensearch" in out
     assert "Successfully processed 2/2 items to Splunk" in out
+
+
+def test_handler_invalid_json_reaches_neither_sink(spark, sinks, capsys):
+    """A payload that is not a parsed JSON object is skipped by both
+    sinks' guards (lambda_function.py:78-79,117-119) instead of being
+    posted to Splunk as broken JSON; ``total`` still counts it — the
+    reference's shared denominator."""
+    es, hec, es_spool, hec_spool = sinks
+    event = kinesis_event([FULL_RECORD])
+    event["Records"].append(
+        {"kinesis": {"data": base64.b64encode(b'{"broken').decode()}}
+    )
+    out = handler(event, spark=spark, es_sink=es, splunk_sink=hec)
+    assert out == {"elasticsearch": 1, "splunk": 1, "total": 2}
+    assert [a["_id"] for a in es_spool.read_back()] == ["abc123"]
+    assert [e["event"]["random_id"] for e in hec_spool.read_back()] == ["abc123"]
+    printed = capsys.readouterr().out
+    assert "Successfully processed 1/2 items for opensearch" in printed
+    assert "Successfully processed 1/2 items to Splunk" in printed

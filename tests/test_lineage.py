@@ -11,6 +11,9 @@ session-death class without touching any call site.
 from __future__ import annotations
 
 import os
+from types import SimpleNamespace
+
+import pytest
 
 from kinesis_to_opensearch_lambda_spark.operators.lineage import (
     CHECKPOINT_DIR_ENV,
@@ -68,6 +71,7 @@ def test_empty_env_var_means_local(spark, monkeypatch):
 from kinesis_to_opensearch_lambda_spark.operators.lineage import (  # noqa: E402
     _CUT_BUDGET_ENV,
     _SER_BUDGET_ENV,
+    _heap_bytes,
     _parse_mem,
     truncate_lineage_scaled,
 )
@@ -165,6 +169,33 @@ def test_parse_mem_accepts_spark_forms_and_degrades():
     assert _parse_mem("2.5g") == int(2.5 * (1 << 30))
     assert _parse_mem("watermelon") is None
     assert _parse_mem("") is None
+
+
+@pytest.mark.parametrize(
+    "master,heap_gb",
+    [
+        ("local", 2),
+        ("local[4]", 2),
+        ("local[*]", 2),
+        ("local[4,2]", 2),
+        ("local-cluster[2,1,1024]", 8),
+        ("spark://host:7077", 8),
+        ("yarn", 8),
+    ],
+)
+def test_heap_bytes_reads_driver_heap_only_in_process(master, heap_gb):
+    # only local / local[...] runs executors inside the driver JVM
+    conf = {
+        "spark.master": master,
+        "spark.driver.memory": "2g",
+        "spark.executor.memory": "8g",
+    }
+    df = SimpleNamespace(
+        sparkSession=SimpleNamespace(
+            sparkContext=SimpleNamespace(getConf=lambda: conf)
+        )
+    )
+    assert _heap_bytes(df) == heap_gb << 30
 
 
 def test_scaled_cut_unknown_source_fails_safe(spark, monkeypatch):

@@ -73,6 +73,22 @@ def test_pipeline_chain_shuffle_free_before_agg(spark):
     assert shuffle_exchange_count(q(spark, "pipeline_daily_index")) == 1
 
 
+def test_sink_serialize_strips_raw_json_once(spark):
+    # The HEC payload strips ``_raw`` (3 regexp_replace per field, 2
+    # fields) once per row; OpenSearch serialization never touches it.
+    from kinesis_to_opensearch_lambda_spark.sinks import OpenSearchBulkSink, SplunkHECSink
+    from kinesis_to_opensearch_lambda_spark.streaming.pipeline import decode_stream
+
+    env = decode_stream(spark.createDataFrame([("e30=",)], "kinesis_data string"))
+
+    def n_regexp(sink) -> int:
+        df = sink(transport_factory=None).serialize(env)
+        return df._jdf.queryExecution().executedPlan().toString().count("regexp_replace(")
+
+    assert n_regexp(SplunkHECSink) <= 6
+    assert n_regexp(OpenSearchBulkSink) == 0
+
+
 def test_minhash_signatures_shuffle_free(spark):
     assert shuffle_exchange_count(q(spark, "dedup_minhash_signature")) == 0
 

@@ -15,6 +15,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from kinesis_to_opensearch_lambda_spark.operators import pipeline as P
+from kinesis_to_opensearch_lambda_spark.streaming.pipeline import decode_stream
 
 ES_FIELDS = set(P.ES_ALLOWED_FIELDS)
 
@@ -66,11 +67,7 @@ def spark_roundtrip(spark, records: list[dict]) -> list[dict]:
         (base64.b64encode(json.dumps(r).encode()).decode(),) for r in records
     ]
     env = spark.createDataFrame(rows, "kinesis_data: string")
-    df = P.decode_kinesis(env)
-    df = P.with_event_timestamp(df)
-    df = P.nullify_empty_ip(df)
-    df = P.drop_null_records(df)
-    df = P.project_es(df)
+    df = P.project_es(decode_stream(env))
     import pyspark.sql.functions as F
 
     # serialize like the sink does: to_json drops nulls = dict-key absence
@@ -125,23 +122,16 @@ def model_splunk_event(record: dict) -> dict:
     )
 )
 def test_splunk_branch_matches_reference_model(spark, records):
-    import base64 as b64
-    import pyspark.sql.functions as F_
-
-    from kinesis_to_opensearch_lambda_spark.operators.pipeline import (
-        splunk_envelope,
-    )
+    from kinesis_to_opensearch_lambda_spark.sinks import SplunkHECSink
 
     rows = [
-        (b64.b64encode(json.dumps(r).encode()).decode(),) for r in records
+        (base64.b64encode(json.dumps(r).encode()).decode(),) for r in records
     ]
     env = spark.createDataFrame(rows, "kinesis_data: string")
-    df = P.decode_kinesis(env)
-    df = P.with_event_timestamp(df)
-    df = P.nullify_empty_ip(df)
-    df = P.drop_null_records(df)
-    out = splunk_envelope(df, "audit").collect()
-    got = [json.loads(r.event) for r in out]
+    sink = SplunkHECSink(transport_factory=None, splunk_index="audit")
+    out = [json.loads(r.payload) for r in sink.serialize(decode_stream(env)).collect()]
+    assert all(o["sourcetype"] == "json" and o["index"] == "audit" for o in out)
+    got = [o["event"] for o in out]
     expected = [model_splunk_event(r) for r in records]
     got_by_id = {g["random_id"]: g for g in got}
     assert len(got) == len(expected)

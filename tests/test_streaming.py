@@ -75,6 +75,35 @@ def test_dual_sink_fanout(spark, tmp_path, stream_records):
             assert "ip" not in d["_source"]
 
 
+def test_fanout_id_less_record_reaches_splunk_not_opensearch(spark, tmp_path):
+    """Each sink owns its reference guard (lambda_function.py:78-79,
+    117-119): a valid record without ``random_id`` is skipped by the
+    OpenSearch branch only, and an invalid-JSON payload by both."""
+    no_id = {k: v for k, v in FULL_RECORD.items() if k != "random_id"}
+    src = str(tmp_path / "envelopes")
+    write_envelope_files(spark, src, [FULL_RECORD, no_id], n_files=1)
+    spark.createDataFrame(
+        [(base64.b64encode(b'{"broken').decode(),)], "kinesis_data: string"
+    ).write.mode("append").parquet(src)
+
+    es_spool, hec_spool = str(tmp_path / "es"), str(tmp_path / "hec")
+    es = OpenSearchBulkSink(transport_factory=lambda: SpoolDirTransport(es_spool))
+    hec = SplunkHECSink(transport_factory=lambda: SpoolDirTransport(hec_spool))
+    stream = decode_stream(read_envelope_stream(spark, src))
+    q = dual_sink_fanout(stream, es, hec, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+
+    assert [d["_id"] for d in SpoolDirTransport(es_spool).read_back()] == ["abc123"]
+    events = sorted(
+        (d["event"] for d in SpoolDirTransport(hec_spool).read_back()),
+        key=lambda e: "random_id" in e,
+    )
+    assert events == [
+        dict(no_id, **{"@timestamp": no_id["datetime"]}),
+        dict(FULL_RECORD, **{"@timestamp": FULL_RECORD["datetime"]}),
+    ]
+
+
 def test_on_batch_reports_sink_counts(spark, tmp_path, stream_records):
     """R17: the on_batch observability callback gets its row count from
     the sinks' write-job accumulators — no extra count() job per

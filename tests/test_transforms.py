@@ -13,6 +13,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from kinesis_to_opensearch_lambda_spark.operators import pipeline as P
+from kinesis_to_opensearch_lambda_spark.sinks import OpenSearchBulkSink, SplunkHECSink
+from kinesis_to_opensearch_lambda_spark.streaming.pipeline import decode_stream
 
 # The reference's full 18-field fixture (test_lambda_function.py:26-45).
 FULL_RECORD = {
@@ -45,10 +47,15 @@ def envelope_df(spark, records: list[dict]):
 
 
 def decoded(spark, records: list[dict]):
-    df = P.decode_kinesis(envelope_df(spark, records))
-    df = P.with_event_timestamp(df)
-    df = P.nullify_empty_ip(df)
-    return P.drop_null_records(df)
+    return decode_stream(envelope_df(spark, records))
+
+
+def sink_payloads(df) -> tuple[list[str], list[str]]:
+    """What each sink would deliver for ``df``: (OpenSearch, Splunk)."""
+    return tuple(
+        [r.payload for r in sink(transport_factory=None).serialize(df).collect()]
+        for sink in (OpenSearchBulkSink, SplunkHECSink)
+    )
 
 
 class TestProjectEs:
@@ -142,8 +149,10 @@ class TestDecodeNormalize:
         env = spark.createDataFrame(
             [(base64.b64encode(b"not json{{").decode(),)], "kinesis_data: string"
         )
-        df = P.drop_null_records(P.decode_kinesis(env))
-        assert df.count() == 0  # R7 None-guard semantics
+        df = decode_stream(env)
+        assert df.count() == 1  # the decode chain keeps every row
+        # R7 None-guard semantics, owned by each sink
+        assert sink_payloads(df) == ([], [])
 
     def test_raw_passthrough_retains_unknown_fields(self, spark):
         rec = dict(FULL_RECORD, totally_new_field="surprise")
@@ -182,22 +191,22 @@ class TestDecodeFailureSemantics:
         # "Z" is structurally invalid base64 (lone symbol); Spark's
         # decoder throws, failing the batch like the reference's
         # b64decode would (padding errors).  Merely-noisy inputs decode
-        # to garbage bytes and are dropped by the JSON null-guard —
+        # to garbage bytes and are skipped by the sinks' guards —
         # slightly more lenient than CPython, same end state.
         df = spark.createDataFrame([("Z",)], "kinesis_data: string")
         import pytest as _pytest
 
         with _pytest.raises(Exception):
-            P.drop_null_records(P.decode_kinesis(df)).count()
+            sink_payloads(decode_stream(df))
 
     def test_tolerant_mode_drops_undecodable(self, spark):
         good = base64.b64encode(json.dumps(FULL_RECORD).encode()).decode()
         df = spark.createDataFrame(
             [("Z",), (good,)], "kinesis_data: string"
         )
-        out = P.drop_null_records(P.decode_kinesis(df, tolerant=True))
-        rows = out.collect()
-        assert len(rows) == 1 and rows[0].random_id == "abc123"
+        es, hec = sink_payloads(decode_stream(df, tolerant=True))
+        assert [json.loads(p)["_id"] for p in es] == ["abc123"]
+        assert [json.loads(p)["event"]["random_id"] for p in hec] == ["abc123"]
 
 
 def test_percentile_filter_single_doc_matches_percent_rank(spark, tmp_path):

@@ -91,10 +91,11 @@ def test_splunk_sink_delivers_through_requests_transport(spark, hec_server):
     lambda_function.py:100-102."""
     from kinesis_to_opensearch_lambda_spark.sinks import SplunkHECSink
 
+    from .test_transforms import FULL_RECORD, decoded
+
     url, stub = hec_server
-    df = spark.createDataFrame(
-        [(f"id-{i}", "2024-01-01T00:00:00.000001") for i in range(7)],
-        "random_id string, datetime string",
+    df = decoded(
+        spark, [dict(FULL_RECORD, random_id=f"id-{i}") for i in range(7)]
     ).coalesce(1)
     sink = SplunkHECSink(
         transport_factory=lambda: RequestsTransport(url, token="tok"),

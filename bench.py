@@ -28,18 +28,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
-# Plan changes made DELIBERATELY, keyed by (baseline file, query): the
-# guard reports their ratio under "regressed_intentional" (numbers still
-# visible, run still succeeds) instead of "regressed", with the stated
-# reason.  Keying by baseline makes each annotation self-expiring: once
-# the next round's bench — which already carries the new cost — becomes
-# the comparison baseline, the query is guarded normally again.  This is
-# a changelog, not an exemption list: an entry is only legitimate for a
-# reviewed trade (e.g. a scale-safety fix with a known small-sf cost).
-# (empty since r8: the r7 bucket-cap entry expired once BENCH_r07 — which
-# already carries its cost — became the comparison baseline)
-INTENTIONAL_PLAN_CHANGES: dict[tuple[str, str], str] = {}
-
 # Second bench tier (r8 verdict task 8): the HEADLINE set has been
 # frozen since r5 for round-over-round comparability, which leaves the
 # newest heavy code paths unbenched.  FRONTIER is the versioned tier —
@@ -326,16 +314,12 @@ def _regressions_vs_previous_round(timings: dict[str, float]) -> dict | None:
         return None
     basename, prev = loaded
     prev_q = prev.get("queries", {})
-    out = _diff_vs_baseline(timings, prev_q, basename)
+    out = _diff_vs_baseline(timings, prev_q)
     out["baseline"] = basename
     return out
 
 
-def _diff_vs_baseline(
-    timings: dict[str, float],
-    prev_q: dict[str, float],
-    baseline_name: str | None = None,
-) -> dict:
+def _diff_vs_baseline(timings: dict[str, float], prev_q: dict[str, float]) -> dict:
     """Pure comparison half of the guard (unit-tested in
     tests/test_bench_guard.py).  Rounds run on different sandbox hosts:
     an ambient speed delta shifts EVERY query by the same factor
@@ -361,23 +345,10 @@ def _diff_vs_baseline(
         for name, r in ratios.items()
         if r > threshold
     }
-    # Deliberate plan changes (see INTENTIONAL_PLAN_CHANGES) are moved to
-    # their own field with the recorded reason — still fully visible in
-    # the round artifact, but not treated as an accidental regression.
-    intentional = {
-        name: {"prev": vals[0], "now": vals[1],
-               "reason": INTENTIONAL_PLAN_CHANGES[(baseline_name, name)]}
-        for name, vals in list(regressed.items())
-        if (baseline_name, name) in INTENTIONAL_PLAN_CHANGES
-    }
-    for name in intentional:
-        del regressed[name]
     out = {
         "host_drift_median_ratio": round(drift, 3),
         "regressed": regressed,
     }
-    if intentional:
-        out["regressed_intentional"] = intentional
     # r6 ADVICE: median normalization absorbs a UNIFORM fleet-wide
     # regression (every query slowed by the same factor looks exactly
     # like a slower host).  A >2x median shift is outside the observed

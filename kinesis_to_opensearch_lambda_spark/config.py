@@ -13,7 +13,7 @@ import base64
 import binascii
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 
@@ -46,10 +46,6 @@ class EngineConfig:
     splunk_disabled: Any = None          # secret.get("splunk_disabled") (:106)
     auth_user: str | None = None         # basic-auth branch (:61-64)
     auth_password: str | None = None
-    max_batch_size: int = 500            # lambda_function.py:115
-    bulk_max_retries: int = 3            # lambda_function.py:84
-    hec_timeout_s: int = 12              # lambda_function.py:96
-    extra: dict[str, Any] = field(default_factory=dict)
 
     @property
     def auth_mode(self) -> str:
@@ -80,19 +76,4 @@ class EngineConfig:
             auth_password=secret.get(
                 "master_user_password", secret.get("password")
             ),
-            extra={
-                k: v
-                for k, v in secret.items()
-                if k
-                not in {
-                    "splunk_hec_url",
-                    "splunk_hec_token",
-                    "splunk_index",
-                    "splunk_disabled",
-                    "master_user_name",
-                    "master_user_password",
-                    "user",
-                    "password",
-                }
-            },
         )

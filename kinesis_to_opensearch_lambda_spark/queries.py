@@ -66,123 +66,3 @@ from .operators import (  # noqa: E402,F401
     timeseries_queries,
     maintenance_queries,
 )
-
-# ---------------------------------------------------------------------------
-# Driver verification window — round 12 rotation.
-#
-# The driver's CORRECTNESS gate checks the FIRST 50 registry entries in
-# iteration order.  Coverage is COMPLETE as of r7 (the union of passing
-# CORRECTNESS rows across rounds spans every entry), so from r8 onward
-# the window follows the STANDING INVARIANT enforced by
-# tests/test_harness_integrity.py::test_driver_window_standing_invariant:
-#   1. every entry ADDED or MATERIALLY REWRITTEN this round is in it
-#      (no silent debt on new/changed code);
-#   2. the remaining slots rotate the registry's OLDEST driver rows
-#      (smallest latest-verified round as of rounds < DRIVER_WINDOW_ROUND),
-#      so every row's age is bounded and session-conf/comparator drift
-#      can never silently accumulate.
-# DRIVER_WINDOW_ROUND pins which CORRECTNESS files existed when this
-# window was authored; the invariant evaluates ages against exactly that
-# set, so the test stays meaningful (and green) after this round's own
-# artifacts land.  NEXT SESSION: bump DRIVER_WINDOW_ROUND, reset
-# CHANGED_THIS_ROUND in tests/test_harness_integrity.py, and rotate.
-# Every entry keeps full local parity coverage via
-# tests/test_oracle_parity.py regardless of window membership.
-# ---------------------------------------------------------------------------
-DRIVER_WINDOW_ROUND = 12
-
-DRIVER_WINDOW: tuple[str, ...] = (
-    # --- added or materially rewritten in r12 (kept in sync with
-    #     CHANGED_THIS_ROUND in tests/test_harness_integrity.py) ---
-    "corpus_distinct_ngrams",  # r11 late registration, never driver-run
-    "dedup_semdedup_prune",  # r12: integer B rule replaces float ceil(log2)
-    # r12: session-scoped persisted capped-SRP index shared across the
-    # kNN family (_capped_srp_table)
-    "ann_knn_graph_mutual",
-    "ann_knn_graph_multitable",
-    "ann_knn_graph_mutual_multitable",
-    "ann_knn_graph_recall",
-    "emb_knn_loo_label_eval",
-    # r12 NEW: streaming MinHash-LSH near-dup suppression
-    "streaming_dedup_minhash",
-    # r12 NEW: Bloom-filter corpus membership (adaptive width, planted
-    # true members, measured FP rate)
-    "sketch_bloom_membership",
-    # r12 NEW: BM25 top-k retrieval (integer tf/df/dl, one fixed-order
-    # float expression, rounded-score ordering)
-    "text_bm25_topk",
-    # r12 NEW: streaming face of the curation rejection funnel
-    "streaming_quality_funnel",
-    # r12 NEW: the shared kNN index persisted as a bucketed table;
-    # zero-exchange candidate self-join plan-asserted
-    "ann_index_bucketed_build",
-    # r12 NEW: RAG-style overlapping word-window chunking with an
-    # order-independent per-doc signature
-    "corpus_chunk_windows",
-    # r12 NEW: streaming similarity search — stream-static multiprobe
-    # SRP join, stateless, rounded-cosine best-match ranking
-    "streaming_ann_probe",
-    # r12 NEW: inverted-index posting summary (df/cf + tf-ordered
-    # posting-list heads) — the build side of the retrieval stack
-    "text_inverted_postings",
-    # r12 NEW: BM25 at chunk granularity — the chunk-windows ×
-    # BM25 composition (passage retrieval)
-    "text_bm25_chunk_topk",
-    # --- oldest-row rotation as of rounds < 12: the single r6 row
-    #     (window_time_weighted_avg) + the 42 r7 rows minus the
-    #     alphabetically-last nine (window_topk_per_group,
-    #     window_sessionization, tpch_q6_forecast_revenue,
-    #     tpch_q3_shipping_priority, tpch_q1_pricing_summary,
-    #     tpch_q18_large_volume, text_mojibake_stats,
-    #     text_cooccurrence_pmi, text_bpe_token_estimate — displaced
-    #     by the nine new-entry seats; ties allowed: rotation max ==
-    #     left-out min == 7) ---
-    "window_time_weighted_avg",
-    "agg_boolean_conditional",
-    "agg_corr_exact_moments",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_mutual_information",
-    "agg_salted_skew",
-    "ann_topk_ivf_pq",
-    "anomaly_cusum_drift_blocked",
-    "corpus_ngram_lm_counts",
-    "curation_ablation_curve",
-    "curation_dataset_card",
-    "curation_rejection_funnel",
-    "dedup_lsh_planner",
-    "dedup_lsh_recall",
-    "dedup_prefix_cluster",
-    "dedup_simhash",
-    "diag_column_profile",
-    "diag_observe_metrics",
-    "gap_fill_daily",
-    "incremental_agg_merge",
-    "join_asof_last_order",
-    "join_range_interval",
-    "json_extraction",
-    "mm_av_sync_join",
-    "mm_scene_change",
-    "quality_percentile_filter",
-    "sample_bottom_k_per_key",
-    "sample_poisson_bootstrap",
-    "sample_weighted_bernoulli",
-    "scalar_null_semantics",
-    "setop_except_all",
-    "snapshot_diff",
-    "split_leakage_safe_groups",
-)
-
-
-def _reorder_registry() -> None:
-    missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
-    if missing:
-        raise KeyError(f"DRIVER_WINDOW names not registered: {missing}")
-    front = set(DRIVER_WINDOW)
-    ordered = [*DRIVER_WINDOW, *[n for n in REGISTRY if n not in front]]
-    snapshot = dict(REGISTRY)
-    REGISTRY.clear()
-    REGISTRY.update({n: snapshot[n] for n in ordered})
-
-
-_reorder_registry()

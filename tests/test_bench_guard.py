@@ -57,53 +57,6 @@ def test_faster_host_uniform_speedup_not_flagged():
     assert out["regressed"] == {}
 
 
-def test_intentional_plan_change_moves_to_annotated_field():
-    """A query listed in INTENTIONAL_PLAN_CHANGES for THIS baseline is
-    reported under regressed_intentional (numbers + reason preserved),
-    not regressed — so a reviewed scale-safety trade doesn't fail the
-    bench run, while staying fully visible in the round artifact."""
-    prev = {f"q{i}": 1.0 for i in range(9)}
-    now = {n: 1.0 for n in prev}
-    now["q0"] = 2.5
-    bench.INTENTIONAL_PLAN_CHANGES[("BENCH_TEST.json", "q0")] = "test reason"
-    try:
-        out = bench._diff_vs_baseline(now, prev, "BENCH_TEST.json")
-    finally:
-        del bench.INTENTIONAL_PLAN_CHANGES[("BENCH_TEST.json", "q0")]
-    assert out["regressed"] == {}
-    assert out["regressed_intentional"]["q0"] == {
-        "prev": 1.0, "now": 2.5, "reason": "test reason"
-    }
-
-
-def test_intentional_annotation_expires_with_its_baseline():
-    """The same annotation keyed to an OLDER baseline has no effect when
-    the comparison baseline moves on — the query is guarded normally."""
-    prev = {f"q{i}": 1.0 for i in range(9)}
-    now = {n: 1.0 for n in prev}
-    now["q0"] = 2.5
-    bench.INTENTIONAL_PLAN_CHANGES[("BENCH_OLD.json", "q0")] = "stale"
-    try:
-        out = bench._diff_vs_baseline(now, prev, "BENCH_NEW.json")
-    finally:
-        del bench.INTENTIONAL_PLAN_CHANGES[("BENCH_OLD.json", "q0")]
-    assert set(out["regressed"]) == {"q0"}
-    assert "regressed_intentional" not in out
-
-
-def test_intentional_annotations_reference_real_queries():
-    """Lint the changelog itself: every annotation must point at a real
-    registry query and carry a substantive reason — a typo'd name would
-    silently fail to suppress (and then fail the bench run), and an
-    empty reason defeats the changelog's purpose."""
-    from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
-
-    for (baseline, q), reason in bench.INTENTIONAL_PLAN_CHANGES.items():
-        assert q in REGISTRY, f"annotation for unknown query {q!r}"
-        assert baseline.startswith("BENCH_r"), baseline
-        assert len(reason) > 40, f"reason for {q!r} too thin to audit"
-
-
 def test_implausible_uniform_drift_carries_warning():
     """r6 ADVICE: a uniform >2x shift is indistinguishable from host
     drift by the normalizer, so it must at least surface a warning in

@@ -57,7 +57,6 @@ def test_reference_shaped_secret_keys_enable_basic_auth():
     assert cfg.auth_user == "admin"
     assert cfg.auth_password == "s3cret"
     assert cfg.auth_mode == "basic"
-    assert "master_user_name" not in cfg.extra  # consumed, not passthrough
 
 
 def test_generic_user_password_fallback_still_works():

@@ -1,5 +1,8 @@
 """Guards on the verification harness itself: no trivially-empty
-oracle matches, and the comparator genuinely detects mismatches."""
+oracle matches, and the comparator genuinely detects mismatches.
+
+The non-empty guard runs on the DuckDB side only, so each query is
+executed in Spark once per suite (by ``test_oracle_parity``)."""
 
 from __future__ import annotations
 
@@ -9,18 +12,32 @@ import pytest
 from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
 
 from .conftest import SF_DIR
-from .oracle_compare import _rows
+from .oracle_compare import _rows, duck_con
+
+
+@pytest.fixture(scope="module")
+def duck():
+    con = duck_con(SF_DIR)
+    yield con
+    con.close()
 
 
 @pytest.mark.parametrize(
     "name", sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 )
-def test_oracle_checked_queries_non_empty(spark, name):
+def test_oracle_checked_queries_non_empty(duck, name):
     """An empty result matches an empty oracle trivially (the q7 nation
     mismatch hid exactly this way) — every oracle-checked query must
-    produce rows at the driver's gate scale."""
-    n = REGISTRY[name].spark(spark, SF_DIR).count()
-    assert n > 0, f"{name} returns no rows at {SF_DIR} — trivial oracle match"
+    produce rows at the driver's gate scale.
+
+    Asserted on the oracle: ``test_oracle_parity`` already requires the
+    Spark result to have the oracle's row count, so a non-empty oracle
+    plus parity proves the Spark result is non-empty too, without
+    running the query in Spark a second time."""
+    (n,) = duck.execute(
+        f"SELECT count(*) FROM ({REGISTRY[name].oracle}) AS q"
+    ).fetchone()
+    assert n > 0, f"{name} oracle returns no rows at {SF_DIR} — trivial match"
 
 
 def test_comparator_detects_value_mismatch():
@@ -54,140 +71,3 @@ def test_comparator_detects_negative_zero():
     a = pd.DataFrame({"v": [0.0]})
     b = pd.DataFrame({"v": [-0.0]})
     assert _rows(a) != _rows(b)
-
-
-# Entries ADDED or MATERIALLY REWRITTEN in the CURRENT round (the round
-# the window in queries.py was authored for, = DRIVER_WINDOW_ROUND).
-# The standing invariant forces every one of them into the driver
-# window, so changed code never carries a stale driver row.  Update
-# this set (and re-seat DRIVER_WINDOW) as changes land during the
-# round; reset it at the next round's rotation.
-CHANGED_THIS_ROUND: frozenset[str] = frozenset(
-    {
-        # r11 late registration (r11 verdict task 1): diversity metrics
-        # (distinct-1/2/3 ratios) over documents.text — registered in
-        # the r11 end-of-round snapshot with no driver row; seated here
-        # so the r12 driver run closes its evidence debt.
-        "corpus_distinct_ngrams",
-        # r12 (r11 advisor, low): SemDeDup's SRP mask width B is now
-        # derived by the same pure-integer comparison on BOTH sides
-        # (smallest B in [0, 8] with n <= 1280 * 2^B) instead of a
-        # float ceil(log2(n/1280)) whose 1-ulp engine differences
-        # could straddle the ceil boundary at n = 1280 * 2^k.
-        "dedup_semdedup_prune",
-        # r12 (r11 verdict task 6): the capped SRP bucket index is now
-        # a session-scoped persisted frame (_capped_srp_table) shared
-        # by every kNN-family query instead of being rebuilt per query
-        # and per self-join side.
-        "ann_knn_graph_mutual",
-        "ann_knn_graph_multitable",
-        "ann_knn_graph_mutual_multitable",
-        "ann_knn_graph_recall",
-        "emb_knn_loo_label_eval",
-        # NEW in r12 (r11 verdict task 7): streaming MinHash-LSH
-        # near-dup suppression — in-stream signatures/bands (same
-        # expressions as dedup_minhash_lsh_pairs) + a first-seen
-        # marker per band value in the state store.
-        "streaming_dedup_minhash",
-        # NEW in r12: Bloom-filter corpus membership — adaptive
-        # power-of-two width (pure-integer rule both engines), planted
-        # true members, no-false-negative cell asserted.
-        "sketch_bloom_membership",
-        # NEW in r12: BM25 top-k retrieval — integer tf/df/dl inputs,
-        # one fixed-order float expression, rounded-score ordering.
-        "text_bm25_topk",
-        # NEW in r12: streaming face of curation_rejection_funnel —
-        # identical cascade expression, (batch, reason) streaming agg.
-        "streaming_quality_funnel",
-        # NEW in r12: the shared capped-SRP kNN index written as a
-        # bucketed table on both join keys; candidate self-join reads
-        # co-located buckets exchange-free (plan-asserted).
-        "ann_index_bucketed_build",
-        # NEW in r12: RAG-style overlapping chunk windows — integer
-        # boundary arithmetic + order-independent 40-bit hash sums.
-        "corpus_chunk_windows",
-        # NEW in r12: streaming similarity search — stateless
-        # stream-static multiprobe SRP join answering probe vectors
-        # in-stream; best match ranked on the rounded cosine.
-        "streaming_ann_probe",
-        # NEW in r12: inverted-index posting summary — df/cf +
-        # tf-ordered posting heads, vocabulary-bounded, all-integer.
-        "text_inverted_postings",
-        # NEW in r12: BM25 at chunk granularity — passage retrieval
-        # composing the chunk-window arithmetic with the BM25 formula.
-        "text_bm25_chunk_topk",
-    }
-)
-
-
-def _latest_driver_round(before_round: int) -> dict[str, int]:
-    """name -> newest round with a passing driver CORRECTNESS row,
-    considering only rounds strictly before ``before_round``.
-
-    The cutoff makes the standing invariant calendar-proof: the window
-    is always judged against exactly the CORRECTNESS files that existed
-    when it was authored, so the test cannot turn red merely because
-    the driver's own end-of-round artifact landed (the r8 failure
-    mode the r8 verdict flagged)."""
-    import json
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    latest: dict[str, int] = {}
-    files = sorted(root.glob("CORRECTNESS_r*.json"))
-    assert files, "prior CORRECTNESS files missing"
-    for f in files:
-        rnd = int(f.stem.split("_r")[1])
-        if rnd >= before_round:
-            continue
-        for name, row in json.loads(f.read_text()).items():
-            if isinstance(row, dict) and row.get("rows_match") and not row.get("err"):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def test_driver_window_standing_invariant():
-    """Driver coverage completed in r7; from r8 on the window obeys the
-    standing rotation invariant (r7 verdict task 3, hardened per the
-    r8 verdict so it can never be red-by-calendar):
-
-    1. the window IS the first 50 registry entries (driver contract);
-    2. every entry added or materially rewritten this round is in it
-       (no silent debt on changed code);
-    3. nothing is verification-orphaned: every registry entry either
-       holds a prior driver row or sits in the window (orphan check
-       uses ALL correctness files — more data only helps there);
-    4. the non-changed slots rotate the OLDEST rows as of the window's
-       authoring round: no rotation entry may be younger (by latest
-       driver round < DRIVER_WINDOW_ROUND) than some entry left out of
-       the window entirely — ties allowed, so the bound is
-       max(rotation rounds) <= min(left-out rounds)."""
-    from kinesis_to_opensearch_lambda_spark.queries import (
-        DRIVER_WINDOW,
-        DRIVER_WINDOW_ROUND,
-    )
-
-    first50 = list(REGISTRY)[:50]
-    assert len(DRIVER_WINDOW) == 50
-    assert first50 == list(DRIVER_WINDOW)
-
-    window = set(DRIVER_WINDOW)
-    assert CHANGED_THIS_ROUND <= window, sorted(CHANGED_THIS_ROUND - window)
-
-    all_rounds = _latest_driver_round(before_round=10**9)
-    gated = {"streaming_stateful_highwater"}  # capability-probed entry
-    orphans = set(REGISTRY) - set(all_rounds) - window - gated
-    assert not orphans, (
-        f"entries with no driver row and no window slot: {sorted(orphans)}"
-    )
-
-    latest = _latest_driver_round(before_round=DRIVER_WINDOW_ROUND)
-    rotation = window - CHANGED_THIS_ROUND
-    rotation_rounds = [latest[n] for n in rotation if n in latest]
-    left_out = [latest[n] for n in set(REGISTRY) - window - gated if n in latest]
-    assert rotation_rounds and left_out
-    assert max(rotation_rounds) <= min(left_out), (
-        "rotation must take the oldest driver rows first: "
-        f"rotation max round {max(rotation_rounds)} > "
-        f"left-out min round {min(left_out)}"
-    )

@@ -5,7 +5,7 @@ committed markdown artifact, so plan drift between rounds shows up in
 
 Usage: python tools/explain_audit.py [SF_DIR] [OUT_MD]
 
-Defaults: /root/testdata/sf0.1 -> sweeps/EXPLAIN_HEADLINE_r07.md.
+Defaults: the sf0.1 test data -> sweeps/EXPLAIN_HEADLINE.md.
 Plans are built (not executed) except where a query's own builder runs
 a planner probe; runtime is seconds.
 """
@@ -24,7 +24,7 @@ def main() -> None:
     out_path = (
         sys.argv[2]
         if len(sys.argv) > 2
-        else os.path.join(REPO, "sweeps", "EXPLAIN_HEADLINE_r07.md")
+        else os.path.join(REPO, "sweeps", "EXPLAIN_HEADLINE.md")
     )
 
     from kinesis_to_opensearch_lambda_spark.queries import REGISTRY

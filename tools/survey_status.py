@@ -1,21 +1,19 @@
 """Regenerate SURVEY.md §12 (consolidated query status table) from the
-registry + CORRECTNESS files + the current DRIVER_WINDOW.
+registry + CORRECTNESS files.
 
 The table's `driver` column was hand-maintained through r8 and went
 stale at every end-of-round snapshot (r6/r7/r8 verdicts all flagged
 it).  This tool recomputes it deterministically:
 
-    driver = rEarliest [→ rLatest] [→ r<WINDOW> (window)]
+    driver = rEarliest [→ rLatest]
 
-where earliest/latest are passing driver CORRECTNESS rounds and the
-window suffix marks membership in the CURRENT round's window.
+where earliest/latest are passing driver CORRECTNESS rounds.
 family/oracle/headline are recomputed from the registry; the only
 hand-curated cell preserved from the existing table is `test ref`.
 Parsed family/oracle are diffed against the recompute and a warning
 is printed on mismatch.  New registry entries get fresh rows.
 
-Usage:  python tools/survey_status.py          # rewrite SURVEY.md in place
-        python tools/survey_status.py --check  # exit 1 if table is stale
+Usage:  python tools/survey_status.py   # rewrite SURVEY.md in place
 """
 
 from __future__ import annotations
@@ -28,20 +26,11 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 
 
-def _correctness_rounds(before_round: int) -> dict[str, tuple[int, int]]:
-    """name -> (earliest, latest) passing driver round, considering only
-    rounds strictly before ``before_round``.
-
-    The cutoff mirrors tests/test_harness_integrity.py: once the
-    CURRENT round's own CORRECTNESS file lands, every window entry's
-    latest round becomes the current round — without the cutoff the
-    regenerated table would render 'rX → r9 → r9 (window)' duplication
-    (the same calendar effect the invariant was hardened against)."""
+def _correctness_rounds() -> dict[str, tuple[int, int]]:
+    """name -> (earliest, latest) passing driver round."""
     spans: dict[str, tuple[int, int]] = {}
     for f in sorted(ROOT.glob("CORRECTNESS_r*.json")):
         rnd = int(f.stem.split("_r")[1])
-        if rnd >= before_round:
-            continue
         for name, row in json.loads(f.read_text()).items():
             if isinstance(row, dict) and row.get("rows_match") and not row.get("err"):
                 lo, hi = spans.get(name, (rnd, rnd))
@@ -49,22 +38,15 @@ def _correctness_rounds(before_round: int) -> dict[str, tuple[int, int]]:
     return spans
 
 
-def _driver_cell(name: str, spans, window: set[str], window_round: int) -> str:
-    parts: list[str] = []
-    if name in spans:
-        lo, hi = spans[name]
-        parts.append(f"r{lo}")
-        if hi > lo:
-            parts.append(f"r{hi}")
-    if name in window:
-        parts.append(f"r{window_round} (window)")
-    if not parts:
+def _driver_cell(name: str, spans) -> str:
+    if name not in spans:
         return "—"
-    return " → ".join(parts)
+    lo, hi = spans[name]
+    return f"r{lo} → r{hi}" if hi > lo else f"r{lo}"
 
 
-def build_table() -> tuple[str, str]:
-    """Return (header_line, table_text) for the fresh §12 block.
+def build_table() -> str:
+    """Return the fresh §12 block (header + table).
 
     family/oracle are RECOMPUTED from the registry (the table's source
     of truth); the only hand-curated cell carried over from the
@@ -74,14 +56,9 @@ def build_table() -> tuple[str, str]:
     instead of silently overwritten."""
     if str(ROOT) not in sys.path:
         sys.path.insert(0, str(ROOT))
-    from kinesis_to_opensearch_lambda_spark.queries import (
-        DRIVER_WINDOW,
-        DRIVER_WINDOW_ROUND,
-        REGISTRY,
-    )
+    from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
 
-    spans = _correctness_rounds(before_round=DRIVER_WINDOW_ROUND)
-    window = set(DRIVER_WINDOW)
+    spans = _correctness_rounds()
 
     survey = (ROOT / "SURVEY.md").read_text()
     # Parse existing table rows: testref is preserved; family/oracle
@@ -118,49 +95,41 @@ def build_table() -> tuple[str, str]:
                     f"registry {oracle!r} (recomputed value wins)",
                     file=sys.stderr,
                 )
-        driver = _driver_cell(name, spans, window, DRIVER_WINDOW_ROUND)
+        driver = _driver_cell(name, spans)
         rows.append(f"| {name} | {family} | {oracle} | {driver} | {headline} | {testref} |")
 
     header = (
-        f"## 12. Consolidated query status (round {DRIVER_WINDOW_ROUND}, "
-        "generated) — single audit table\n\n"
+        "## 12. Consolidated query status (generated) — single audit "
+        "table\n\n"
         "One row per registered query — REGENERATED by "
         "`python tools/survey_status.py` (do not hand-edit; the r6/r7/r8 "
         "staleness findings are why).  family = registering module under "
         "`operators/`; oracle = `sql` (full DuckDB value-hash parity) or "
         "`rows-only` (non-SQL-expressible, driver records the weaker "
         "check); driver = earliest → latest round with a PASSING driver "
-        f"CORRECTNESS row, plus `r{DRIVER_WINDOW_ROUND} (window)` if "
-        "scheduled in the current round's window; test ref = first "
+        "CORRECTNESS row; test ref = first "
         "query-specific test beyond the registry-wide parity/plan/"
         "no-row-Python sweeps that every entry gets "
         "(`tests/test_oracle_parity.py` all entries at sf0.01 "
         "comparator-strict, `tests/test_plans.py` no-row-Python over the "
         "whole registry, `tests/test_harness_integrity.py` "
-        "non-empty-result guard).  `streaming_stateful_highwater` is "
+        "non-empty-oracle guard).  `streaming_stateful_highwater` is "
         "capability-probed (needs protobuf).\n\n"
         "| query | family | oracle | driver | headline | test ref |\n"
         "|---|---|---|---|---|---|\n"
     )
-    return header, header + "\n".join(rows) + "\n\n"
+    return header + "\n".join(rows) + "\n\n"
 
 
 def main() -> int:
     survey_path = ROOT / "SURVEY.md"
     survey = survey_path.read_text()
-    _, block = build_table()
+    block = build_table()
     pattern = re.compile(r"^## 12\..*?(?=^## |\Z)", re.S | re.M)
     if not pattern.search(survey):
         print("SURVEY.md §12 block not found", file=sys.stderr)
         return 2
-    fresh = pattern.sub(lambda _: block, survey, count=1)
-    if "--check" in sys.argv:
-        if fresh != survey:
-            print("SURVEY.md §12 is stale — run python tools/survey_status.py")
-            return 1
-        print("SURVEY.md §12 is current")
-        return 0
-    survey_path.write_text(fresh)
+    survey_path.write_text(pattern.sub(lambda _: block, survey, count=1))
     print("SURVEY.md §12 regenerated")
     return 0
 

@@ -14,12 +14,14 @@ batch-shaped, Lambda-style invocation parity.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import SparkSession
 
 from .config import EngineConfig
 from .sinks import OpenSearchBulkSink, SplunkHECSink
+from .sinks.base import deliver
 from .sinks.splunk import is_disabled
 from .streaming.pipeline import decode_stream
 
@@ -66,19 +68,18 @@ def handler(
         spark = get_session(app_name="lambda-compat")
     config = config or EngineConfig()
 
+    if splunk_sink is not None and is_disabled(config.splunk_disabled):
+        splunk_sink = replace(splunk_sink, disabled=True)  # the secret's flag
+    sinks = [s for s in (es_sink, splunk_sink) if s is not None]
     df = decode_stream(records_to_envelope_df(spark, event))
-    df.persist()  # one decode, two sinks (lambda_function.py:141,144,148)
-    try:
-        total = df.count()  # the reference's shared denominator
-        result = {"elasticsearch": 0, "splunk": 0, "total": total}
-        if es_sink is not None:
-            ok, _ = es_sink.write(df)
-            result["elasticsearch"] = ok
-            print(f"Successfully processed {ok}/{total} items for opensearch")
-        if splunk_sink is not None and not is_disabled(config.splunk_disabled):
-            ok, _ = splunk_sink.write(df)
-            result["splunk"] = ok
-            print(f"Successfully processed {ok}/{total} items to Splunk")
-        return result
-    finally:
-        df.unpersist()
+    # one pass, one job (lambda_function.py:141,144,148); its row count
+    # is the reference's shared denominator
+    total = deliver(df, sinks)
+    result = {"elasticsearch": 0, "splunk": 0, "total": total}
+    if es_sink is not None:
+        result["elasticsearch"] = ok = es_sink.last_success
+        print(f"Successfully processed {ok}/{total} items for opensearch")
+    if splunk_sink is not None and splunk_sink.enabled:
+        result["splunk"] = ok = splunk_sink.last_success
+        print(f"Successfully processed {ok}/{total} items to Splunk")
+    return result

@@ -13,22 +13,32 @@ distributed engine:
   not fail a 1000-executor stage;
 - **connection per partition**: transports are constructed on the
   executor inside ``foreachPartition`` — nothing network-ish is
-  serialized from the driver.
+  serialized from the driver;
+- **one pass**: the reference loops over a batch once and hands each
+  record to both sinks (lambda_function.py:140-148).  Here each sink's
+  payload is a nullable column over one projection of the batch, and
+  one ``foreachPartition`` (:func:`deliver`) feeds every sink's non-NULL
+  payloads to that sink's own transport — one Spark job and no persist
+  per batch, however many sinks.
 
 Counters (R17) are Spark accumulators, the distributed analogue of the
-reference's ``success/total`` prints (lambda_function.py:87-88,137-138).
+reference's ``success/total`` prints (lambda_function.py:87-88,137-138);
+one more counts every row the pass iterated.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import sys
 import uuid
-from collections.abc import Callable, Iterable, Iterator
+import zipimport
+from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass, field
 from typing import Any, Protocol
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 class TransportError(RuntimeError):
@@ -83,25 +93,147 @@ class SpoolDirTransport:
         return out
 
 
-def _chunks(it: Iterable[str], size: int) -> Iterator[list[str]]:
-    buf: list[str] = []
-    for x in it:
-        buf.append(x)
-        if len(buf) >= size:
-            yield buf
-            buf = []
-    if buf:
-        yield buf  # flush remainder (lambda_function.py:133-135)
+class _Outbox:
+    """One sink's side of one partition: payloads are buffered into
+    fixed-size chunks, and each chunk is sent with bounded retries and
+    contained failure."""
+
+    def __init__(self, transport: Transport, size: int, retries: int) -> None:
+        self.transport, self.size, self.retries = transport, size, retries
+        self.buf: list[str] = []
+        self.ok = self.total = 0
+
+    def add(self, payload: str) -> None:
+        self.buf.append(payload)
+        if len(self.buf) >= self.size:
+            self.flush()
+
+    def flush(self) -> None:
+        """Send the buffered chunk; also flushes the remainder
+        (lambda_function.py:133-135)."""
+        if not self.buf:
+            return
+        chunk, self.buf = self.buf, []
+        self.total += len(chunk)
+        for _ in range(self.retries + 1):
+            try:
+                self.transport.send(chunk)  # a retry re-sends the same list
+                self.ok += len(chunk)
+                return
+            except Exception as exc:  # noqa: BLE001 - containment
+                error = exc
+        # logged-not-raised (lambda_function.py:85-86)
+        print(
+            f"[{type(error).__name__}] chunk dropped "
+            f"after {self.retries} retries: {error}"
+        )
+
+
+def _skip_unchanged_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive changed; idempotent.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task. On CPython < 3.13 each cached ``zipimporter`` then eagerly
+    re-reads its archive's central directory (``pyspark.zip``: 1,328
+    entries, about 16 importers per worker), which costs far more Python
+    worker CPU than iterating a small partition. 3.13 made the re-read
+    lazy, so nothing is installed there. An archive whose
+    ``(st_mtime_ns, st_size, st_ino)`` changed since its directory was
+    read is re-read as before, so import semantics do not change.
+    Called from inside ``foreachPartition``: only worker processes install
+    it.
+    """
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 13) or hasattr(cls.invalidate_caches, "reread"):
+        return
+    reread = cls.invalidate_caches
+    # archive path -> (stat stamp taken before the read, directory read)
+    seen: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+        except OSError:  # gone: the stock method drops the cached directory
+            return reread(self)
+        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        cached = zipimport._zip_directory_cache.get(self.archive)
+        seen_stamp, seen_files = seen.get(self.archive, (None, None))
+        if stamp == seen_stamp and cached is seen_files:
+            self._files = cached
+            return
+        reread(self)
+        seen[self.archive] = (stamp, self._files)
+
+    invalidate_caches.reread = reread
+    cls.invalidate_caches = invalidate_caches
+
+
+def payload_frame(df: DataFrame, sinks: Sequence[ChunkedTransportSink]) -> DataFrame:
+    """One projection of ``df`` with one nullable payload column per sink
+    (``_p0``, ``_p1``, ...): NULL where that sink skips the row."""
+    frame, payloads = df, []
+    for sink in sinks:
+        frame, payload = sink.payload(frame)
+        payloads.append(payload.alias(f"_p{len(payloads)}"))
+    return frame.select(*payloads)
+
+
+def deliver(df: DataFrame, sinks: Sequence[ChunkedTransportSink]) -> int:
+    """Deliver ``df`` to every enabled sink in one pass: one
+    ``foreachPartition`` over :func:`payload_frame` chunks, retries and
+    counts each sink's non-NULL payloads through that sink's own
+    transport, like the reference's single loop over the batch
+    (lambda_function.py:140-148). Sets each sink's ``last_success`` /
+    ``last_total``; returns the number of rows the pass iterated.
+    """
+    active = []
+    for sink in sinks:
+        if sink.enabled:
+            active.append(sink)
+        else:
+            sink.last_success = sink.last_total = 0
+            print(f"{sink.name} delivery is disabled")
+    sc = df.sparkSession.sparkContext
+    acc_rows = sc.accumulator(0)
+    accs = [(sc.accumulator(0), sc.accumulator(0)) for _ in active]
+    # read when the pass runs, not when the sink was built, so that a
+    # replaced transport factory takes effect on the next pass
+    specs = [(s.transport_factory, s.max_batch_size, s.max_retries) for s in active]
+
+    def deliver_partition(partition: Iterator[Any]) -> None:
+        _skip_unchanged_zip_rereads()
+        # connection per partition
+        boxes = [_Outbox(factory(), size, retries) for factory, size, retries in specs]
+        n = 0
+        for row in partition:
+            n += 1
+            for box, payload in zip(boxes, row):
+                if payload is not None:
+                    box.add(payload)
+        for box, (acc_ok, acc_total) in zip(boxes, accs):
+            box.flush()
+            acc_ok.add(box.ok)
+            acc_total.add(box.total)
+        acc_rows.add(n)
+
+    payload_frame(df, active).foreachPartition(deliver_partition)
+    for sink, (acc_ok, acc_total) in zip(active, accs):
+        sink.last_success, sink.last_total = acc_ok.value, acc_total.value
+        print(
+            f"Successfully sent {sink.last_success}/{sink.last_total} "
+            f"records to {sink.name}"
+        )
+    return acc_rows.value
 
 
 @dataclass
 class ChunkedTransportSink:
-    """Generic HTTP-shaped sink: serialize rows JVM-side, then per
-    partition deliver fixed-size chunks through a transport with
-    bounded retries and error containment.
+    """Generic HTTP-shaped sink: a payload column built JVM-side, then
+    per partition fixed-size chunks through a transport with bounded
+    retries and error containment (:func:`deliver`).
 
-    Subclasses provide :meth:`serialize` (DataFrame -> one string
-    column named ``payload``).
+    Subclasses provide :meth:`payload`.
     """
 
     transport_factory: Callable[[], Transport]
@@ -109,47 +241,32 @@ class ChunkedTransportSink:
     max_batch_size: int = 500  # lambda_function.py:115
     max_retries: int = 3  # lambda_function.py:84
 
-    #: filled by write(): driver-visible counters (R17)
+    #: filled by deliver(): driver-visible counters (R17)
     last_success: int = field(default=0, init=False)
     last_total: int = field(default=0, init=False)
 
-    def serialize(self, df: DataFrame) -> DataFrame:  # pragma: no cover
+    @property
+    def enabled(self) -> bool:
+        """A disabled sink contributes no payload column to the pass."""
+        return True
+
+    def payload(self, df: DataFrame) -> tuple[DataFrame, Column]:  # pragma: no cover
+        """``(frame, column)``: ``frame`` is ``df`` plus any columns the
+        payload needs, and ``column`` over it is the row's serialized
+        record, NULL where this sink skips the row."""
         raise NotImplementedError
+
+    def serialize(self, df: DataFrame) -> DataFrame:
+        """The delivered records of ``df``: one string column ``payload``."""
+        frame, payload = self.payload(df)
+        # The one-element ``explode`` is a barrier: a filter on a plain
+        # projection would be pushed below it and evaluate the payload
+        # expression a second time.
+        return frame.select(F.explode(F.array(payload)).alias("payload")).filter(
+            F.col("payload").isNotNull()
+        )
 
     def write(self, df: DataFrame) -> tuple[int, int]:
         """Deliver ``df``; returns (success_count, total_count)."""
-        payloads = self.serialize(df)
-        sc = payloads.sparkSession.sparkContext
-        acc_ok = sc.accumulator(0)
-        acc_total = sc.accumulator(0)
-        factory = self.transport_factory
-        batch_size = self.max_batch_size
-        retries = self.max_retries
-
-        def deliver(partition: Iterator[Any]) -> None:
-            transport = factory()  # connection per partition
-            for chunk in _chunks((row["payload"] for row in partition), batch_size):
-                acc_total.add(len(chunk))
-                attempt = 0
-                while True:
-                    try:
-                        transport.send(chunk)
-                        acc_ok.add(len(chunk))
-                        break
-                    except Exception as exc:  # noqa: BLE001 - containment
-                        attempt += 1
-                        if attempt > retries:
-                            # logged-not-raised (lambda_function.py:85-86)
-                            print(
-                                f"[{type(exc).__name__}] chunk dropped "
-                                f"after {retries} retries: {exc}"
-                            )
-                            break
-
-        payloads.foreachPartition(deliver)
-        self.last_success, self.last_total = acc_ok.value, acc_total.value
-        print(
-            f"Successfully sent {self.last_success}/{self.last_total} "
-            f"records to {self.name}"
-        )
+        deliver(df, [self])
         return self.last_success, self.last_total

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.pipeline import daily_index_col, project_es
@@ -40,7 +40,7 @@ class OpenSearchBulkSink(ChunkedTransportSink):
     name: str = "opensearch"
     index_prefix: str = "logs-"
 
-    def serialize(self, df: DataFrame) -> DataFrame:
+    def payload(self, df: DataFrame) -> tuple[DataFrame, Column]:
         doc = project_es(df)  # the ES allowlist (lambda_function.py:144)
         # to_json drops null fields -> dict-key-absence parity with the
         # reference's popped keys (SURVEY.md §7 "absent-vs-null").
@@ -51,6 +51,4 @@ class OpenSearchBulkSink(ChunkedTransportSink):
                 F.struct(*[doc[c] for c in doc.columns]).alias("_source"),
             )
         )
-        return df.filter(F.col("random_id").isNotNull()).select(
-            action.alias("payload")
-        )
+        return df, F.when(F.col("random_id").isNotNull(), action)

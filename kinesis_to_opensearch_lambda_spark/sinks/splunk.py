@@ -8,7 +8,7 @@ Semantics preserved:
   event is the decoded ``_raw`` JSON text with the two normalize steps
   re-applied textually, so unknown fields survive byte for byte;
 - HEC envelope ``{"event": ..., "sourcetype": "json", "index": ...}``
-  (:121-125), built by :meth:`SplunkHECSink.serialize` — the one payload
+  (:121-125), built by :meth:`SplunkHECSink.payload` — the one payload
   expression;
 - the reference's Splunk None-guard (:117-119) is owned here: a record
   that is not a parsed JSON object is skipped, while a parsed record
@@ -18,7 +18,8 @@ Semantics preserved:
 - per-POST failure swallowed → that chunk counts 0, stream continues
   (:100-102) — expressed as ``max_retries=0`` + containment;
 - ``disabled`` gate: bool True or case-insensitive string "true"
-  skips the sink entirely (:106-108).
+  skips the sink entirely (:106-108): it contributes no payload column
+  to the delivery pass.
 """
 
 from __future__ import annotations
@@ -60,7 +61,11 @@ class SplunkHECSink(ChunkedTransportSink):
     disabled: object = None
     max_retries: int = 0  # one attempt per POST, failure -> 0 (:100-102)
 
-    def serialize(self, df: DataFrame) -> DataFrame:
+    @property
+    def enabled(self) -> bool:
+        return not is_disabled(self.disabled)
+
+    def payload(self, df: DataFrame) -> tuple[DataFrame, Column]:
         """One HEC envelope per record of a ``decode_stream`` frame.
 
         The event is the POST-processed record (SURVEY §2A fine points):
@@ -79,8 +84,9 @@ class SplunkHECSink(ChunkedTransportSink):
         raw = _strip_json_field(raw, "ip", '(?:""|null)')
         # ``_event`` is referenced four times below; Catalyst does not
         # collapse a non-cheap projection into a multi-reference consumer,
-        # so the strip chain is evaluated once per row.
-        stripped = df.filter(parsed).select("datetime", raw.alias("_event"))
+        # so the strip chain is evaluated once per row, and only for a
+        # parsed one.  A NULL ``_event`` makes the payload NULL.
+        frame = df.withColumn("_event", F.when(parsed, raw))
         event = F.col("_event")
         frag = F.to_json(F.struct(F.col("datetime").alias("@timestamp")))
         # '{"@timestamp":"..."}' -> '"@timestamp":"..."'
@@ -99,16 +105,8 @@ class SplunkHECSink(ChunkedTransportSink):
             separators=(",", ":"),
             ensure_ascii=False,
         )
-        payload = F.concat(
+        return frame, F.concat(
             F.lit('{"event":'),
             F.when(F.col("datetime").isNull(), event).otherwise(injected),
             F.lit("," + tail[1:]),
         )
-        return stripped.select(payload.alias("payload"))
-
-    def write(self, df: DataFrame) -> tuple[int, int]:
-        if is_disabled(self.disabled):
-            self.last_success, self.last_total = 0, 0
-            print("Splunk logging is disabled")  # lambda_function.py:107
-            return 0, 0
-        return super().write(df)

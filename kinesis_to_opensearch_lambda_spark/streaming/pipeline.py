@@ -6,16 +6,20 @@ two sinks (lambda_function.py:140-148) — is one streaming query here:
     readStream (envelope) -> decode/normalize (operators.pipeline)
       -> writeStream.foreachBatch(fan-out)
 
-Inside ``foreachBatch`` the micro-batch is persisted once and written
-to both sinks — one source read, two writes, exactly the reference's
-shape (the two-`writeStream` alternative would read the source twice;
-SURVEY.md §2A R16).
+Inside ``foreachBatch`` the micro-batch is delivered in one pass
+(``sinks.base.deliver``): each sink's payload is a nullable column over
+one projection of the batch, and one ``foreachPartition`` hands every
+row to both sinks — one source read, one Spark job and no persist per
+micro-batch, exactly the reference's single loop over its batch (the
+two-`writeStream` alternative would read the source twice; SURVEY.md
+§2A R16).
 
 Delivery semantics: checkpointed offsets + at-least-once sinks; the ES
 path is made effectively idempotent by the deterministic doc id
 (lambda_function.py:81), whose streaming twin here is
-``dropDuplicatesWithinWatermark`` on ``random_id``; the Splunk path
-duplicates on redelivery, identical to the reference.
+``dropDuplicatesWithinWatermark`` on ``random_id`` (the raw payload for
+an id-less record); without it the Splunk path duplicates on
+redelivery, identical to the reference.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import pipeline as P
+from ..sinks.base import deliver
 
 
 def decode_stream(envelope_stream: DataFrame, tolerant: bool = False) -> DataFrame:
@@ -53,10 +58,9 @@ def split_dead_letters(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
     ``random_id``.
 
     Dead letters keep only the raw payload + a reason tag — enough to
-    replay after a fix.  Both frames derive from one decode (the
-    generator barrier in decode_kinesis guarantees single evaluation per
-    consumer branch inside the same foreachBatch pass when the batch is
-    persisted).
+    replay after a fix.  Both frames derive from one decode; each one
+    consumed is a separate Spark job over the batch, so a caller that
+    consumes both within one ``foreachBatch`` persists the batch first.
     """
     good = decoded.filter(F.col("random_id").isNotNull())
     dead = decoded.filter(F.col("random_id").isNull()).select(
@@ -69,11 +73,18 @@ def split_dead_letters(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
 def replay_dedup(decoded: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """R9 streaming flavour: drop redelivered doc ids within the
     watermark horizon — state-store-backed, bounded memory (the
-    reference delegates this dedup to the ES ``_id`` upsert)."""
-    return decoded.withColumn(
-        "event_time", F.to_timestamp("datetime")
-    ).withWatermark("event_time", watermark).dropDuplicatesWithinWatermark(
-        ["random_id"]
+    reference delegates this dedup to the ES ``_id`` upsert).
+
+    The key is ``random_id``, or the raw payload for a record without
+    one: distinct id-less records all reach Splunk, as in the reference,
+    while a byte-identical redelivery is still dropped.
+    """
+    return (
+        decoded.withColumn("event_time", F.to_timestamp("datetime"))
+        .withColumn("_dedup_key", F.coalesce("random_id", "_raw"))
+        .withWatermark("event_time", watermark)
+        .dropDuplicatesWithinWatermark(["_dedup_key"])
+        .drop("_dedup_key")
     )
 
 
@@ -86,7 +97,7 @@ def dual_sink_fanout(
     dedup_watermark: str | None = None,
     on_batch: Callable[[int, int], None] | None = None,
 ) -> StreamingQuery:
-    """R16: one micro-batch, two sinks, single source read.
+    """R16: one micro-batch, two sinks, one delivery pass.
 
     ``available_now=True`` drains everything currently in the source
     and stops — the test/batch-replay trigger; production uses the
@@ -97,19 +108,10 @@ def dual_sink_fanout(
         stream = replay_dedup(stream, dedup_watermark)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()  # decode once, write twice (SURVEY §4)
-        try:
-            _, es_total = es_sink.write(batch_df)      # projected (R6)
-            _, sp_total = splunk_sink.write(batch_df)  # full record (R13/R14)
-            if on_batch is not None:
-                # Row count comes from the sinks' write-job accumulators —
-                # no extra job per micro-batch.  Both sinks see every batch
-                # row, so max() covers a disabled sink (reports 0); the
-                # count() fallback fires only when both are disabled.
-                n = max(es_total, sp_total)
-                on_batch(epoch_id, n if n else batch_df.count())
-        finally:
-            batch_df.unpersist()
+        # projected (R6) and full record (R13/R14), one pass
+        n = deliver(batch_df, (es_sink, splunk_sink))
+        if on_batch is not None:
+            on_batch(epoch_id, n)  # every row the pass iterated
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

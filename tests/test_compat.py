@@ -82,6 +82,24 @@ def test_handler_multi_record_batch(spark, sinks):
     assert len(hec_spool.read_back()) == 7
 
 
+def test_handler_runs_one_spark_job(spark, sinks):
+    """Both sinks and the shared ``total`` come from one delivery pass:
+    one Spark job per call, no persist and no count()."""
+    es, hec, es_spool, hec_spool = sinks
+    no_id = {k: v for k, v in FULL_RECORD.items() if k != "random_id"}
+    sc = spark.sparkContext
+    sc.setJobGroup("compat-one-pass", "handler call")
+    try:
+        out = handler(
+            kinesis_event([FULL_RECORD, no_id]), spark=spark, es_sink=es, splunk_sink=hec
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out == {"elasticsearch": 1, "splunk": 2, "total": 2}
+    assert len(sc.statusTracker().getJobIdsForGroup("compat-one-pass")) == 1
+    assert len(es_spool.read_back()) == 1 and len(hec_spool.read_back()) == 2
+
+
 def test_handler_respects_splunk_disable(spark, sinks):
     es, hec, _, hec_spool = sinks
     cfg = EngineConfig(splunk_disabled="true")

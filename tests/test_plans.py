@@ -76,17 +76,23 @@ def test_pipeline_chain_shuffle_free_before_agg(spark):
 def test_sink_serialize_strips_raw_json_once(spark):
     # The HEC payload strips ``_raw`` (3 regexp_replace per field, 2
     # fields) once per row; OpenSearch serialization never touches it.
+    # The one-pass delivery frame carries both payloads with the same
+    # single strip and reads the batch uncached.
     from kinesis_to_opensearch_lambda_spark.sinks import OpenSearchBulkSink, SplunkHECSink
+    from kinesis_to_opensearch_lambda_spark.sinks.base import payload_frame
     from kinesis_to_opensearch_lambda_spark.streaming.pipeline import decode_stream
 
     env = decode_stream(spark.createDataFrame([("e30=",)], "kinesis_data string"))
+    es, hec = OpenSearchBulkSink(transport_factory=None), SplunkHECSink(transport_factory=None)
 
-    def n_regexp(sink) -> int:
-        df = sink(transport_factory=None).serialize(env)
-        return df._jdf.queryExecution().executedPlan().toString().count("regexp_replace(")
+    def plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
 
-    assert n_regexp(SplunkHECSink) <= 6
-    assert n_regexp(OpenSearchBulkSink) == 0
+    assert plan(hec.serialize(env)).count("regexp_replace(") <= 6
+    assert plan(es.serialize(env)).count("regexp_replace(") == 0
+    one_pass = plan(payload_frame(env, [es, hec]))
+    assert one_pass.count("regexp_replace(") <= 6
+    assert "InMemoryRelation" not in one_pass
 
 
 def test_minhash_signatures_shuffle_free(spark):

@@ -7,6 +7,7 @@ foreachPartition execution with a filesystem spool transport."""
 from __future__ import annotations
 
 import json
+import sys
 
 import pytest
 
@@ -128,7 +129,14 @@ def test_chunking_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from kinesis_to_opensearch_lambda_spark.sinks.base import _chunks
+    from kinesis_to_opensearch_lambda_spark.sinks.base import _Outbox
+
+    class Recorder:
+        def __init__(self):
+            self.chunks = []
+
+        def send(self, chunk):
+            self.chunks.append(list(chunk))
 
     @settings(max_examples=200, deadline=None)
     @given(
@@ -136,10 +144,69 @@ def test_chunking_property():
         st.integers(min_value=1, max_value=50),
     )
     def check(items, size):
-        out = list(_chunks(iter(items), size))
+        box = _Outbox(Recorder(), size, retries=0)
+        for x in items:
+            box.add(x)
+        box.flush()
+        out = box.transport.chunks
+        assert box.ok == box.total == len(items)
         assert [x for c in out for x in c] == items
         assert all(1 <= len(c) <= size for c in out)
         if out:
             assert all(len(c) == size for c in out[:-1])
 
     check()
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="3.13 re-reads zip directories lazily; the fix does not install",
+)
+def test_worker_zip_directory_reread_only_when_changed(tmp_path, monkeypatch):
+    """The per-task ``importlib.invalidate_caches()`` of a Python worker
+    re-reads a zip archive's directory only when the archive changed,
+    and an archive that is rewritten is still seen."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    from kinesis_to_opensearch_lambda_spark.sinks import base
+
+    archive = tmp_path / "mods.zip"
+
+    def write(version: str) -> None:
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("zip_cache_probe_m.py", f"VERSION = {version!r}\n")
+
+    write("v1")
+    monkeypatch.syspath_prepend(str(archive))
+    # restored at teardown, which undoes the install
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    reads: list[str] = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory",
+        lambda path: reads.append(path) or read_directory(path),
+    )
+    try:
+        import zip_cache_probe_m as m
+
+        assert m.VERSION == "v1"
+        base._skip_unchanged_zip_rereads()
+        base._skip_unchanged_zip_rereads()  # idempotent
+        importlib.invalidate_caches()  # stamps the directory it reads
+        reads.clear()
+        for _ in range(3):
+            importlib.invalidate_caches()
+        assert reads.count(str(archive)) == 0
+
+        write("v2, a longer module")  # a different size
+        importlib.invalidate_caches()
+        assert reads.count(str(archive)) == 1
+        assert importlib.reload(m).VERSION == "v2, a longer module"
+    finally:
+        sys.modules.pop("zip_cache_probe_m", None)
+        sys.path_importer_cache.pop(str(archive), None)

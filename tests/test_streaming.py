@@ -106,10 +106,14 @@ def test_fanout_id_less_record_reaches_splunk_not_opensearch(spark, tmp_path):
 
 def test_on_batch_reports_sink_counts(spark, tmp_path, stream_records):
     """R17: the on_batch observability callback gets its row count from
-    the sinks' write-job accumulators — no extra count() job per
-    micro-batch — and the per-epoch totals sum to the delivered rows."""
+    the delivery pass's accumulator — no extra count() job per
+    micro-batch — and the per-epoch totals sum to the batch rows,
+    including a row that neither sink takes."""
     src = str(tmp_path / "envelopes")
     write_envelope_files(spark, src, stream_records)
+    spark.createDataFrame(
+        [(base64.b64encode(b'{"broken').decode(),)], "kinesis_data: string"
+    ).write.mode("append").parquet(src)
     es = OpenSearchBulkSink(
         transport_factory=lambda: SpoolDirTransport(str(tmp_path / "es"))
     )
@@ -123,8 +127,34 @@ def test_on_batch_reports_sink_counts(spark, tmp_path, stream_records):
         on_batch=lambda epoch, n: seen.append((epoch, n)),
     )
     q.awaitTermination(120)
-    assert sum(n for _, n in seen) == 12
+    assert sum(n for _, n in seen) == 13
     assert len({epoch for epoch, _ in seen}) == len(seen)
+
+
+def test_fanout_runs_one_spark_job_per_micro_batch(spark, tmp_path, stream_records):
+    """Both sinks are fed by one delivery pass: each micro-batch is one
+    Spark job, with no persist and no second write job."""
+    src = str(tmp_path / "envelopes")
+    for i in range(3):
+        write_envelope_files(spark, src, stream_records[4 * i:4 * i + 4], n_files=1)
+    es = OpenSearchBulkSink(
+        transport_factory=lambda: SpoolDirTransport(str(tmp_path / "es"))
+    )
+    hec = SplunkHECSink(
+        transport_factory=lambda: SpoolDirTransport(str(tmp_path / "hec"))
+    )
+    rows: list[int] = []
+    stream = decode_stream(read_envelope_stream(spark, src, max_files_per_trigger=1))
+    q = dual_sink_fanout(
+        stream, es, hec, str(tmp_path / "ckpt"),
+        on_batch=lambda epoch, n: rows.append(n),
+    )
+    q.awaitTermination(120)
+    assert rows == [4, 4, 4]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == len(rows)
+    assert len(SpoolDirTransport(str(tmp_path / "es")).read_back()) == 12
+    assert len(SpoolDirTransport(str(tmp_path / "hec")).read_back()) == 12
 
 
 def test_restart_does_not_redeliver(spark, tmp_path, stream_records):
@@ -168,6 +198,34 @@ def test_replay_dedup_within_watermark(spark, tmp_path, stream_records):
         f"s-{i}" for i in range(12)
     )
     assert len(delivered) == 12  # duplicates suppressed
+
+
+def test_replay_dedup_keeps_distinct_id_less_records(spark, tmp_path):
+    """Id-less records are deduplicated on their raw payload, not on one
+    shared NULL key: distinct ones all reach Splunk (as the reference
+    posts them), while a byte-identical redelivery is dropped."""
+    no_id = [
+        {k: v for k, v in dict(FULL_RECORD, request_url=f"/api/{i}").items()
+         if k != "random_id"}
+        for i in range(3)
+    ]
+    src = str(tmp_path / "envelopes")
+    write_envelope_files(spark, src, no_id, n_files=1)
+    write_envelope_files(spark, src, no_id[:1], n_files=1)  # redelivered
+
+    es_spool, hec_spool = str(tmp_path / "es"), str(tmp_path / "hec")
+    es = OpenSearchBulkSink(transport_factory=lambda: SpoolDirTransport(es_spool))
+    hec = SplunkHECSink(transport_factory=lambda: SpoolDirTransport(hec_spool))
+    stream = decode_stream(read_envelope_stream(spark, src))
+    q = dual_sink_fanout(
+        stream, es, hec, str(tmp_path / "ckpt"), dedup_watermark="1 hour"
+    )
+    q.awaitTermination(180)
+    assert SpoolDirTransport(es_spool).read_back() == []
+    urls = sorted(
+        e["event"]["request_url"] for e in SpoolDirTransport(hec_spool).read_back()
+    )
+    assert urls == ["/api/0", "/api/1", "/api/2"]
 
 
 def test_windowed_counts_with_watermark(spark, tmp_path):

@@ -20,6 +20,7 @@ from ..sinks import OpenSearchBulkSink, SplunkHECSink, SpoolDirTransport
 from ..sources.batch import fan_out, load_table
 from ..sources.kinesis import audit_events_from_events, kinesis_envelope, read_envelope_stream
 from ..streaming.pipeline import decode_stream, dual_sink_fanout
+from ..streaming.width import BYTES_PER_PARTITION, source_bytes, stream_shuffle_width
 
 
 def _drain(q, timeout_s: int = 600) -> None:
@@ -125,74 +126,6 @@ def _write_mtime_batches(
     return src
 
 
-class _stream_shuffle_width:
-    """Scope the stateful-shuffle width of a streaming query to its
-    micro-batch byte mass (guide §2: derive partition counts from input
-    size, never from a constant tuned to one box).
-
-    ``spark.sql.shuffle.partitions`` at stream start fixes the state
-    store partition count for the life of the checkpoint.  The session
-    default (sized for the BATCH join fleet) hands a kilobyte-scale
-    micro-batch 32 state stores: 32 store commits + 32 Python workers
-    per trigger of pure overhead.  Width here = ceil(source bytes /
-    64 MB) clamped to [1, session default] — a 100 TB firehose keeps
-    the session width, the test corpus gets 1 — overridable via
-    $SPARK_GRAFT_STREAM_SHUFFLE for deployments that pin their own.
-    Restored after the drain; correctness is partition-count-invariant
-    (state logic is per-key; asserted by the oracle parity at any
-    width).
-
-    Applies to JVM-stateful aggregations (streaming groupBy/agg), whose
-    per-partition cost is store-commit overhead, AND — since the r13
-    band-state bucketing — to ``applyInPandasWithState`` over hash
-    buckets: group count is O(buckets), so the per-group Python
-    invocation no longer forces the full session width (pre-bucketing,
-    per-band-value grouping measured 4x slower at width 1; post, the
-    r13 width sweep on streaming_dedup_minhash reads 32/16/8/4 ->
-    5.9/4.2/4.0/3.9 s at sf0.1 — store commits dominate).
-
-    Deployment seam (r13 verdict): the byte probe ``os.walk``s the
-    source dir, which is always a builder-owned LOCAL tempdir here (the
-    streaming operators fabricate their own micro-batch sources).  A
-    deployment whose stream source is remote (Kafka, a cloud bucket)
-    cannot stat it this way — pin ``$SPARK_GRAFT_STREAM_SHUFFLE`` (or
-    pass ``width=``) from its own throughput knowledge instead; the
-    env pin is checked first precisely so that path never walks."""
-
-    def __init__(self, spark: SparkSession, src_dir: str, width: int | None = None):
-        import os
-
-        self.spark = spark
-        env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-        self.prev = spark.conf.get("spark.sql.shuffle.partitions")
-        if env is not None:
-            self.width = max(1, int(env))
-            return
-        if width is not None:
-            # caller-derived width (e.g. the stream-stream join derives
-            # it from the candidate-pair mass, not the source bytes —
-            # its dominant cost is join-output generation); still
-            # clamped to the session width and env-overridable above
-            self.width = max(1, min(int(self.prev), int(width)))
-            return
-        total = 0
-        for root, _dirs, files in os.walk(src_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        self.width = max(1, min(int(self.prev), -(-total // (64 << 20))))
-
-    def __enter__(self):
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.width))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
-
-
 class _stream_codegen_mode:
     """Scope ``spark.sql.codegen.factoryMode`` to NO_CODEGEN for a
     micro-batch drain whose aggregation buffer is very wide and whose
@@ -210,7 +143,7 @@ class _stream_codegen_mode:
     micro-batch the per-row interpretation penalty is noise next to
     the fixed codegen cost (measured at sf0.1: drain 27 s -> 11 s).
 
-    The flip is byte-derived like ``_stream_shuffle_width``: only a
+    The flip is byte-derived like ``stream_shuffle_width``: only a
     source below 64 MB per the whole drain gets NO_CODEGEN — a 100 TB
     firehose batch keeps codegen, whose per-row wins then dominate the
     fixed source-generation cost.  ``$SPARK_GRAFT_STREAM_CODEGEN``
@@ -230,14 +163,8 @@ class _stream_codegen_mode:
         if env:
             self.mode = env
             return
-        total = 0
-        for root, _dirs, files in os.walk(src_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        self.mode = "NO_CODEGEN" if total < (64 << 20) else self.prev
+        small = source_bytes(src_dir) < BYTES_PER_PARTITION
+        self.mode = "NO_CODEGEN" if small else self.prev
 
     def __enter__(self):
         self.spark.conf.set("spark.sql.codegen.factoryMode", self.mode)
@@ -264,20 +191,12 @@ class _stream_scan_split:
     """
 
     def __init__(self, spark: SparkSession, src_dir: str, n_batches: int):
-        import os
-
         self.spark = spark
         self.prev = spark.conf.get(
             "spark.sql.files.maxPartitionBytes", "134217728"
         )
         prev_bytes = int("".join(c for c in self.prev if c.isdigit()))
-        total = 0
-        for root, _dirs, files in os.walk(src_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
+        total = source_bytes(src_dir)
         width = max(1, spark.sparkContext.defaultParallelism)
         per = max(1 << 20, -(-total // max(1, n_batches) // width))
         self.val = str(min(prev_bytes, per))
@@ -418,6 +337,15 @@ def streaming_watermark_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(d, ignore_errors=True)
 
 
+def _one_task_per_side(both: DataFrame) -> DataFrame:
+    """Put the rows of side 0 and side 1 into two separate partitions,
+    so the partitioned write runs as two tasks.  Hash partitioning
+    cannot promise that: ``pmod(hash(0), 2) == pmod(hash(1), 2) == 1``,
+    so ``repartition(2, "_side")`` sends both sides to one task.  Range
+    partitioning on the two-valued key splits them at the boundary."""
+    return both.repartitionByRange(2, "_side")
+
+
 @register(
     "streaming_stream_stream_join",
     oracle="""
@@ -488,11 +416,11 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # ONE write job for both sides (r14): the two per-side
         # coalesce(1) writes each re-scanned events; a union tagged by
-        # side + one 2-task partitioned write lands one file per side
-        # (the join and the post-hoc aggregate are row-order-
-        # insensitive, so in-file order is immaterial).  Generic
-        # (key, ts) column names in the files; each side renames on
-        # read, keeping the join/oracle shapes byte-identical.
+        # side + one 2-task partitioned write (see _one_task_per_side)
+        # lands one file per side (the join and the post-hoc aggregate
+        # are row-order-insensitive, so in-file order is immaterial).
+        # Generic (key, ts) column names in the files; each side renames
+        # on read, keeping the join/oracle shapes byte-identical.
         import os as _os
 
         both = imp.select(
@@ -505,11 +433,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         tmp = f"{d}/tmp_sides"
-        (
-            both.repartition(2, "_side")
-            .write.partitionBy("_side")
-            .parquet(tmp)
-        )
+        _one_task_per_side(both).write.partitionBy("_side").parquet(tmp)
         for side, sub in ((0, "imp"), (1, "clk")):
             pdir = f"{tmp}/_side={side}"
             _os.makedirs(f"{d}/{sub}", exist_ok=True)
@@ -569,7 +493,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sides are known from the already-materialized ids.count().
         pair_mass = (n_events // 3) ** 2 // key_mod
         ssj_width = -(-pair_mass // 1_000_000)
-        with _stream_shuffle_width(spark, d, width=ssj_width):
+        with stream_shuffle_width(spark, d, width=ssj_width):
             q = (
                 joined.select("its")
                 .writeStream.outputMode("append")
@@ -1307,8 +1231,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         name = f"sess_{uuid.uuid4().hex[:12]}"
         # JVM-stateful session-window aggregate: per-partition
         # store-commit overhead dominates at micro-batch scale, so the
-        # width derives from source bytes (see _stream_shuffle_width)
-        with _stream_shuffle_width(spark, src):
+        # width derives from source bytes (see stream_shuffle_width)
+        with stream_shuffle_width(spark, src):
             q = (
                 agg.writeStream.outputMode("append")
                 .format("memory")
@@ -1429,7 +1353,7 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pure source formatting at any row count — see
         # _stream_codegen_mode); interpreted projections cut the drain
         # 27 s -> 11 s at sf0.1 with bit-identical results.
-        with _stream_shuffle_width(spark, src), _stream_codegen_mode(spark, src):
+        with stream_shuffle_width(spark, src), _stream_codegen_mode(spark, src):
             q = (
                 agg.writeStream.outputMode("append")
                 .format("memory")
@@ -1570,7 +1494,7 @@ def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # frames per trigger instead of O(band vocabulary); verdicts
         # are computed per band value inside the bucket, so results
         # are bucket-count-invariant (see streaming.stateful).
-        with _stream_scan_split(spark, src, 3), _stream_shuffle_width(
+        with _stream_scan_split(spark, src, 3), stream_shuffle_width(
             spark, src
         ):
             q = (
@@ -1686,7 +1610,7 @@ def streaming_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         name = f"qf_{uuid.uuid4().hex[:12]}"
-        with _stream_shuffle_width(spark, src):
+        with stream_shuffle_width(spark, src):
             q = (
                 agg.writeStream.outputMode("update")
                 .format("memory")

@@ -41,6 +41,20 @@ def get_session(
         # (matching DuckDB/Arrow truncation).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Streaming checkpoints commit each file by rename.  On a file:
+        # path the default FileContext manager stats both ends of every
+        # rename through FileUtil.readLink, which forks a `readlink`
+        # process each time: tens of forks per trigger.  The FileSystem
+        # manager renames through FileSystem.rename, which forks
+        # nothing.  The master is always local, so checkpoints are local
+        # files, and there both managers check the target, then rename:
+        # the same no-overwrite guarantee.  Spark's state-file checksums
+        # and Hadoop's .crc files stay on.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         # The parity harness's full-value comparator collects the entire

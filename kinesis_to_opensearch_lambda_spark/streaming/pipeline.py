@@ -14,12 +14,22 @@ micro-batch, exactly the reference's single loop over its batch (the
 two-`writeStream` alternative would read the source twice; SURVEY.md
 §2A R16).
 
+Cadence: the live query fires one trigger per second, the reference's
+cadence — its Kinesis event-source mapping polls each shard once a
+second and hands the Lambda one batch (lambda_function.py:140-148).
+Every trigger pays a fixed cost (planning, the offset and commit log
+writes, one state-store commit per state partition), so the cadence is
+the latency/throughput dial: one trigger per second bounds that cost
+per second of stream, and an idle stream lists its source once a
+second instead of every 10 ms.
+
 Delivery semantics: checkpointed offsets + at-least-once sinks; the ES
 path is made effectively idempotent by the deterministic doc id
 (lambda_function.py:81), whose streaming twin here is
 ``dropDuplicatesWithinWatermark`` on ``random_id`` (the raw payload for
 an id-less record); without it the Splunk path duplicates on
-redelivery, identical to the reference.
+redelivery, identical to the reference.  The dedup's state width comes
+from the source's byte mass (``streaming.width``), not the core count.
 """
 
 from __future__ import annotations
@@ -32,6 +42,11 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import pipeline as P
 from ..sinks.base import deliver
+from .width import local_source_path, stream_shuffle_width
+
+# The live trigger: the Kinesis event-source mapping's once-per-second
+# poll per shard.
+LIVE_TRIGGER = "1 second"
 
 
 def decode_stream(envelope_stream: DataFrame, tolerant: bool = False) -> DataFrame:
@@ -100,8 +115,18 @@ def dual_sink_fanout(
     """R16: one micro-batch, two sinks, one delivery pass.
 
     ``available_now=True`` drains everything currently in the source
-    and stops — the test/batch-replay trigger; production uses the
-    default micro-batch trigger.
+    and stops — the test/batch-replay trigger.  ``available_now=False``
+    is the production path: a processing-time trigger every
+    ``LIVE_TRIGGER``, so each second's arrivals go out as one
+    micro-batch.
+
+    With ``dedup_watermark`` set, the dedup's state partition count is
+    chosen by :class:`stream_shuffle_width` from the bytes of the
+    stream's local file source (one partition per 64 MB, at most the
+    session width; a source without a local path keeps the session
+    width).  The choice holds only at the checkpoint's first start:
+    Spark records the count in the offset log's metadata and restores
+    it from there on every restart.
     """
     stream = decoded
     if dedup_watermark is not None:
@@ -120,7 +145,14 @@ def dual_sink_fanout(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    else:
+        writer = writer.trigger(processingTime=LIVE_TRIGGER)
+    if dedup_watermark is None:
+        return writer.start()
+    # The query plans on a session clone taken in start(), so the width
+    # needs to hold only across the call.
+    with stream_shuffle_width(decoded.sparkSession, local_source_path(decoded)):
+        return writer.start()
 
 
 # --- event-time windowed aggregations (reference has none; SURVEY §2B) --

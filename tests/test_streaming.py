@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import base64
 import json
+import os
+import time
 
 import pyspark.sql.functions as F
 import pytest
@@ -21,6 +23,10 @@ from kinesis_to_opensearch_lambda_spark.streaming.pipeline import (
     decode_stream,
     dual_sink_fanout,
     hourly_counts,
+)
+from kinesis_to_opensearch_lambda_spark.streaming.width import (
+    local_source_path,
+    stream_shuffle_width,
 )
 
 from .test_transforms import FULL_RECORD
@@ -175,6 +181,146 @@ def test_restart_does_not_redeliver(spark, tmp_path, stream_records):
     dual_sink_fanout(stream2, make(), hec, str(tmp_path / "ckpt")).awaitTermination(120)
     n_second = len(SpoolDirTransport(spool).read_back())
     assert n_first == 12 and n_second == 12  # no redelivery
+
+
+def _stop_between_triggers(q) -> None:
+    """Stop a live query after a drain and between two triggers: a stop
+    that interrupts a running foreachBatch callback logs a spurious
+    error."""
+    q.processAllAvailable()
+    deadline = time.time() + 10
+    while q.status["isTriggerActive"] and time.time() < deadline:
+        time.sleep(0.05)
+    q.stop()
+
+
+def _spools(tmp_path):
+    es_spool, hec_spool = str(tmp_path / "es"), str(tmp_path / "hec")
+    es = OpenSearchBulkSink(transport_factory=lambda: SpoolDirTransport(es_spool))
+    hec = SplunkHECSink(transport_factory=lambda: SpoolDirTransport(hec_spool))
+    return es, hec, SpoolDirTransport(es_spool), SpoolDirTransport(hec_spool)
+
+
+def test_live_fanout_triggers_once_per_second(spark, tmp_path, stream_records):
+    """The production path (``available_now=False``): a 1 s
+    processing-time trigger, the reference's once-per-second poll, picks
+    up files as they arrive and delivers each record once to each sink,
+    a redelivered one included."""
+    src = str(tmp_path / "envelopes")
+    write_envelope_files(spark, src, stream_records[:6], n_files=1)
+    es, hec, es_spool, hec_spool = _spools(tmp_path)
+    stream = decode_stream(read_envelope_stream(spark, src))
+    q = dual_sink_fanout(
+        stream, es, hec, str(tmp_path / "ckpt"), available_now=False,
+        dedup_watermark="1 day",
+    )
+    try:
+        trigger = q._jsq.streamingQuery().trigger()
+        assert trigger.getClass().getSimpleName() == "ProcessingTimeTrigger"
+        assert trigger.intervalMs() == 1000
+        q.processAllAvailable()
+        assert len(es_spool.read_back()) == 6
+        write_envelope_files(
+            spark, src, stream_records[6:] + stream_records[:1], n_files=1
+        )
+        q.processAllAvailable()
+    finally:
+        _stop_between_triggers(q)
+    expected = sorted(f"s-{i}" for i in range(12))
+    assert sorted(d["_id"] for d in es_spool.read_back()) == expected
+    assert sorted(d["event"]["random_id"] for d in hec_spool.read_back()) == expected
+
+
+def _recorded_widths(ckpt: str) -> set[str]:
+    """``spark.sql.shuffle.partitions`` in every offset-log entry."""
+    widths = set()
+    for name in os.listdir(f"{ckpt}/offsets"):
+        if name.isdigit():
+            with open(f"{ckpt}/offsets/{name}") as f:
+                meta = json.loads(f.read().splitlines()[1])
+            widths.add(meta["conf"]["spark.sql.shuffle.partitions"])
+    return widths
+
+
+def test_dedup_state_width_is_fixed_at_first_start(
+    spark, tmp_path, stream_records, monkeypatch
+):
+    """The dedup's state width comes from the source's bytes at the
+    checkpoint's first start; the session conf is back right after
+    start(); a restart keeps the recorded width whatever the probe then
+    says, and still drops a redelivered record."""
+    src = str(tmp_path / "envelopes")
+    write_envelope_files(spark, src, stream_records[:6], n_files=1)
+    ckpt = str(tmp_path / "ckpt")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    width = stream_shuffle_width(spark, src).width
+    assert width == 1 and prev != "1"  # a small source, a wider session
+    es, hec, es_spool, hec_spool = _spools(tmp_path)
+
+    def run():
+        stream = decode_stream(read_envelope_stream(spark, src))
+        q = dual_sink_fanout(stream, es, hec, ckpt, dedup_watermark="1 day")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+        q.awaitTermination(180)
+
+    run()
+    assert _recorded_widths(ckpt) == {str(width)}
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")  # the probe now says 3
+    write_envelope_files(spark, src, stream_records[6:] + stream_records[:1], n_files=1)
+    run()
+    assert _recorded_widths(ckpt) == {str(width)}
+    expected = sorted(f"s-{i}" for i in range(12))
+    assert sorted(d["_id"] for d in es_spool.read_back()) == expected
+    assert sorted(d["event"]["random_id"] for d in hec_spool.read_back()) == expected
+
+
+def test_local_source_path_and_sourceless_width(spark, tmp_path):
+    """The width probe reads a file source's local path from the
+    stream's plan; a source without one (here ``rate``, like the
+    Kinesis connector) keeps the session width."""
+    src = tmp_path / "envelopes"
+    src.mkdir()
+    assert local_source_path(read_envelope_stream(spark, str(src))) == str(src)
+    assert local_source_path(read_envelope_stream(spark, f"file://{src}")) == str(src)
+    assert local_source_path(spark.readStream.format("rate").load()) is None
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert stream_shuffle_width(spark, None).width == int(prev)
+
+
+def test_checkpoint_commits_through_filesystem_manager(spark, tmp_path, stream_records):
+    """A file: checkpoint commits through the FileSystem-based manager
+    (which renames without forking ``readlink``), and the offset log
+    still refuses to overwrite a committed batch, both by its existence
+    check and at the rename."""
+    src = str(tmp_path / "envelopes")
+    write_envelope_files(spark, src, stream_records)
+    es, hec, _, _ = _spools(tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    stream = decode_stream(read_envelope_stream(spark, src))
+    dual_sink_fanout(stream, es, hec, ckpt).awaitTermination(120)
+
+    jvm = spark._jvm
+    log = jvm.org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog(
+        spark._jsparkSession, f"file://{ckpt}/offsets"
+    )
+    manager = log.fileManager()
+    if manager.getClass().getSimpleName() == "ChecksumCheckpointFileManager":
+        inner = manager.getClass().getDeclaredField("underlyingFileMgr")
+        inner.setAccessible(True)
+        manager = inner.get(manager)
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    with open(f"{ckpt}/offsets/0") as f:
+        committed = f.read()
+    assert not log.add(0, log.get(0).get())
+    out = manager.createAtomic(
+        jvm.org.apache.hadoop.fs.Path(f"file://{ckpt}/offsets/0"), False
+    )
+    out.write(bytearray(b"overwritten"))
+    with pytest.raises(Exception, match="FileAlreadyExistsException"):
+        out.close()
+    with open(f"{ckpt}/offsets/0") as f:
+        assert f.read() == committed
 
 
 def test_replay_dedup_within_watermark(spark, tmp_path, stream_records):
@@ -464,23 +610,37 @@ def test_stream_shuffle_width_explicit_width(spark, tmp_path, monkeypatch):
     """r13: the stream-stream join derives its width from candidate-pair
     mass and passes it explicitly; the scope must clamp it to [1,
     session width], let the env pin win, and restore the session conf."""
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    with stream_shuffle_width(spark, str(tmp_path), width=6) as w:
+        assert w.width == min(6, int(prev))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(w.width)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    with stream_shuffle_width(spark, str(tmp_path), width=10**9) as w:
+        assert w.width == int(prev)  # clamped to the session width
+    with stream_shuffle_width(spark, str(tmp_path), width=0) as w:
+        assert w.width == 1  # floor
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
+    with stream_shuffle_width(spark, str(tmp_path), width=7) as w:
+        assert w.width == 3  # env pin beats the derived width
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_stream_stream_join_sides_take_two_tasks(spark):
+    """The stream-stream join writes both sides in one job; each side
+    lands in its own non-empty partition, so the write runs as two
+    tasks (hash partitioning would put both in one)."""
     # registry first: importing streaming_queries directly would
     # re-enter the queries<->operators import cycle half-initialized
     from kinesis_to_opensearch_lambda_spark.queries import REGISTRY  # noqa: F401
     from kinesis_to_opensearch_lambda_spark.operators.streaming_queries import (
-        _stream_shuffle_width,
+        _one_task_per_side,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    with _stream_shuffle_width(spark, str(tmp_path), width=6) as w:
-        assert w.width == min(6, int(prev))
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(w.width)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    with _stream_shuffle_width(spark, str(tmp_path), width=10**9) as w:
-        assert w.width == int(prev)  # clamped to the session width
-    with _stream_shuffle_width(spark, str(tmp_path), width=0) as w:
-        assert w.width == 1  # floor
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
-    with _stream_shuffle_width(spark, str(tmp_path), width=7) as w:
-        assert w.width == 3  # env pin beats the derived width
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    both = spark.range(30).select(
+        (F.col("id") % 3 == 0).cast("int").alias("_side"), "id"
+    )
+    sides = _one_task_per_side(both).rdd.mapPartitions(
+        lambda rows: [sorted({r._side for r in rows})]
+    ).collect()
+    assert sides == [[0], [1]]

@@ -46,10 +46,13 @@ def get_session(
         # rename through FileUtil.readLink, which forks a `readlink`
         # process each time: tens of forks per trigger.  The FileSystem
         # manager renames through FileSystem.rename, which forks
-        # nothing.  The master is always local, so checkpoints are local
-        # files, and there both managers check the target, then rename:
-        # the same no-overwrite guarantee.  Spark's state-file checksums
-        # and Hadoop's .crc files stay on.
+        # nothing.  On a file: checkpoint both managers check the
+        # target, then rename: the same no-overwrite guarantee.  That is
+        # argued and tested for file: checkpoints only; the setting is
+        # session-wide, so a checkpoint on another scheme (hdfs://,
+        # s3a://) also gets this manager, and its guarantees there are
+        # unchecked.  Spark's state-file checksums and Hadoop's .crc
+        # files stay on.
         .config(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."

@@ -28,8 +28,7 @@ path is made effectively idempotent by the deterministic doc id
 (lambda_function.py:81), whose streaming twin here is
 ``dropDuplicatesWithinWatermark`` on ``random_id`` (the raw payload for
 an id-less record); without it the Splunk path duplicates on
-redelivery, identical to the reference.  The dedup's state width comes
-from the source's byte mass (``streaming.width``), not the core count.
+redelivery, identical to the reference.
 """
 
 from __future__ import annotations
@@ -42,7 +41,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import pipeline as P
 from ..sinks.base import deliver
-from .width import local_source_path, stream_shuffle_width
 
 # The live trigger: the Kinesis event-source mapping's once-per-second
 # poll per shard.
@@ -120,13 +118,10 @@ def dual_sink_fanout(
     ``LIVE_TRIGGER``, so each second's arrivals go out as one
     micro-batch.
 
-    With ``dedup_watermark`` set, the dedup's state partition count is
-    chosen by :class:`stream_shuffle_width` from the bytes of the
-    stream's local file source (one partition per 64 MB, at most the
-    session width; a source without a local path keeps the session
-    width).  The choice holds only at the checkpoint's first start:
-    Spark records the count in the offset log's metadata and restores
-    it from there on every restart.
+    With ``dedup_watermark`` set, the dedup keeps its state on
+    ``spark.sql.shuffle.partitions`` partitions as set when the
+    checkpoint first starts; Spark records that count in the offset
+    log's metadata and restores it from there on every restart.
     """
     stream = decoded
     if dedup_watermark is not None:
@@ -147,12 +142,7 @@ def dual_sink_fanout(
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime=LIVE_TRIGGER)
-    if dedup_watermark is None:
-        return writer.start()
-    # The query plans on a session clone taken in start(), so the width
-    # needs to hold only across the call.
-    with stream_shuffle_width(decoded.sparkSession, local_source_path(decoded)):
-        return writer.start()
+    return writer.start()
 
 
 # --- event-time windowed aggregations (reference has none; SURVEY §2B) --

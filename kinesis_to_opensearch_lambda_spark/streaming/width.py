@@ -1,18 +1,17 @@
-"""The one stream-width probe: a stateful streaming query's shuffle width
+"""The stream-width probe: a stateful streaming query's shuffle width
 derived from its source's byte mass (guide §2: derive partition counts
 from input size, never from a constant tuned to one box).
 
-Both the fan-out's replay dedup (``streaming.pipeline``) and the
-stateful analytics operators (``operators.streaming_queries``) scope
-their width with :class:`stream_shuffle_width`.
+The stateful analytics operators (``operators.streaming_queries``)
+scope their width with :class:`stream_shuffle_width` and size their
+other per-drain settings from the same :func:`source_bytes` walk.
 """
 
 from __future__ import annotations
 
 import os
-from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 BYTES_PER_PARTITION = 64 << 20
 
@@ -30,32 +29,6 @@ def source_bytes(src_dir: str) -> int:
     return total
 
 
-def local_source_path(stream: DataFrame) -> str | None:
-    """The local directory of a streaming frame's one file source, read
-    from its analyzed plan (the ``StreamingRelation`` leaf's ``path``
-    option; an untransformed reader's raw plan holds an unresolved
-    source); None when the stream has another kind of source, such as
-    the Kinesis connector, or a remote one."""
-    leaves = stream._jdf.queryExecution().analyzed().collectLeaves().iterator()
-    paths = []
-    while leaves.hasNext():
-        leaf = leaves.next()
-        if not leaf.isStreaming():
-            continue
-        if leaf.getClass().getSimpleName() != "StreamingRelation":
-            return None
-        path = leaf.dataSource().options().get("path")
-        if path.isEmpty():
-            return None
-        paths.append(path.get())
-    if len(paths) != 1:
-        return None
-    url = urlparse(paths[0])
-    if url.scheme == "file":
-        return url.path
-    return paths[0] if url.scheme == "" else None
-
-
 class stream_shuffle_width:
     """Scope the stateful-shuffle width of a streaming query to its
     source's byte mass.
@@ -69,30 +42,28 @@ class stream_shuffle_width:
     ``applyInPandasWithState``) per partition per trigger of pure
     overhead.  Width here = ceil(source bytes / 64 MB) clamped to [1,
     session width] — a 100 TB firehose keeps the session width, the test
-    corpus gets 1.  A source with no local directory (``src_dir=None``:
-    the Kinesis connector, a remote bucket) cannot be measured this way
-    and keeps the session width; ``$SPARK_GRAFT_STREAM_SHUFFLE`` (or
-    ``width=``) pins one from the deployment's own throughput
-    knowledge, and the env pin is checked first so that path never
-    walks.
-
-    Only the query's start needs the scope: the query plans every
-    micro-batch on a session it cloned when it was constructed.  The
-    session conf is restored on exit.  Correctness is
+    corpus gets 1 — overridable via $SPARK_GRAFT_STREAM_SHUFFLE for
+    deployments that pin their own.  Restored on exit; correctness is
     partition-count-invariant (state logic is per-key; asserted by the
     oracle parity at any width).
 
-    Applies to JVM-stateful operators (streaming dedup, groupBy/agg),
-    whose per-partition cost is store-commit overhead, and to
+    Applies to JVM-stateful aggregations (streaming groupBy/agg), whose
+    per-partition cost is store-commit overhead, and to
     ``applyInPandasWithState`` over hash buckets: group count is
     O(buckets), so the per-group Python invocation no longer forces the
     full session width (the r13 width sweep on streaming_dedup_minhash
     reads 32/16/8/4 -> 5.9/4.2/4.0/3.9 s at sf0.1 — store commits
-    dominate)."""
+    dominate).
 
-    def __init__(
-        self, spark: SparkSession, src_dir: str | None, width: int | None = None
-    ):
+    Deployment seam: the byte probe walks the source dir, which is
+    always a LOCAL tempdir here (the streaming operators fabricate
+    their own micro-batch sources).  A deployment whose stream source
+    is remote (Kinesis, a cloud bucket) cannot stat it this way — pin
+    ``$SPARK_GRAFT_STREAM_SHUFFLE`` (or pass ``width=``) from its own
+    throughput knowledge instead; the env pin is checked first
+    precisely so that path never walks."""
+
+    def __init__(self, spark: SparkSession, src_dir: str, width: int | None = None):
         self.spark = spark
         self.prev = spark.conf.get("spark.sql.shuffle.partitions")
         env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
@@ -103,11 +74,7 @@ class stream_shuffle_width:
             # a caller-derived width (e.g. the stream-stream join derives
             # it from the candidate-pair mass, not the source bytes — its
             # dominant cost is join-output generation) skips the probe
-            width = (
-                int(self.prev)
-                if src_dir is None
-                else -(-source_bytes(src_dir) // BYTES_PER_PARTITION)
-            )
+            width = -(-source_bytes(src_dir) // BYTES_PER_PARTITION)
         self.width = max(1, min(int(self.prev), int(width)))
 
     def __enter__(self):

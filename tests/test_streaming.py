@@ -24,10 +24,7 @@ from kinesis_to_opensearch_lambda_spark.streaming.pipeline import (
     dual_sink_fanout,
     hourly_counts,
 )
-from kinesis_to_opensearch_lambda_spark.streaming.width import (
-    local_source_path,
-    stream_shuffle_width,
-)
+from kinesis_to_opensearch_lambda_spark.streaming.width import stream_shuffle_width
 
 from .test_transforms import FULL_RECORD
 
@@ -242,49 +239,34 @@ def _recorded_widths(ckpt: str) -> set[str]:
     return widths
 
 
-def test_dedup_state_width_is_fixed_at_first_start(
-    spark, tmp_path, stream_records, monkeypatch
-):
-    """The dedup's state width comes from the source's bytes at the
-    checkpoint's first start; the session conf is back right after
-    start(); a restart keeps the recorded width whatever the probe then
-    says, and still drops a redelivered record."""
+def test_dedup_restart_keeps_state_width(spark, tmp_path, stream_records):
+    """The dedup's state width is the session's shuffle width at the
+    checkpoint's first start; a restart under another session width
+    keeps the recorded one and still drops a redelivered record."""
     src = str(tmp_path / "envelopes")
     write_envelope_files(spark, src, stream_records[:6], n_files=1)
     ckpt = str(tmp_path / "ckpt")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    width = stream_shuffle_width(spark, src).width
-    assert width == 1 and prev != "1"  # a small source, a wider session
     es, hec, es_spool, hec_spool = _spools(tmp_path)
 
     def run():
         stream = decode_stream(read_envelope_stream(spark, src))
-        q = dual_sink_fanout(stream, es, hec, ckpt, dedup_watermark="1 day")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-        q.awaitTermination(180)
+        dual_sink_fanout(
+            stream, es, hec, ckpt, dedup_watermark="1 day"
+        ).awaitTermination(180)
 
     run()
-    assert _recorded_widths(ckpt) == {str(width)}
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")  # the probe now says 3
+    assert _recorded_widths(ckpt) == {prev}
     write_envelope_files(spark, src, stream_records[6:] + stream_records[:1], n_files=1)
-    run()
-    assert _recorded_widths(ckpt) == {str(width)}
+    spark.conf.set("spark.sql.shuffle.partitions", "3" if prev != "3" else "2")
+    try:
+        run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert _recorded_widths(ckpt) == {prev}
     expected = sorted(f"s-{i}" for i in range(12))
     assert sorted(d["_id"] for d in es_spool.read_back()) == expected
     assert sorted(d["event"]["random_id"] for d in hec_spool.read_back()) == expected
-
-
-def test_local_source_path_and_sourceless_width(spark, tmp_path):
-    """The width probe reads a file source's local path from the
-    stream's plan; a source without one (here ``rate``, like the
-    Kinesis connector) keeps the session width."""
-    src = tmp_path / "envelopes"
-    src.mkdir()
-    assert local_source_path(read_envelope_stream(spark, str(src))) == str(src)
-    assert local_source_path(read_envelope_stream(spark, f"file://{src}")) == str(src)
-    assert local_source_path(spark.readStream.format("rate").load()) is None
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    assert stream_shuffle_width(spark, None).width == int(prev)
 
 
 def test_checkpoint_commits_through_filesystem_manager(spark, tmp_path, stream_records):

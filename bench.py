@@ -11,6 +11,8 @@ full result (no collect of payload rows to the driver).  The timed pass
 runs $SPARK_GRAFT_BENCH_RUNS times (default 3) and reports the per-query
 MEDIAN — single-run numbers on a shared sandbox drift 15-30% and look
 like plan regressions when they are scheduler noise.
+
+$SPARK_GRAFT_CPUS defaults to the host's cores (``session.DEFAULT_CPUS``).
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
 # Second bench tier (r8 verdict task 8): the HEADLINE set has been
@@ -63,7 +64,7 @@ def main() -> None:
     from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
     from kinesis_to_opensearch_lambda_spark.session import get_session
 
-    spark = get_session(app_name="bench", cpus=CPUS)
+    spark = get_session(app_name="bench")
 
     headline = [q for q in REGISTRY.values() if q.headline]
     # Warm each query twice (JVM JIT needs a few iterations on the

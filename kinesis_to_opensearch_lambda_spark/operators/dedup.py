@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import scale
 from ..functions import minhash_values, shingle_hashes, word_shingles, words
 
 
@@ -518,40 +519,26 @@ def connected_components(
         checkpoint_dir,
         eager=False,
     )
-    # r13 (guide §2): scope the LOOP's shuffle width to the edge mass.
-    # The session width is sized for the heavy candidate-generation map
-    # work (which just ran, full-width, when the cut materialized); the
-    # propagation rounds shuffle only slim (node, label) longs, and at
-    # test scale a handful of rows spread over the full session width
-    # pays per-round scheduler + store overhead for nothing.  Width =
-    # ceil(edges / 1M rows) clamped to [1, session] — a 100 TB pair
-    # mass keeps the session width — env SPARK_GRAFT_CC_SHUFFLE pins
-    # deployments that want their own.  Labels are materialized by the
-    # in-loop cuts, so post-loop consumers never see the narrowed conf;
-    # results are width-invariant (min-label algebra is per-key).
-    import os as _os
-
+    # r13 (guide §2): scope the LOOP's shuffle width to the edge mass
+    # (scale.rows_width).  The session width is sized for the heavy
+    # candidate-generation map work (which just ran, full-width, when
+    # the cut materialized); the propagation rounds shuffle only slim
+    # (node, label) longs, and at test scale a handful of rows spread
+    # over the full session width pays per-round scheduler + store
+    # overhead for nothing.  Labels are materialized by the in-loop
+    # cuts, so post-loop consumers never see the narrowed conf; results
+    # are width-invariant (min-label algebra is per-key).
     spark = pairs.sparkSession
     n_edges = edges.count()  # one cheap job; the cut materializes here
-    prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-    env_w = _os.environ.get("SPARK_GRAFT_CC_SHUFFLE")
-    loop_w = (
-        max(1, int(env_w))
-        if env_w is not None
-        else max(1, min(int(prev_width), -(-n_edges // 1_000_000)))
-    )
-
     labels = (
         edges.select("src")
         .distinct()
         .select(F.col("src").alias("node"), F.col("src").alias("cluster_id"))
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_w))
-    try:
-        labels = _cc_loop(edges, labels, max_iter, checkpoint_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_width)
-    return labels
+    with scale.scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": scale.rows_width(spark, n_edges)}
+    ):
+        return _cc_loop(edges, labels, max_iter, checkpoint_dir)
 
 
 def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:

@@ -22,9 +22,10 @@ parameter, not a docstring promise.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame
+
+from .. import scale
 
 # Deployment-level override: when a caller passes checkpoint_dir=None
 # (every registered query builder does — the registry signature is
@@ -61,109 +62,6 @@ def truncate_lineage(
     return df.checkpoint(eager=eager)
 
 
-# Byte budget for executor-local cuts, as a fraction of executor heap.
-# localCheckpoint stores the materialized partitions as DESERIALIZED
-# row objects in executor storage memory (MEMORY_AND_DISK unrolls in
-# heap first); a frame whose row-object mass approaches the heap turns
-# the cut from a planning-dedup win into an allocation storm — measured
-# r13 at sf10: graph_triangle_count's three edge-scale cuts (~100M+
-# two-long rows each) hard-OOMed a fresh 16 GiB local[32] JVM, while
-# the UNCUT r9 form of the same query ran 224s there (runtime exchange
-# reuse already dedups the physical work; the cut only removes
-# duplicated planning/broadcast overhead, which AMORTIZES at scale).
-# heap/64 with the measured ~6-12x deserialized-object blowup over
-# source parquet bytes and up to 3 live cuts per query keeps the
-# materialized mass comfortably under half the heap.
-_CUT_BUDGET_ENV = "SPARK_GRAFT_LINEAGE_CUT_MAX_MB"
-_CUT_HEAP_FRACTION = 64
-
-
-def _heap_bytes(df: DataFrame) -> int:
-    """Heap of the JVM that will hold localCheckpoint blocks.
-
-    Under a ``local`` / ``local[...]`` master the executor IS the driver
-    JVM, so the budget must come from ``spark.driver.memory`` even when a
-    cluster-style conf also sets ``spark.executor.memory`` (r13 ADVICE:
-    preferring the executor value unconditionally would size the budget
-    from the wrong — typically larger — heap and re-admit the sf10 OOM
-    this guard exists to prevent).  ``local-cluster[...]`` launches
-    separate executor JVMs and reads ``spark.executor.memory`` like any
-    cluster master.  Spark memory strings allow an
-    optional trailing 'b' ('512mb', '16gb'); any unparseable value
-    degrades to the conservative 1g default instead of raising.
-    """
-    conf = df.sparkSession.sparkContext.getConf()
-    if re.fullmatch(r"local(\[.*\])?", conf.get("spark.master", "")):
-        raw = conf.get("spark.driver.memory", None) or "1g"
-    else:
-        raw = conf.get("spark.executor.memory", None) or conf.get(
-            "spark.driver.memory", "1g"
-        )
-    parsed = _parse_mem(raw)
-    return parsed if parsed is not None else 1 << 30
-
-
-def _parse_mem(raw: str) -> int | None:
-    """Spark memory string → bytes, or None when unparseable.  Accepts
-    the JVM forms Spark does: bare bytes ('1073741824'), single-letter
-    suffixes ('16g'), and two-letter suffixes ('512mb', '16gb')."""
-    m = re.fullmatch(r"([\d.]+)([kmgt]?)b?", raw.strip().lower())
-    if m is None:
-        return None
-    units = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}
-    try:
-        return int(float(m.group(1)) * (1 << units[m.group(2)]))
-    except ValueError:
-        return None
-
-
-def _scan_bytes(source: DataFrame) -> int:
-    """Bytes of ``source``'s file scan; 'huge' when unknowable (a
-    derived/in-memory source gives no files — treat as over budget so
-    the guard fails safe toward NOT materializing).
-
-    Deployment seam: only ``file:`` URIs are resolvable here — on a
-    cluster whose inputs live on ``hdfs:``/``s3a:`` the ``os.path``
-    probe hits OSError and every frame reads as 'huge', so
-    DESERIALIZED executor-local cuts never fire there.  That is the
-    intended safe direction, and the serialized tier below still
-    applies only when bytes are known; real cluster deployments should
-    set ``$SPARK_GRAFT_CHECKPOINT_DIR`` (reliable checkpoints always
-    cut, blocks on a fault-tolerant FS) or pin an explicit budget via
-    ``$SPARK_GRAFT_LINEAGE_CUT_MAX_MB`` after sizing their executors.
-    Resolving non-file schemes through the Hadoop FileSystem API is
-    possible but adds a py4j round-trip per file to a path whose
-    cluster story is the checkpoint dir anyway.
-    """
-    files = source.inputFiles()
-    if not files:
-        return 1 << 62
-    total = 0
-    for uri in files:
-        path = uri[len("file:"):] if uri.startswith("file:") else uri
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return 1 << 62
-    return total
-
-
-# Second-tier budget for SERIALIZED executor-local cuts
-# (MEMORY_AND_DISK_SER): serialized row blocks are ~1-2x the source
-# parquet bytes (vs the 6-12x deserialized-object blowup above), unroll
-# incrementally through compact byte buffers instead of an object
-# allocation storm, and evict to local disk under pressure — so frames
-# too big for a deserialized cut can still be cut without the sf10 heap
-# OOM that motivated the guard (r13 session 4).  Budget: source scan
-# bytes up to the full heap per cut (the blocks mostly live on disk at
-# that size; what must fit transiently is one partition's serialized
-# buffer).  Above it — or when the scan mass is unknowable — the frame
-# stays UNCUT, failing safe exactly as before: a 100 TB input must not
-# be copied onto executor-local disks as a side effect of planning
-# hygiene.
-_SER_BUDGET_ENV = "SPARK_GRAFT_LINEAGE_SER_MAX_MB"
-
-
 def truncate_lineage_scaled(
     df: DataFrame,
     checkpoint_dir: str | None,
@@ -177,20 +75,15 @@ def truncate_lineage_scaled(
     - A reliable checkpoint dir (argument or $SPARK_GRAFT_CHECKPOINT_DIR)
       always cuts: the blocks land on a fault-tolerant FS, not in
       executor heap — the cluster deployment path.
-    - DESERIALIZED executor-local cuts (fast: rows are consumed as-is)
-      fire while ``source``'s scan is under heap/64 derated by
-      ``live_cuts`` (the number of concurrently-live cuts in the
-      calling query; default 3, the budget's original assumption —
-      r13 ADVICE: k-core holds 4 live edge-scale cuts, BFS up to 8
-      node-scale ones, so a flat divisor overshot the margin).
-      Override: $SPARK_GRAFT_LINEAGE_CUT_MAX_MB (absolute, per cut).
-    - Over that but under the serialized budget (source scan <= heap,
-      override $SPARK_GRAFT_LINEAGE_SER_MAX_MB): cut with
-      MEMORY_AND_DISK_SER storage — compact serialized blocks that
-      spill to disk, keeping the planning/broadcast dedup the cut buys
-      without the deserialized-row heap storm (r13's sf10 OOM).
-    - Above both (or unknowable mass): ``df`` is returned UNCUT —
-      results are identical either way (a cut never changes
+    - Otherwise ``scale.cut_tier`` picks the executor-local tier from
+      ``source``'s scan bytes, the heap and ``live_cuts`` (the number
+      of concurrently-live cuts in the calling query; default 3, the
+      budget's original assumption).  DESERIALIZED cuts are fast: rows
+      are consumed as-is.  SERIALIZED cuts (MEMORY_AND_DISK_SER) keep
+      the planning/broadcast dedup the cut buys without the
+      deserialized-row heap storm (r13's sf10 OOM).
+    - Above both budgets (or unknowable mass): ``df`` is returned UNCUT
+      — results are identical either way (a cut never changes
       expressions), duplicated subtrees are deduped physically by
       runtime exchange reuse, and the fixed planning overhead the cut
       saves is amortized by the very scale that made it unsafe.
@@ -209,21 +102,10 @@ def truncate_lineage_scaled(
         checkpoint_dir = os.environ.get(CHECKPOINT_DIR_ENV) or None
     if checkpoint_dir is not None:
         return truncate_lineage(df, checkpoint_dir, eager=eager)
-    env = os.environ.get(_CUT_BUDGET_ENV)
-    heap = _heap_bytes(df)
-    budget = (
-        int(float(env) * (1 << 20))
-        if env
-        else heap * 3 // (_CUT_HEAP_FRACTION * max(1, live_cuts))
-    )
-    scan = _scan_bytes(source)
-    if scan <= budget:
+    tier = scale.cut_tier(df, source, live_cuts)
+    if tier == "deserialized":
         return truncate_lineage(df, None, eager=eager)
-    if not serialized_tier:
-        return df
-    ser_env = os.environ.get(_SER_BUDGET_ENV)
-    ser_budget = int(float(ser_env) * (1 << 20)) if ser_env else heap
-    if scan <= ser_budget:
+    if tier == "serialized" and serialized_tier:
         from pyspark import StorageLevel
 
         # PySpark's MEMORY_AND_DISK is the SERIALIZED level (JVM

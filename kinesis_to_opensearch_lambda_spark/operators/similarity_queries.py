@@ -8,6 +8,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import scale
 from ..functions import SQL_DOT, cosine, sql_cosine
 
 SQL_DOT_SELF = SQL_DOT.format(a='embedding', b='embedding')
@@ -1294,24 +1295,6 @@ _CAPPED_SRP_CACHE: dict[tuple[str, str, int], DataFrame] = {}
 _SRP_INDEX_DIRS: list[str] = []
 
 
-def _srp_index_buckets(spark: SparkSession) -> int:
-    """Storage-bucket count for the persisted SRP index (r13: derived,
-    not the constant 8).  The bucketed candidate SMJ runs one task per
-    storage bucket, so the constant capped the whole kNN family at 8-way
-    parallelism on a 32-core session (and would do the same on a
-    1000-core cluster).  Default: the session's defaultParallelism,
-    floored at 8 — scale-adaptive in the guide §2 sense (the layout
-    tracks the compute width it feeds).  $SPARK_GRAFT_SRP_BUCKETS
-    overrides for deployments that pin a layout.  Storage bucketing is
-    pure layout: results are bucket-count-invariant (oracle-checked)."""
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_SRP_BUCKETS")
-    if env:
-        return max(1, int(env))
-    return max(8, spark.sparkContext.defaultParallelism)
-
-
 def _cleanup_srp_index_dirs() -> None:
     import shutil
 
@@ -1368,7 +1351,7 @@ def _capped_srp_table(spark: SparkSession, sf_dir: str, t: int) -> DataFrame:
         atexit.register(_cleanup_srp_index_dirs)
     _SRP_INDEX_DIRS.append(d)
     name = f"knn_srp_idx_{uuid.uuid4().hex[:12]}"
-    nb_store = _srp_index_buckets(spark)
+    nb_store = scale.srp_index_buckets(spark)
     (
         capped.select("vec_id", "embedding", "bucket", "sub")
         # ONE file per storage bucket keeps the per-bucket (bucket,

@@ -15,12 +15,12 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import scale
 from ..queries import register
 from ..sinks import OpenSearchBulkSink, SplunkHECSink, SpoolDirTransport
 from ..sources.batch import fan_out, load_table
 from ..sources.kinesis import audit_events_from_events, kinesis_envelope, read_envelope_stream
 from ..streaming.pipeline import decode_stream, dual_sink_fanout
-from ..streaming.width import BYTES_PER_PARTITION, source_bytes, stream_shuffle_width
 
 
 def _drain(q, timeout_s: int = 600) -> None:
@@ -124,90 +124,6 @@ def _write_mtime_batches(
             t = 1_000_000_000 + b * 100 + s
             os.utime(dst, (t, t))
     return src
-
-
-class _stream_codegen_mode:
-    """Scope ``spark.sql.codegen.factoryMode`` to NO_CODEGEN for a
-    micro-batch drain whose aggregation buffer is very wide and whose
-    per-trigger row mass is small (guide §1.2 step 2 — per-task work).
-
-    approx_count_distinct(rsd=0.005) carries a 4,330-word HLL++ buffer,
-    i.e. a 4,330-attribute aggregation schema.  Under the default
-    FALLBACK mode every projection over that schema REGENERATES its
-    Java source per task per trigger — Janino compilation is cached on
-    the source string, but building and regex-formatting the megabytes
-    of source is not (thread dump: the lone RUNNABLE executor thread
-    sits in ``CodeFormatter.stripExtraNewLinesAndComments`` for ~5 s
-    per trigger while state-store commits take 40 ms).  Interpreted
-    projections skip source generation entirely; for a kilobyte-scale
-    micro-batch the per-row interpretation penalty is noise next to
-    the fixed codegen cost (measured at sf0.1: drain 27 s -> 11 s).
-
-    The flip is byte-derived like ``stream_shuffle_width``: only a
-    source below 64 MB per the whole drain gets NO_CODEGEN — a 100 TB
-    firehose batch keeps codegen, whose per-row wins then dominate the
-    fixed source-generation cost.  ``$SPARK_GRAFT_STREAM_CODEGEN``
-    (``FALLBACK`` / ``NO_CODEGEN`` / ``CODEGEN_ONLY``) pins deployments
-    that want their own.  Restored after the drain; projection mode is
-    pure execution strategy (results bit-identical — the HLL++ update
-    and merge are the same imperative algorithm either way)."""
-
-    def __init__(self, spark: SparkSession, src_dir: str):
-        import os
-
-        self.spark = spark
-        self.prev = spark.conf.get(
-            "spark.sql.codegen.factoryMode", "FALLBACK"
-        )
-        env = os.environ.get("SPARK_GRAFT_STREAM_CODEGEN")
-        if env:
-            self.mode = env
-            return
-        small = source_bytes(src_dir) < BYTES_PER_PARTITION
-        self.mode = "NO_CODEGEN" if small else self.prev
-
-    def __enter__(self):
-        self.spark.conf.set("spark.sql.codegen.factoryMode", self.mode)
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.codegen.factoryMode", self.prev)
-        return False
-
-
-class _stream_scan_split:
-    """Scope ``spark.sql.files.maxPartitionBytes`` so ONE micro-batch's
-    source files spread across the session's cores (guide §6: input
-    split size is the scan-parallelism dial).
-
-    A micro-batch trigger reads only its own few files; with the batch
-    mass far below the session's (batch-fleet-sized) 128 MB split, the
-    whole trigger bin-packs into one task and the per-row scan-stage
-    work (minhash shingling here) runs single-core.  Split size here =
-    max(1 MB, per-batch bytes / defaultParallelism), never raised above
-    the session value — a 100 TB firehose batch keeps the session's
-    split size, the test corpus splits per-file.  Restored after the
-    drain; split size is pure scan layout (results invariant).
-    """
-
-    def __init__(self, spark: SparkSession, src_dir: str, n_batches: int):
-        self.spark = spark
-        self.prev = spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728"
-        )
-        prev_bytes = int("".join(c for c in self.prev if c.isdigit()))
-        total = source_bytes(src_dir)
-        width = max(1, spark.sparkContext.defaultParallelism)
-        per = max(1 << 20, -(-total // max(1, n_batches) // width))
-        self.val = str(min(prev_bytes, per))
-
-    def __enter__(self):
-        self.spark.conf.set("spark.sql.files.maxPartitionBytes", self.val)
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.files.maxPartitionBytes", self.prev)
-        return False
 
 
 @register(
@@ -492,8 +408,9 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # output mass keeps the full fleet busy).  Exact counts both
         # sides are known from the already-materialized ids.count().
         pair_mass = (n_events // 3) ** 2 // key_mod
-        ssj_width = -(-pair_mass // 1_000_000)
-        with stream_shuffle_width(spark, d, width=ssj_width):
+        with scale.scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": scale.rows_width(spark, pair_mass)}
+        ):
             q = (
                 joined.select("its")
                 .writeStream.outputMode("append")
@@ -1231,8 +1148,11 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         name = f"sess_{uuid.uuid4().hex[:12]}"
         # JVM-stateful session-window aggregate: per-partition
         # store-commit overhead dominates at micro-batch scale, so the
-        # width derives from source bytes (see stream_shuffle_width)
-        with stream_shuffle_width(spark, src):
+        # width derives from source bytes (see scale.stream_width)
+        nbytes = scale.source_bytes(src)
+        with scale.scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": scale.stream_width(spark, nbytes)}
+        ):
             q = (
                 agg.writeStream.outputMode("append")
                 .format("memory")
@@ -1351,9 +1271,16 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         # additionally makes FALLBACK-mode projection codegen regenerate
         # megabytes of Java source per task per trigger (~5 s/trigger of
         # pure source formatting at any row count — see
-        # _stream_codegen_mode); interpreted projections cut the drain
+        # scale.codegen_mode); interpreted projections cut the drain
         # 27 s -> 11 s at sf0.1 with bit-identical results.
-        with stream_shuffle_width(spark, src), _stream_codegen_mode(spark, src):
+        nbytes = scale.source_bytes(src)
+        with scale.scoped_conf(
+            spark,
+            {
+                "spark.sql.shuffle.partitions": scale.stream_width(spark, nbytes),
+                "spark.sql.codegen.factoryMode": scale.codegen_mode(spark, nbytes),
+            },
+        ):
             q = (
                 agg.writeStream.outputMode("append")
                 .format("memory")
@@ -1469,7 +1396,7 @@ def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Each batch lands as w files (not one): the per-row shingle +
         # minhash fold — the dominant per-trigger cost — runs in the
         # SCAN stage, and a single-file batch pins that whole stage to
-        # one task (see _stream_scan_split).
+        # one task (see scale.scan_split).
         w = max(1, min(8, spark.sparkContext.defaultParallelism))
         src = _write_mtime_batches(
             corpus,
@@ -1494,8 +1421,15 @@ def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # frames per trigger instead of O(band vocabulary); verdicts
         # are computed per band value inside the bucket, so results
         # are bucket-count-invariant (see streaming.stateful).
-        with _stream_scan_split(spark, src, 3), stream_shuffle_width(
-            spark, src
+        nbytes = scale.source_bytes(src)
+        with scale.scoped_conf(
+            spark,
+            {
+                "spark.sql.files.maxPartitionBytes": scale.scan_split(
+                    spark, nbytes, 3
+                ),
+                "spark.sql.shuffle.partitions": scale.stream_width(spark, nbytes),
+            },
         ):
             q = (
                 band_first_seen(bands.select("doc_id", "band_idx", "band_val"))
@@ -1610,7 +1544,10 @@ def streaming_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         name = f"qf_{uuid.uuid4().hex[:12]}"
-        with stream_shuffle_width(spark, src):
+        nbytes = scale.source_bytes(src)
+        with scale.scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": scale.stream_width(spark, nbytes)}
+        ):
             q = (
                 agg.writeStream.outputMode("update")
                 .format("memory")

@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_session(
@@ -68,10 +68,7 @@ def get_session(
         # drivers; on this single-tenant 16g driver 4g is safe headroom.
         # Engine queries never collect unbounded results (plan-tested),
         # so this only widens the HARNESS ceiling, not query behavior.
-        .config(
-            "spark.driver.maxResultSize",
-            os.environ.get("SPARK_GRAFT_MAX_RESULT_SIZE", "4g"),
-        )
+        .config("spark.driver.maxResultSize", "4g")
         # InferFiltersFromGenerate duplicates the ENTIRE generator
         # expression into a size(...)>0 pre-filter.  For cheap
         # generators that is harmless; for shingle/n-gram transforms it

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import scale
+
 OUTPUT_SCHEMA = "user_id bigint, total_events bigint, total_value double"
 STATE_SCHEMA = "n bigint, v double"
 
@@ -187,27 +189,17 @@ def _band_first_seen(
     )
 
 
-def band_first_seen(bands: DataFrame, n_buckets: int | None = None) -> DataFrame:
+def band_first_seen(bands: DataFrame) -> DataFrame:
     """Streaming first-seen marker over LSH band buckets: input columns
     (doc_id, band_idx, band_val); one (doc_id, hit) row out per input
     row, hit=1 iff an earlier-arrival doc shares the band.
 
-    ``n_buckets`` sizes the state grouping (default: 4x the session's
-    default parallelism — enough groups to spread over every core with
-    a small per-task multiplicity; env ``SPARK_GRAFT_STREAM_STATE_BUCKETS``
-    overrides).  Bucket count is pure layout: verdicts are computed per
-    band value inside the bucket, so results are bucket-count-invariant."""
-    import os
-
+    The state grouping has ``scale.band_state_buckets`` buckets.  Bucket
+    count is pure layout: verdicts are computed per band value inside
+    the bucket, so results are bucket-count-invariant."""
     from pyspark.sql import functions as F
 
-    if n_buckets is None:
-        env = os.environ.get("SPARK_GRAFT_STREAM_STATE_BUCKETS")
-        n_buckets = (
-            int(env)
-            if env
-            else 4 * bands.sparkSession.sparkContext.defaultParallelism
-        )
+    n_buckets = scale.band_state_buckets(bands.sparkSession)
     keyed = bands.select(
         "doc_id",
         F.concat_ws(

@@ -247,17 +247,15 @@ def test_clique_chain_like_lsh_bridges():
     assert all(v == 0 for v in history[-1].values())
 
 
-def test_cc_loop_width_invariant_and_conf_restored(spark):
+def test_cc_loop_width_invariant_and_conf_restored(spark, monkeypatch):
     """r13 scoped the propagation loop's shuffle width to the edge mass
-    (SPARK_GRAFT_CC_SHUFFLE overrides).  Labels must be identical at
-    width 1 and the session width (min-label algebra is per-key), and
-    the session conf must be restored afterward — including on the
-    unconverged-RuntimeError exit path."""
-    import os
-
+    (scale.rows_width).  Labels must be identical at width 1 and a
+    wider width (min-label algebra is per-key), and the session conf
+    must be restored afterward — including on the unconverged-
+    RuntimeError exit path."""
     import pytest
-    from pyspark.sql import functions as F
 
+    from kinesis_to_opensearch_lambda_spark import scale
     from kinesis_to_opensearch_lambda_spark.operators.dedup import (
         connected_components,
     )
@@ -269,13 +267,17 @@ def test_cc_loop_width_invariant_and_conf_restored(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     results = {}
     for w in ("1", "4"):
-        os.environ["SPARK_GRAFT_CC_SHUFFLE"] = w
-        try:
-            results[w] = sorted(
-                tuple(r) for r in connected_components(pairs).collect()
-            )
-        finally:
-            del os.environ["SPARK_GRAFT_CC_SHUFFLE"]
+        widths = []
+
+        def loop_width(spark, n_rows, w=w):
+            widths.append(spark.conf.get("spark.sql.shuffle.partitions"))
+            return int(w)
+
+        monkeypatch.setattr(scale, "rows_width", loop_width)
+        results[w] = sorted(
+            tuple(r) for r in connected_components(pairs).collect()
+        )
+        assert widths == [prev]  # chosen once, before the scope narrows it
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     assert results["1"] == results["4"]
     assert {c for _, c in results["1"]} == {1, 10, 20}

@@ -68,12 +68,13 @@ def test_empty_env_var_means_local(spark, monkeypatch):
 # are now guarded by the source scan's bytes vs an executor-heap
 # budget, and a reliable checkpoint dir (disk, not heap) always cuts.
 
+from kinesis_to_opensearch_lambda_spark import scale  # noqa: E402
 from kinesis_to_opensearch_lambda_spark.operators.lineage import (  # noqa: E402
-    _CUT_BUDGET_ENV,
-    _SER_BUDGET_ENV,
-    _heap_bytes,
-    _parse_mem,
     truncate_lineage_scaled,
+)
+from kinesis_to_opensearch_lambda_spark.scale import (  # noqa: E402
+    heap_bytes,
+    parse_mem,
 )
 
 
@@ -83,9 +84,14 @@ def _parquet_df(spark, tmp_path):
     return spark.read.parquet(p)
 
 
+def _heap(monkeypatch, nbytes: int) -> None:
+    """Pin the heap probe: the cut budgets derive from it."""
+    monkeypatch.setattr(scale, "heap_bytes", lambda df: nbytes)
+
+
 def test_scaled_cut_fires_under_budget(spark, tmp_path, monkeypatch):
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.setenv(_CUT_BUDGET_ENV, "10240")  # 10 GiB: tiny file fits
+    _heap(monkeypatch, 1 << 40)  # 1 TiB heap: the tiny file fits
     src = _parquet_df(spark, tmp_path)
     out = truncate_lineage_scaled(src.selectExpr("id * 2 AS v"), None, source=src)
     assert out is not src
@@ -99,9 +105,10 @@ def test_scaled_cut_over_deser_budget_cuts_serialized(spark, tmp_path, monkeypat
     # the cut still fires — with MEMORY_AND_DISK_SER blocks (compact,
     # disk-spilling) instead of deserialized row objects.
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.setenv(_CUT_BUDGET_ENV, "0.000001")  # ~1 byte: deser never fits
-    monkeypatch.delenv(_SER_BUDGET_ENV, raising=False)  # default: heap
     src = _parquet_df(spark, tmp_path)
+    # heap == scan: the deser budget (3/192 of it) never fits, the
+    # serialized one (the whole heap) just does
+    _heap(monkeypatch, scale.scan_bytes(src))
     derived = src.selectExpr("id * 2 AS v")
     out = truncate_lineage_scaled(derived, None, source=src, eager=True)
     assert out is not derived
@@ -116,8 +123,7 @@ def test_scaled_cut_over_deser_budget_cuts_serialized(spark, tmp_path, monkeypat
 
 def test_scaled_cut_lapses_over_both_budgets(spark, tmp_path, monkeypatch):
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.setenv(_CUT_BUDGET_ENV, "0.000001")  # ~1 byte: nothing fits
-    monkeypatch.setenv(_SER_BUDGET_ENV, "0.000001")
+    _heap(monkeypatch, 1)  # 1 byte: nothing fits
     src = _parquet_df(spark, tmp_path)
     derived = src.selectExpr("id * 2 AS v")
     out = truncate_lineage_scaled(derived, None, source=src)
@@ -131,9 +137,8 @@ def test_scaled_cut_serialized_tier_opt_out(spark, tmp_path, monkeypatch):
     # references are already deduped by runtime exchange reuse (BFS
     # und / random-walk indexed, measured 2x slower serialized at sf10).
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.setenv(_CUT_BUDGET_ENV, "0.000001")
-    monkeypatch.delenv(_SER_BUDGET_ENV, raising=False)
     src = _parquet_df(spark, tmp_path)
+    _heap(monkeypatch, scale.scan_bytes(src))  # serialized tier would fit
     derived = src.selectExpr("id * 2 AS v")
     out = truncate_lineage_scaled(
         derived, None, source=src, serialized_tier=False
@@ -142,33 +147,37 @@ def test_scaled_cut_serialized_tier_opt_out(spark, tmp_path, monkeypatch):
 
 
 def test_scaled_cut_live_cuts_derates_budget(spark, tmp_path, monkeypatch):
-    # With the serialized tier pinned shut, an absurd live-cut count
+    # With the serialized tier opted out, an absurd live-cut count
     # shrinks the per-cut deserialized budget to ~0 → uncut; the
-    # default count keeps the tiny file well under budget → cut.
+    # default count keeps the file exactly at budget → cut.
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.delenv(_CUT_BUDGET_ENV, raising=False)
-    monkeypatch.setenv(_SER_BUDGET_ENV, "0.000001")
     src = _parquet_df(spark, tmp_path)
+    # deser budget at 3 live cuts = 3 * heap / (64 * 3) = scan bytes
+    _heap(monkeypatch, 64 * scale.scan_bytes(src))
     derived = src.selectExpr("id * 2 AS v")
     assert (
-        truncate_lineage_scaled(derived, None, source=src, live_cuts=10**9)
+        truncate_lineage_scaled(
+            derived, None, source=src, live_cuts=10**9, serialized_tier=False
+        )
         is derived
     )
     assert (
-        truncate_lineage_scaled(derived, None, source=src, live_cuts=3)
+        truncate_lineage_scaled(
+            derived, None, source=src, live_cuts=3, serialized_tier=False
+        )
         is not derived
     )
 
 
 def test_parse_mem_accepts_spark_forms_and_degrades():
-    assert _parse_mem("16g") == 16 * (1 << 30)
-    assert _parse_mem("512mb") == 512 * (1 << 20)
-    assert _parse_mem("16GB") == 16 * (1 << 30)
-    assert _parse_mem("1tb") == 1 << 40
-    assert _parse_mem("1073741824") == 1 << 30
-    assert _parse_mem("2.5g") == int(2.5 * (1 << 30))
-    assert _parse_mem("watermelon") is None
-    assert _parse_mem("") is None
+    assert parse_mem("16g") == 16 * (1 << 30)
+    assert parse_mem("512mb") == 512 * (1 << 20)
+    assert parse_mem("16GB") == 16 * (1 << 30)
+    assert parse_mem("1tb") == 1 << 40
+    assert parse_mem("1073741824") == 1 << 30
+    assert parse_mem("2.5g") == int(2.5 * (1 << 30))
+    assert parse_mem("watermelon") is None
+    assert parse_mem("") is None
 
 
 @pytest.mark.parametrize(
@@ -195,13 +204,12 @@ def test_heap_bytes_reads_driver_heap_only_in_process(master, heap_gb):
             sparkContext=SimpleNamespace(getConf=lambda: conf)
         )
     )
-    assert _heap_bytes(df) == heap_gb << 30
+    assert heap_bytes(df) == heap_gb << 30
 
 
 def test_scaled_cut_unknown_source_fails_safe(spark, monkeypatch):
     # a derived/in-memory source exposes no files: treat as over budget
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
-    monkeypatch.delenv(_CUT_BUDGET_ENV, raising=False)
     src = spark.range(10)
     derived = src.selectExpr("id + 1 AS v")
     out = truncate_lineage_scaled(derived, None, source=src)
@@ -211,7 +219,7 @@ def test_scaled_cut_unknown_source_fails_safe(spark, monkeypatch):
 def test_scaled_cut_reliable_dir_always_cuts(spark, tmp_path, monkeypatch):
     # over-budget locally, but a reliable dir stores blocks on disk,
     # not executor heap — the cluster deployment path always cuts
-    monkeypatch.setenv(_CUT_BUDGET_ENV, "0.000001")
+    _heap(monkeypatch, 1)
     ckpt = str(tmp_path / "reliable")
     monkeypatch.setenv(CHECKPOINT_DIR_ENV, ckpt)
     src = _parquet_df(spark, tmp_path)

@@ -12,6 +12,7 @@ import time
 import pyspark.sql.functions as F
 import pytest
 
+from kinesis_to_opensearch_lambda_spark import scale
 from kinesis_to_opensearch_lambda_spark.sinks import (
     OpenSearchBulkSink,
     SplunkHECSink,
@@ -24,7 +25,6 @@ from kinesis_to_opensearch_lambda_spark.streaming.pipeline import (
     dual_sink_fanout,
     hourly_counts,
 )
-from kinesis_to_opensearch_lambda_spark.streaming.width import stream_shuffle_width
 
 from .test_transforms import FULL_RECORD
 
@@ -548,64 +548,56 @@ def test_streaming_dedup_minhash_semantics(spark):
     assert twins, "no mutated twin was suppressed"
 
 
-def test_stream_codegen_mode_scoping_and_invariance(spark, tmp_path, monkeypatch):
-    """r13: _stream_codegen_mode flips factoryMode to NO_CODEGEN only
-    for a sub-64MB micro-batch source (the 4,330-word HLL buffer's
-    projection-source regeneration dominates small drains), honors the
-    env pin, restores the session value on exit — and the HLL drain's
-    rows are identical in both modes (projection mode is execution
-    strategy, never semantics)."""
+def test_stream_codegen_mode_scoping_and_invariance(spark, monkeypatch):
+    """r13: scale.codegen_mode picks NO_CODEGEN only for a sub-64MB
+    micro-batch source (the 4,330-word HLL buffer's projection-source
+    regeneration dominates small drains), the scope restores the session
+    value on exit — and the HLL drain's rows are identical in both modes
+    (projection mode is execution strategy, never semantics)."""
     from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
-    from kinesis_to_opensearch_lambda_spark.operators.streaming_queries import (
-        _stream_codegen_mode,
-    )
 
-    prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    small = tmp_path / "src"
-    small.mkdir()
-    (small / "b0.parquet").write_bytes(b"x" * 1024)
-    with _stream_codegen_mode(spark, str(small)) as m:
-        assert m.mode == "NO_CODEGEN"
-        assert spark.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
-    assert spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK") == prev
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_CODEGEN", "CODEGEN_ONLY")
-    with _stream_codegen_mode(spark, str(small)) as m:
-        assert m.mode == "CODEGEN_ONLY"
-    assert spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK") == prev
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_CODEGEN")
+    key = "spark.sql.codegen.factoryMode"
+    prev = spark.conf.get(key, "FALLBACK")
+    assert scale.codegen_mode(spark, 1024) == "NO_CODEGEN"
+    assert scale.codegen_mode(spark, scale.BYTES_PER_PARTITION) == prev
+    with scale.scoped_conf(spark, {key: scale.codegen_mode(spark, 1024)}):
+        assert spark.conf.get(key) == "NO_CODEGEN"
+    assert spark.conf.get(key, "FALLBACK") == prev
 
     sf_dir = "/root/testdata/sf0.001"
     build = REGISTRY["streaming_sketch_distinct"].spark
 
     def rows(mode: str):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_CODEGEN", mode)
-        try:
-            return sorted(map(tuple, build(spark, sf_dir).collect()))
-        finally:
-            monkeypatch.delenv("SPARK_GRAFT_STREAM_CODEGEN")
+        seen = []
+
+        def forced(spark, nbytes):
+            seen.append(mode)
+            return mode
+
+        monkeypatch.setattr(scale, "codegen_mode", forced)
+        out = sorted(map(tuple, build(spark, sf_dir).collect()))
+        assert seen == [mode]  # the drain ran under the forced mode
+        assert spark.conf.get(key, "FALLBACK") == prev
+        return out
 
     assert rows("NO_CODEGEN") == rows("FALLBACK")
 
 
-def test_stream_shuffle_width_explicit_width(spark, tmp_path, monkeypatch):
+def test_stream_shuffle_width_explicit_width(spark):
     """r13: the stream-stream join derives its width from candidate-pair
-    mass and passes it explicitly; the scope must clamp it to [1,
-    session width], let the env pin win, and restore the session conf."""
+    mass; the width is clamped to [1, session width], and the scope
+    restores the session conf."""
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    with stream_shuffle_width(spark, str(tmp_path), width=6) as w:
-        assert w.width == min(6, int(prev))
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(w.width)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    with stream_shuffle_width(spark, str(tmp_path), width=10**9) as w:
-        assert w.width == int(prev)  # clamped to the session width
-    with stream_shuffle_width(spark, str(tmp_path), width=0) as w:
-        assert w.width == 1  # floor
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
-    with stream_shuffle_width(spark, str(tmp_path), width=7) as w:
-        assert w.width == 3  # env pin beats the derived width
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    w = scale.shuffle_width(spark, 6)
+    assert w == min(6, int(prev))
+    with scale.scoped_conf(spark, {key: w}):
+        assert spark.conf.get(key) == str(w)
+    assert spark.conf.get(key) == prev
+    assert scale.shuffle_width(spark, 10**9) == int(prev)  # session width
+    assert scale.shuffle_width(spark, 0) == 1  # floor
+    assert scale.rows_width(spark, 5_500_000) == min(6, int(prev))
 
 
 def test_stream_stream_join_sides_take_two_tasks(spark):

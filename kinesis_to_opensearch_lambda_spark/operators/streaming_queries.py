@@ -1,17 +1,21 @@
-"""Oracle-checked streaming query: the full reference lifecycle —
-envelope source -> decode -> foreachBatch dual-sink fan-out — driven to
-completion with Trigger.AvailableNow, with delivered counts compared to
-the batch ground truth.
+"""Oracle-checked streaming queries.  Every entry drives a real
+StreamingQuery to completion and compares what it drained with a batch
+oracle; the oracles are exact because a drain of a fixed set of source
+files is deterministic.
 
-This is the one `queries()` entry that runs an actual StreamingQuery;
-its oracle is exact because the availableNow drain is deterministic and
-both sinks count via accumulators (R17).
+Most entries drain mtime-ordered parquet micro-batches
+(`_write_mtime_batches`) with Trigger.AvailableNow into a memory sink
+(`_drain_to_view`).  `streaming_fanout_counts` runs the full reference
+lifecycle — envelope source -> decode -> foreachBatch dual-sink fan-out —
+and reads both sinks' delivered counts from their accumulators.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,6 +47,29 @@ def _drain(q, timeout_s: int = 600) -> None:
         )
 
 
+def _drain_to_view(
+    frame: DataFrame, mode: str, d: str, conf: dict[str, object] | None = None
+) -> DataFrame:
+    """Drain the streaming ``frame`` with availableNow into a memory sink
+    in output ``mode``, checkpointed under ``d``, and return the sink's
+    table.  ``conf`` holds for the start and the drain only.  The sink
+    keeps its rows in the driver, so the table stays readable after
+    ``d`` is removed."""
+    spark = frame.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    with scale.scoped_conf(spark, conf or {}):
+        q = (
+            frame.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", f"{d}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        _drain(q)
+    return spark.table(name)
+
+
 def _write_mtime_batches(
     df: DataFrame,
     batch_col,
@@ -51,37 +78,35 @@ def _write_mtime_batches(
     payload: list[str] | None = None,
     sub_col=None,
     files_per_batch: int = 1,
-) -> str:
-    """Write ``df`` as ``n_batches`` mtime-ordered single-file parquet
-    micro-batch sources in ONE pass (r13 optimization).
+) -> tuple[DataFrame, str]:
+    """Write ``df`` as ``n_batches`` mtime-ordered parquet micro-batch
+    sources in ONE job, and return the stream over them with its source
+    directory.
 
-    The pre-r13 builders ran one ``filter(batch == b).coalesce(1)``
-    write job per batch — N full scans of the (possibly derived) input
-    plus N sequential single-task writes.  A ``partitionBy`` write of
-    the batch key does the same work in one job: ``repartition(n, key)``
-    puts every batch in exactly one task, so each ``_b=<b>/`` dir holds
-    exactly ONE part file, which is then moved to ``src/b<b>.parquet``
-    with a pinned mtime (the file source drains oldest-mtime-first).
-    Row order WITHIN a batch file becomes shuffle-dependent — callers
-    must be row-order-insensitive within a micro-batch (the stateful
-    consumers sort by key; the aggregating consumers group), which is
-    also the only honest assumption for a real distributed source.
+    A ``partitionBy`` write of the batch key after ``repartition(n,
+    key)`` puts every batch in exactly one task, so each ``_b=<b>/`` dir
+    holds exactly ONE part file, which is then moved to
+    ``src/b<b>.parquet`` with a pinned mtime (the file source drains
+    oldest-mtime-first).  Row order WITHIN a batch file is
+    shuffle-dependent — callers must be row-order-insensitive within a
+    micro-batch (the stateful consumers sort by key; the aggregating
+    consumers group), which is also the only honest assumption for a
+    real distributed source.
 
     ``payload`` selects the columns written to the source files
     (default: all of ``df``'s columns) — for builders whose batch key
-    derives from a column the stream schema does not carry.
+    derives from a column the stream schema does not carry.  The
+    stream's schema is the payload's.
 
     ``files_per_batch`` > 1 splits every micro-batch into that many
     source files (``sub_col`` must then supply a deterministic
     in-batch split key, e.g. ``doc_id % files_per_batch``); mtimes
-    order every file of batch b before any file of batch b+1, so a
-    reader with ``maxFilesPerTrigger=files_per_batch`` consumes exactly
-    one batch per trigger while the scan stage parallelizes across the
-    batch's files — the honest shape of a real distributed stream
-    batch (a firehose shard group never lands as one file).
+    order every file of batch b before any file of batch b+1, and the
+    stream reads ``maxFilesPerTrigger=files_per_batch``, so it consumes
+    exactly one batch per trigger while the scan stage parallelizes
+    across the batch's files — the honest shape of a real distributed
+    stream batch (a firehose shard group never lands as one file).
     """
-    import os
-
     payload = list(payload or df.columns)
     w = files_per_batch
     tmp = f"{d}/tmp_parts"
@@ -111,7 +136,7 @@ def _write_mtime_batches(
             )
             if parts:
                 shutil.move(f"{pdir}/{parts[0]}", dst)
-            else:  # empty batch: preserve the pre-r13 empty-file behavior
+            else:  # empty batch: a schema-bearing empty file keeps its trigger
                 df.select(*payload).limit(0).coalesce(1).write.mode(
                     "overwrite"
                 ).parquet(f"{tmp}/empty{b}_{s}")
@@ -123,7 +148,12 @@ def _write_mtime_batches(
                 shutil.move(f"{tmp}/empty{b}_{s}/{part}", dst)
             t = 1_000_000_000 + b * 100 + s
             os.utime(dst, (t, t))
-    return src
+    stream = (
+        df.sparkSession.readStream.schema(df.select(*payload).schema)
+        .option("maxFilesPerTrigger", w)
+        .parquet(src)
+    )
+    return stream, src
 
 
 @register(
@@ -138,8 +168,9 @@ def _write_mtime_batches(
     "(availableNow). Both sinks must deliver every event exactly once.",
 )
 def streaming_fanout_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = tempfile.mkdtemp(prefix="stream_fanout_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_fanout_", ignore_cleanup_errors=True
+    ) as d:
         events = fan_out(load_table(spark, sf_dir, "events"))
         env = kinesis_envelope(audit_events_from_events(events))
         env.write.mode("overwrite").parquet(f"{d}/src")
@@ -157,8 +188,6 @@ def streaming_fanout_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("opensearch", es.last_success),
             ("splunk", hec.last_success),
         ]
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(rows, "sink: string, n_delivered: bigint")
 
 
@@ -196,13 +225,11 @@ def streaming_fanout_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Boundary-tie-free: the watermark (xx:45) never equals a window end.",
 )
 def streaming_watermark_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
-    d = tempfile.mkdtemp(prefix="stream_wm_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_wm_", ignore_cleanup_errors=True
+    ) as d:
         ids = load_table(spark, sf_dir, "events").select("event_id")
         src = ids.select(
             "event_id",
@@ -215,42 +242,24 @@ def streaming_watermark_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(1))
             .alias("batch"),
         )
-        # one partitioned write (see _write_mtime_batches); watermark
-        # advance and late-drop decisions depend only on each batch's
-        # max event time and membership, never on in-file row order
-        src_dir = _write_mtime_batches(
+        # watermark advance and late-drop decisions depend only on each
+        # batch's max event time and membership, never on in-file row order
+        stream, _ = _write_mtime_batches(
             src, F.col("batch") - 1, d, 3, payload=["event_id", "ts"]
-        )
-        name = f"wm_{uuid.uuid4().hex[:12]}"
-        stream = (
-            spark.readStream.schema("event_id bigint, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
         )
         agg = (
             stream.withWatermark("ts", "210 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w"))
             .agg(F.count("*").alias("n"))
         )
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
         # update-mode sink holds one row per (window, batch-with-change);
         # counts only grow, so max(n) per window is the final state
-        upd = spark.table(name)
+        upd = _drain_to_view(agg, "update", d)
         return upd.groupBy(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
                 "window_start"
             )
         ).agg(F.max("n").alias("n_events"))
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _one_task_per_side(both: DataFrame) -> DataFrame:
@@ -304,12 +313,11 @@ def _one_task_per_side(both: DataFrame) -> DataFrame:
     "the same count, so parity holds at every scale.",
 )
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
-    d = tempfile.mkdtemp(prefix="stream_ssj_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_ssj_", ignore_cleanup_errors=True
+    ) as d:
         ids = load_table(spark, sf_dir, "events").select("event_id")
         # key_mod mirrors the oracle's km CTE exactly (same count, same
         # formula); .count() here is a cheap parquet-metadata action
@@ -330,15 +338,13 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " (event_id div 3) % 30, 0)"
             ).alias("cts"),
         )
-        # ONE write job for both sides (r14): the two per-side
-        # coalesce(1) writes each re-scanned events; a union tagged by
-        # side + one 2-task partitioned write (see _one_task_per_side)
-        # lands one file per side (the join and the post-hoc aggregate
-        # are row-order-insensitive, so in-file order is immaterial).
-        # Generic (key, ts) column names in the files; each side renames
-        # on read, keeping the join/oracle shapes byte-identical.
-        import os as _os
-
+        # ONE write job for both sides, so events is scanned once: a
+        # union tagged by side + one 2-task partitioned write (see
+        # _one_task_per_side) lands one file per side (the join and the
+        # post-hoc aggregate are row-order-insensitive, so in-file order
+        # is immaterial).  Generic (key, ts) column names in the files;
+        # each side renames on read, keeping the join/oracle shapes
+        # byte-identical.
         both = imp.select(
             F.lit(0).alias("_side"), F.col("k").alias("key"), F.col("its").alias("ts")
         ).unionByName(
@@ -352,10 +358,10 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         _one_task_per_side(both).write.partitionBy("_side").parquet(tmp)
         for side, sub in ((0, "imp"), (1, "clk")):
             pdir = f"{tmp}/_side={side}"
-            _os.makedirs(f"{d}/{sub}", exist_ok=True)
+            os.makedirs(f"{d}/{sub}", exist_ok=True)
             parts = (
-                [f for f in _os.listdir(pdir) if f.startswith("part-")]
-                if _os.path.isdir(pdir)
+                [f for f in os.listdir(pdir) if f.startswith("part-")]
+                if os.path.isdir(pdir)
                 else []
             )
             if parts:
@@ -366,7 +372,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).parquet(f"{tmp}/empty{side}")
                 part = next(
                     f
-                    for f in _os.listdir(f"{tmp}/empty{side}")
+                    for f in os.listdir(f"{tmp}/empty{side}")
                     if f.startswith("part-")
                 )
                 shutil.move(f"{tmp}/empty{side}/{part}", f"{d}/{sub}/data.parquet")
@@ -429,10 +435,8 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.count(F.lit(1)).alias("n_matches"))
         )
-        # materialize before the temp dir is removed (recompute safety)
+        # the spool lives in the scratch dir: collect before it goes
         return spark.createDataFrame(agg.collect(), agg.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -456,52 +460,31 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "checkpointed incrementally; watermark/timeout bound its growth.",
 )
 def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..streaming.stateful import running_user_cents
 
-    d = tempfile.mkdtemp(prefix="stream_state_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_state_", ignore_cleanup_errors=True
+    ) as d:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
             F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
         )
-        # one partitioned write (see _write_mtime_batches); per-user
-        # totals are commutative, so in-file row order is immaterial
-        src = _write_mtime_batches(
+        # per-user totals are commutative, so in-file row order is
+        # immaterial
+        stream, _ = _write_mtime_batches(
             ev, F.col("event_id") % 3, d, 3, payload=["user_id", "cents"]
         )
-        stream = (
-            spark.readStream.schema("user_id bigint, cents bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        name = f"state_{uuid.uuid4().hex[:12]}"
-        q = (
-            running_user_cents(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
         # one emitted row per (user, batch-seen); totals are cumulative,
         # so the struct max (events strictly grow) is the final state
-        final = (
-            spark.table(name)
+        return (
+            _drain_to_view(running_user_cents(stream), "update", d)
             .groupBy("user_id")
             .agg(F.max(F.struct("total_events", "total_cents")).alias("m"))
             .select("user_id", "m.total_events", "m.total_cents")
         )
-        return final
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def state_v2_available() -> bool:
@@ -548,55 +531,28 @@ def _state_v2_doc() -> str:
 
 
 def streaming_stateful_highwater(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..streaming.stateful import running_user_highwater
 
-    d = tempfile.mkdtemp(prefix="stream_hwm_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_hwm_", ignore_cleanup_errors=True
+    ) as d:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
             F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
         )
-        os.makedirs(f"{d}/src", exist_ok=True)
-        for b in (0, 1, 2):
-            tmp = f"{d}/tmp{b}"
-            ev.filter(F.col("event_id") % 3 == b).select(
-                "user_id", "cents"
-            ).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-            dst = f"{d}/src/b{b}.parquet"
-            shutil.move(f"{tmp}/{part}", dst)
-            os.utime(dst, (1_000_000_000 + b * 100, 1_000_000_000 + b * 100))
-        stream = (
-            spark.readStream.schema("user_id bigint, cents bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/src")
+        stream, _ = _write_mtime_batches(
+            ev, F.col("event_id") % 3, d, 3, payload=["user_id", "cents"]
         )
-        name = f"hwm_{uuid.uuid4().hex[:12]}"
-        q = (
-            running_user_highwater(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
         # batch counter strictly grows, so the struct max is final state
         return (
-            spark.table(name)
+            _drain_to_view(running_user_highwater(stream), "update", d)
             .groupBy("user_id")
             .agg(F.max(F.struct("n_batches", "max_cents")).alias("m"))
             .select("user_id", "m.n_batches", "m.max_cents")
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 if state_v2_available():
@@ -628,15 +584,14 @@ if state_v2_available():
     "lambda_function.py:141).",
 )
 def streaming_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..sources.kinesis import audit_events_from_events
     from ..streaming.pipeline import split_dead_letters
 
-    d = tempfile.mkdtemp(prefix="stream_dlq_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_dlq_", ignore_cleanup_errors=True
+    ) as d:
         events = load_table(spark, sf_dir, "events")
         audit = audit_events_from_events(events)
         doc = F.to_json(F.struct(*[audit[c] for c in audit.columns]))
@@ -687,9 +642,8 @@ def streaming_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("branch")
             .agg(F.count(F.lit(1)).alias("n_records"))
         )
+        # the spools live in the scratch dir: collect before it goes
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -717,25 +671,17 @@ def streaming_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "at scale (4x state rows vs tumbling), which the watermark bounds.",
 )
 def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..streaming.pipeline import sliding_counts
 
-    d = tempfile.mkdtemp(prefix="stream_slide_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_slide_", ignore_cleanup_errors=True
+    ) as d:
         ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-        # one partitioned write (see _write_mtime_batches); windowed
-        # counts are row-order-insensitive within a micro-batch
-        src = _write_mtime_batches(
+        # windowed counts are row-order-insensitive within a micro-batch
+        stream, _ = _write_mtime_batches(
             ev, F.col("event_id") % 3, d, 3, payload=["ts"]
-        )
-        stream = (
-            spark.readStream.schema("ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
         )
         # watermark wider than the whole event-time span: batches split
         # by event_id are time-interleaved, so any tighter bound would
@@ -744,25 +690,13 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = sliding_counts(
             stream, window="1 hour", slide="15 minutes", watermark="2000 hours"
         )
-        name = f"slide_{uuid.uuid4().hex[:12]}"
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
         return (
-            spark.table(name)
+            _drain_to_view(agg, "update", d)
             .groupBy(
                 F.date_format("win_start", "yyyy-MM-dd HH:mm:ss").alias("win_start")
             )
             .agg(F.max("n").cast("bigint").alias("n_events"))
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -790,22 +724,15 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "only streaming state is the tiny per-nation count map.",
 )
 def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
-    d = tempfile.mkdtemp(prefix="stream_enrich_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_enrich_", ignore_cleanup_errors=True
+    ) as d:
         ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-        # one partitioned write (see _write_mtime_batches); the per-batch
-        # broadcast join + count aggregation are row-order-insensitive
-        src = _write_mtime_batches(ev, F.col("event_id") % 3, d, 3)
-        stream = (
-            spark.readStream.schema("event_id bigint, user_id bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        # the per-batch broadcast join + count aggregation are
+        # row-order-insensitive
+        stream, _ = _write_mtime_batches(ev, F.col("event_id") % 3, d, 3)
         dim = (
             load_table(spark, sf_dir, "customer")
             .select("c_custkey", "c_nationkey")
@@ -824,25 +751,13 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = enriched.groupBy("nation").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events")
         )
-        name = f"enrich_{uuid.uuid4().hex[:12]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
         # complete mode rewrites the whole table each batch; counts only
         # grow, so max per key == the final (fully-drained) emission
         return (
-            spark.table(name)
+            _drain_to_view(agg, "complete", d)
             .groupBy("nation")
             .agg(F.max("n_events").cast("bigint").alias("n_events"))
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -871,26 +786,20 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hidden.",
 )
 def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
-    d = tempfile.mkdtemp(prefix="stream_mv_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_mv_", ignore_cleanup_errors=True
+    ) as d:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
             F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
         )
-        # one partitioned write (see _write_mtime_batches); the MV merge
-        # aggregates commutative monoids, so in-file order is immaterial
-        src = _write_mtime_batches(
+        # the MV merge aggregates commutative monoids, so in-file order
+        # is immaterial
+        stream, _ = _write_mtime_batches(
             ev, F.col("event_id") % 3, d, 3, payload=["event_type", "cents"]
-        )
-        stream = (
-            spark.readStream.schema("event_type string, cents bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
         )
         state = {"current": None}
 
@@ -921,11 +830,8 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _drain(q)
         final = spark.read.parquet(state["current"])
-        # materialize before the temp dir disappears (recompute-safe)
-        rows = final.collect()
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        # the snapshot lives in the scratch dir: collect before it goes
+        return spark.createDataFrame(final.collect(), final.schema)
 
 
 @register(
@@ -937,7 +843,8 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Custom STREAMING source in pure Python (Spark 4 "
     "SimpleDataSourceStreamReader): the Kinesis-envelope connector's "
-    "streaming half tracks offsets as files-consumed, serves one file "
+    "streaming half tracks its offset as the high-water file NAME "
+    "(the last consumed part-* basename), serves one file "
     "per read() call (so each envelope file is its own micro-batch), "
     "and implements readBetweenOffsets for deterministic replay after "
     "restart — the exactly-once contract a checkpointed source must "
@@ -949,9 +856,6 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "codegen'd DataFrame ops (unbase64 / get_json_object / hash agg).",
 )
 def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..sources.kinesis import audit_events_from_events, kinesis_envelope
@@ -961,8 +865,9 @@ def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(KinesisEnvelopeJsonlSource)
     except Exception:  # already registered in this session
         pass
-    d = tempfile.mkdtemp(prefix="stream_pyds_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_pyds_", ignore_cleanup_errors=True
+    ) as d:
         ev = fan_out(load_table(spark, sf_dir, "events"))
         env = kinesis_envelope(audit_events_from_events(ev)).withColumn(
             "value",
@@ -975,10 +880,10 @@ def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.makedirs(f"{d}/env", exist_ok=True)
         # 3 single-file batches, named part-* for the reader's listing;
         # the envelope carries only the payload column, so split by a
-        # deterministic hash of it.  ONE partitioned text write (r13):
-        # the pre-r13 loop re-ran the envelope subtree (JSON encode +
-        # base64 over every event) once per batch; in-file row order is
-        # immaterial (the consumer is a complete-mode count aggregate).
+        # deterministic hash of it.  ONE partitioned text write runs the
+        # envelope subtree (JSON encode + base64 over every event) once;
+        # in-file row order is immaterial (the consumer is a
+        # complete-mode count aggregate).
         tmp = f"{d}/tmp_parts"
         (
             env.select(
@@ -1018,10 +923,12 @@ def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n")
         )
         name = f"pyds_{uuid.uuid4().hex[:12]}"
-        # NOT availableNow: the prefetch-based simple stream reader's
-        # "available" snapshot races the per-file offset walk and can
-        # under-drain; processAllAvailable() blocks until read() reports
-        # no new data (idx == n_files), then the query stops cleanly.
+        # NOT availableNow (so not _drain_to_view): a simple stream
+        # reader does not support it, and Spark's fallback fixes the end
+        # offset at the reader's first prefetch — one file, an
+        # under-drain.  processAllAvailable() blocks until read()
+        # reports no file past the high-water name, then the query
+        # stops cleanly.
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -1033,14 +940,11 @@ def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-        _drain(q)
         return (
             spark.table(name)
             .groupBy("performer_kind")
             .agg(F.max("n").cast("bigint").alias("n"))
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -1089,13 +993,11 @@ def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quiescent streams.",
 )
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
-    d = tempfile.mkdtemp(prefix="stream_sess_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_sess_", ignore_cleanup_errors=True
+    ) as d:
         ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
         # time-ordered thirds: ntile over a unique (ts, user_id) order so
         # later batches never carry event-times behind the watermark
@@ -1119,13 +1021,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("ts"),
             ).select("user_id", "ts", F.lit(3).cast("int").alias("batch"))
         )
-        src = _write_mtime_batches(
+        stream, src = _write_mtime_batches(
             batched, F.col("batch"), d, 4, payload=["user_id", "ts"]
-        )
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
         )
         agg = (
             stream.withWatermark("ts", "1 minute")
@@ -1145,27 +1042,18 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
         )
-        name = f"sess_{uuid.uuid4().hex[:12]}"
         # JVM-stateful session-window aggregate: per-partition
         # store-commit overhead dominates at micro-batch scale, so the
         # width derives from source bytes (see scale.stream_width)
         nbytes = scale.source_bytes(src)
-        with scale.scoped_conf(
-            spark, {"spark.sql.shuffle.partitions": scale.stream_width(spark, nbytes)}
-        ):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{d}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q)
+        sessions = _drain_to_view(
+            agg,
+            "append",
+            d,
+            {"spark.sql.shuffle.partitions": scale.stream_width(spark, nbytes)},
+        )
         # append emits each closed session exactly once; drop the sentinel
-        return spark.table(name).filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return sessions.filter(F.col("user_id") >= 0)
 
 
 @register(
@@ -1194,22 +1082,18 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Estimator-tolerance sibling of agg_hll_partial_merge.",
 )
 def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
-    d = tempfile.mkdtemp(prefix="stream_hll_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_hll_", ignore_cleanup_errors=True
+    ) as d:
         ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-        # one partitioned write for the 3 data batches PLUS the sentinel
-        # (batch 3): the sentinel rides the same frame with a literal
-        # batch key, so the pre-r13 four filtered scans + four
-        # single-task writes become one job.  The HLL window aggregate
-        # is commutative, so in-file row order is immaterial.
+        # one write for the 3 data batches and the sentinel, which rides
+        # the same frame with a literal batch key.  The HLL window
+        # aggregate is commutative, so in-file row order is immaterial.
         #
-        # Batch key = HOUR SLICE, not user slice (r14, guide §2.3 —
-        # shuffle/commit fewer bytes): with batch = user_id % 3 every
+        # Batch key = HOUR SLICE, not user slice (shuffle and commit
+        # fewer bytes): with batch = user_id % 3 every
         # trigger touched ALL ~720 open windows, so each paid the full
         # 720 x 35 KB HLL-buffer state restore+save and shipped 720
         # partial sketches through the merge exchange (profiled:
@@ -1237,7 +1121,7 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(-1).cast("bigint").alias("user_id"),
                 # sentinel far past every real window end + the 2000h
                 # watermark delta: closes all real windows under append.
-                # r14: the sentinel RIDES the last data batch instead of
+                # The sentinel RIDES the last data batch instead of
                 # being a 4th file — the watermark only advances AFTER a
                 # batch completes, so every real row still lands before
                 # any eviction, the availableNow no-data flush batch
@@ -1249,20 +1133,14 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(2).cast("int").alias("batch"),
             )
         )
-        src = _write_mtime_batches(
+        stream, src = _write_mtime_batches(
             batched, F.col("batch"), d, 3, payload=["user_id", "ts"]
-        )
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
         )
         agg = (
             stream.withWatermark("ts", "2000 hours")
             .groupBy(F.window("ts", "1 hour").alias("w"))
             .agg(F.approx_count_distinct("user_id", 0.005).alias("n_users"))
         )
-        name = f"hll_{uuid.uuid4().hex[:12]}"
         # JVM-stateful window aggregate with ~50 KB HLL buffers per
         # window key: per-partition state-store commit overhead scales
         # with width x sketch bytes (measured at sf0.1: width 32 drain
@@ -1274,32 +1152,20 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scale.codegen_mode); interpreted projections cut the drain
         # 27 s -> 11 s at sf0.1 with bit-identical results.
         nbytes = scale.source_bytes(src)
-        with scale.scoped_conf(
-            spark,
+        windows = _drain_to_view(
+            agg,
+            "append",
+            d,
             {
                 "spark.sql.shuffle.partitions": scale.stream_width(spark, nbytes),
                 "spark.sql.codegen.factoryMode": scale.codegen_mode(spark, nbytes),
             },
-        ):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{d}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q)
-        streamed = (
-            spark.table(name)
-            .filter(F.col("w.start") < F.lit("2025-01-01").cast("timestamp"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
-                F.col("n_users").cast("bigint").alias("n_est"),
-            )
-            # the memory-sink rows are tiny (one per window) but the
-            # scratch dir is deleted on exit: materialize before rmtree
-            .localCheckpoint(eager=True)
+        )
+        streamed = windows.filter(
+            F.col("w.start") < F.lit("2025-01-01").cast("timestamp")
+        ).select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
+            F.col("n_users").cast("bigint").alias("n_est"),
         )
         exact = ev.groupBy(
             F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -1314,8 +1180,6 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("string")
             .alias("sketch_ok"),
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _streaming_minhash_oracle() -> str:
@@ -1377,20 +1241,17 @@ def _streaming_minhash_oracle() -> str:
     "verdict aggregation shuffles slim (doc_id, hit) rows only.",
 )
 def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..streaming.stateful import band_first_seen
     from . import dedup as D
     from .dedup_queries import _corpus
 
-    d = tempfile.mkdtemp(prefix="stream_mh_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_mh_", ignore_cleanup_errors=True
+    ) as d:
         corpus = _corpus(spark, sf_dir)  # doc_id, text (+ mutated twins)
-        # ONE partitioned write instead of 3 filtered scans+writes; the
-        # mtime order (b0 < b1 < b2) pins the drain order, and the
+        # the mtime order (b0 < b1 < b2) pins the drain order, and the
         # stateful consumer sorts by doc_id within each band group, so
         # in-file row order is immaterial (see _write_mtime_batches).
         # Each batch lands as w files (not one): the per-row shingle +
@@ -1398,7 +1259,7 @@ def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # SCAN stage, and a single-file batch pins that whole stage to
         # one task (see scale.scan_split).
         w = max(1, min(8, spark.sparkContext.defaultParallelism))
-        src = _write_mtime_batches(
+        stream, src = _write_mtime_batches(
             corpus,
             F.col("doc_id") % 3,
             d,
@@ -1406,14 +1267,8 @@ def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             sub_col=F.expr(f"pmod(doc_id div 3, {w})"),
             files_per_batch=w,
         )
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", w)
-            .parquet(src)
-        )
         sigs = D.minhash_signatures(stream, num_hashes=8)
         bands = D.lsh_band_buckets(sigs, "doc_id", num_hashes=8, rows_per_band=2)
-        name = f"mh_{uuid.uuid4().hex[:12]}"
         # applyInPandasWithState pays a per-GROUP Python invocation and
         # a per-key state-store commit, so band_first_seen groups by a
         # deterministic hash BUCKET of the band value (~4x session
@@ -1422,36 +1277,24 @@ def streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # are computed per band value inside the bucket, so results
         # are bucket-count-invariant (see streaming.stateful).
         nbytes = scale.source_bytes(src)
-        with scale.scoped_conf(
-            spark,
+        hits = _drain_to_view(
+            band_first_seen(bands.select("doc_id", "band_idx", "band_val")),
+            "update",
+            d,
             {
                 "spark.sql.files.maxPartitionBytes": scale.scan_split(
                     spark, nbytes, 3
                 ),
                 "spark.sql.shuffle.partitions": scale.stream_width(spark, nbytes),
             },
-        ):
-            q = (
-                band_first_seen(bands.select("doc_id", "band_idx", "band_val"))
-                .writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{d}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q)
+        )
         # one emitted row per (doc, band); the doc's verdict is the sum
-        # of its band hits.  Materialize before the tempdir teardown.
+        # of its band hits
         return (
-            spark.table(name)
-            .groupBy("doc_id")
+            hits.groupBy("doc_id")
             .agg(F.sum("hit").cast("bigint").alias("n_band_hits"))
             .filter(F.col("n_band_hits") > 0)
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _streaming_funnel_oracle() -> str:
@@ -1500,31 +1343,20 @@ def _streaming_funnel_oracle() -> str:
     "ingest-quality dashboard over a firehose.",
 )
 def streaming_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
-    from ..sources.batch import load_table
     from .training_queries import _score_i
     from ..functions import words
 
-    d = tempfile.mkdtemp(prefix="stream_qf_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_qf_", ignore_cleanup_errors=True
+    ) as d:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang", "n_chars"
         )
-        # ONE partitioned write instead of 3 filtered scans+writes; the
-        # funnel aggregates per (batch, reason), so in-file row order
+        # the funnel aggregates per (batch, reason), so in-file row order
         # is immaterial (see _write_mtime_batches).
-        src = _write_mtime_batches(docs, F.col("doc_id") % 3, d, 3)
-        stream = (
-            spark.readStream.schema(
-                "doc_id bigint, text string, lang string, n_chars bigint"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        stream, src = _write_mtime_batches(docs, F.col("doc_id") % 3, d, 3)
         reason = (
             F.when(~F.col("lang").isin("en", "zh"), "1_lang_other")
             .when(F.size(words(F.col("text"))) < 50, "2_too_short")
@@ -1543,34 +1375,20 @@ def streaming_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_chars").cast("bigint").alias("total_chars"),
             )
         )
-        name = f"qf_{uuid.uuid4().hex[:12]}"
         nbytes = scale.source_bytes(src)
-        with scale.scoped_conf(
-            spark, {"spark.sql.shuffle.partitions": scale.stream_width(spark, nbytes)}
-        ):
-            q = (
-                agg.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{d}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q)
+        funnel = _drain_to_view(
+            agg,
+            "update",
+            d,
+            {"spark.sql.shuffle.partitions": scale.stream_width(spark, nbytes)},
+        )
         # one emitted row per (batch, reason) since a key's rows all
         # arrive in its one micro-batch; max() collapses defensively if
-        # a retry ever re-emits.  Materialize before tempdir teardown.
-        return (
-            spark.table(name)
-            .groupBy("batch", "reason")
-            .agg(
-                F.max("n_docs").alias("n_docs"),
-                F.max("total_chars").alias("total_chars"),
-            )
-            .localCheckpoint(eager=True)
+        # a retry ever re-emits
+        return funnel.groupBy("batch", "reason").agg(
+            F.max("n_docs").alias("n_docs"),
+            F.max("total_chars").alias("total_chars"),
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _streaming_ann_oracle() -> str:
@@ -1633,19 +1451,16 @@ def _streaming_ann_oracle() -> str:
     "every batch.",
 )
 def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..functions import cosine
-    from ..sources.batch import load_table
     from . import similarity as S
     from .dedup_queries import SYNTH_ID_OFFSET
 
-    d = tempfile.mkdtemp(prefix="stream_ann_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_ann_", ignore_cleanup_errors=True
+    ) as d:
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         bucketed = emb.select(
             "vec_id", "embedding", S.srp_bucket(F.col("embedding")).alias("bucket")
@@ -1659,22 +1474,15 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + 0.01 * (x.cast("double") * x.cast("double") - 1.0),
             ).alias("p_embedding"),
         )
-        # one partitioned write (see _write_mtime_batches); the pre-r14
-        # loop ran the probe-perturbation subtree once per batch.  The
-        # consumer is row-order-insensitive within a micro-batch: the
-        # final window ranks by (cos desc, orig_id) per dup_id and
+        # the consumer is row-order-insensitive within a micro-batch:
+        # the final window ranks by (cos desc, orig_id) per dup_id and
         # batch membership is deterministic (vec_id % 3).
-        src = _write_mtime_batches(
+        stream, _ = _write_mtime_batches(
             probes_src,
             F.col("vec_id") % 3,
             d,
             3,
             payload=["dup_id", "p_embedding"],
-        )
-        stream = (
-            spark.readStream.schema("dup_id bigint, p_embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
         )
         multi = stream.withColumn(
             "p_bucket", S.srp_bucket(F.col("p_embedding"))
@@ -1698,17 +1506,7 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(cos, 6).alias("cos"),
             )
         )
-        name = f"ann_{uuid.uuid4().hex[:12]}"
-        q = (
-            matches.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-        t = spark.table(name)
+        t = _drain_to_view(matches, "append", d)
         w = Window.partitionBy("dup_id").orderBy(F.col("cos").desc(), "orig_id")
         wc = Window.partitionBy("dup_id")
         return (
@@ -1721,7 +1519,4 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cos").alias("best_cos"),
                 "n_matches",
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

@@ -21,12 +21,30 @@ checkpoint range; the per-partition generator shape is identical.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     InputPartition,
     SimpleDataSourceStreamReader,
 )
+
+
+def _part_files(path: str) -> list[str]:
+    """The envelope files under ``path``, in name order."""
+    return sorted(glob.glob(os.path.join(path, "part-*")))
+
+
+def _envelope_rows(path: str):  # noqa: ANN202
+    """One ``(kinesis_data,)`` row per non-blank JSONL line of ``path``."""
+    with open(path, encoding="utf-8") as fh:
+        for line in fh:
+            line = line.strip()
+            if line:
+                yield (json.loads(line)["kinesis"]["data"],)
 
 
 class EnvelopeFilePartition(InputPartition):
@@ -58,24 +76,10 @@ class KinesisEnvelopeJsonlReader(DataSourceReader):
             raise ValueError("kinesis_envelope_jsonl requires a path")
 
     def partitions(self):  # noqa: ANN201 - base signature
-        import glob
-        import os
-
-        return [
-            EnvelopeFilePartition(p)
-            for p in sorted(glob.glob(os.path.join(self.path, "part-*")))
-        ]
+        return [EnvelopeFilePartition(p) for p in _part_files(self.path)]
 
     def read(self, partition):  # noqa: ANN001, ANN201 - base signature
-        import json
-
-        with open(partition.path, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                rec = json.loads(line)
-                yield (rec["kinesis"]["data"],)
+        return _envelope_rows(partition.path)
 
 
 class KinesisEnvelopeJsonlStreamReader(SimpleDataSourceStreamReader):
@@ -84,7 +88,7 @@ class KinesisEnvelopeJsonlStreamReader(SimpleDataSourceStreamReader):
     One file per `read()` call, so every envelope file becomes its own
     micro-batch (the same drain shape the file-source streaming queries
     pin with maxFilesPerTrigger=1).  The offset records the basename of
-    the last consumed file, NOT a positional index (r5 ADVICE): an
+    the last consumed file, NOT a positional index: an
     integer index into a freshly re-sorted listing re-maps to different
     files if a lexically earlier name appears (or one is removed)
     between commit and restart.  With a name high-water mark,
@@ -99,77 +103,35 @@ class KinesisEnvelopeJsonlStreamReader(SimpleDataSourceStreamReader):
         if not self.path:
             raise ValueError("kinesis_envelope_jsonl requires a path")
 
-    def _files(self):  # noqa: ANN202
-        import glob
-        import os
-
-        return sorted(glob.glob(os.path.join(self.path, "part-*")))
-
-    def _rows_of(self, path: str):  # noqa: ANN202
-        import json
-
-        out = []
-        with open(path, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    out.append((json.loads(line)["kinesis"]["data"],))
-        return out
-
     @staticmethod
     def _name(path: str) -> str:
-        import os
-
         return os.path.basename(path)
 
-    def _pos(self, offset: dict) -> str:
-        """Name high-water mark of an offset, accepting the legacy
-        ``{"idx": N}`` shape (r6 ADVICE): the r5-era offset counted
-        files consumed from the sorted listing, so a checkpoint written
-        by that version restarts here by translating the count to the
-        basename of the N-th consumed file (idx=0 -> "" = nothing
-        consumed).  Clamped so an idx past the current listing means
-        "everything consumed" rather than an IndexError."""
-        if "pos" in offset:
-            return offset["pos"]
-        if "idx" in offset:
-            i = min(int(offset["idx"]), len(files := self._files()))
-            pos = self._name(files[i - 1]) if i > 0 else ""
-            # best-effort migration maps the count onto the CURRENT
-            # sorted listing; log the translated boundary (r7 ADVICE)
-            # so a listing that shifted between checkpoint and restart
-            # (deleted file, earlier-sorting arrival) is diagnosable
-            # from the stream logs instead of silently skipping/re-
-            # reading one file.
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "legacy offset {'idx': %s} translated to name high-water "
-                "mark %r over a %d-file listing",
-                offset["idx"],
-                pos,
-                len(files),
-            )
-            return pos
-        raise ValueError(f"unrecognized offset shape: {offset!r}")
+    @staticmethod
+    def _pos(offset: dict) -> str:
+        """Name high-water mark of an offset."""
+        if "pos" not in offset:
+            raise ValueError(f"unrecognized offset shape: {offset!r}")
+        return offset["pos"]
 
     def initialOffset(self) -> dict:
         return {"pos": ""}  # "" sorts before every part-* basename
 
     def read(self, start: dict):  # noqa: ANN201 - base signature
         pos = self._pos(start)
-        pending = [p for p in self._files() if self._name(p) > pos]
+        pending = [p for p in _part_files(self.path) if self._name(p) > pos]
         if not pending:
             return iter([]), {"pos": pos}
         nxt = pending[0]
-        return iter(self._rows_of(nxt)), {"pos": self._name(nxt)}
+        # read now, so the rows are the ones the returned offset covers
+        return iter(list(_envelope_rows(nxt))), {"pos": self._name(nxt)}
 
     def readBetweenOffsets(self, start: dict, end: dict):  # noqa: ANN201
         lo, hi = self._pos(start), self._pos(end)
         rows = []
-        for p in self._files():
+        for p in _part_files(self.path):
             if lo < self._name(p) <= hi:
-                rows.extend(self._rows_of(p))
+                rows.extend(_envelope_rows(p))
         return iter(rows)
 
     def commit(self, end: dict) -> None:

@@ -84,35 +84,10 @@ def test_late_arriving_older_name_is_skipped_not_reread(tmp_path):
     assert off2 == off
 
 
-def test_legacy_idx_offset_is_translated(tmp_path):
-    """r6 ADVICE: a checkpoint written by the r5-era reader stored
-    {"idx": N} = files-consumed count.  Restarting from it must resume
-    at the (N+1)-th file of the sorted listing, not KeyError."""
-    _write(tmp_path, "part-001", ["a"])
-    _write(tmp_path, "part-002", ["b"])
-    _write(tmp_path, "part-003", ["c"])
-    r = _reader(tmp_path)
-    rows, off = r.read({"idx": 1})  # part-001 already consumed
-    assert [base64.b64decode(t[0]).decode() for t in rows] == ["b"]
-    assert off == {"pos": "part-002"}  # upgraded shape going forward
-
-    replay = list(r.readBetweenOffsets({"idx": 1}, {"idx": 2}))
-    assert [base64.b64decode(t[0]).decode() for t in replay] == ["b"]
-
-
-def test_legacy_idx_zero_and_overrun(tmp_path):
-    _write(tmp_path, "part-001", ["a"])
-    r = _reader(tmp_path)
-    rows, off = r.read({"idx": 0})
-    assert [base64.b64decode(t[0]).decode() for t in rows] == ["a"]
-    # idx beyond the listing clamps to "everything consumed"
-    rows2, off2 = r.read({"idx": 99})
-    assert list(rows2) == [] and off2 == {"pos": "part-001"}
-
-
 def test_unrecognized_offset_shape_raises(tmp_path):
     _write(tmp_path, "part-001", ["a"])
     import pytest
 
-    with pytest.raises(ValueError, match="unrecognized offset"):
-        _reader(tmp_path).read({"bogus": 1})
+    for offset in ({"bogus": 1}, {"idx": 1}):
+        with pytest.raises(ValueError, match="unrecognized offset"):
+            _reader(tmp_path).read(offset)

@@ -618,3 +618,56 @@ def test_stream_stream_join_sides_take_two_tasks(spark):
         lambda rows: [sorted({r._side for r in rows})]
     ).collect()
     assert sides == [[0], [1]]
+
+
+def test_drain_timeout_stops_and_raises(spark, tmp_path):
+    """A drain that outlives its timeout stops the query and raises, so
+    no caller reads a partial sink."""
+    from kinesis_to_opensearch_lambda_spark.queries import REGISTRY  # noqa: F401
+    from kinesis_to_opensearch_lambda_spark.operators.streaming_queries import _drain
+
+    q = (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", 1)
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(TimeoutError, match="did not drain within 1s"):
+            _drain(q, timeout_s=1)
+        assert spark.streams.active == []
+    finally:
+        q.stop()
+
+
+def test_streaming_catalog_has_one_drain_path():
+    """The streaming catalog drains through its helpers: one memory-sink
+    writer (``_drain_to_view``) besides the Python-datasource entry's
+    processAllAvailable drain (a simple stream reader cannot take
+    availableNow), ``TemporaryDirectory`` scratch dirs, no eager
+    localCheckpoint, and no builder restating the schema of the
+    micro-batch files ``_write_mtime_batches`` wrote for it."""
+    import ast
+    import inspect
+
+    from kinesis_to_opensearch_lambda_spark.queries import REGISTRY  # noqa: F401
+    from kinesis_to_opensearch_lambda_spark.operators import streaming_queries
+
+    src = inspect.getsource(streaming_queries)
+    assert src.count("tempfile.mkdtemp") == 0
+    assert src.count("localCheckpoint") == 0
+    assert src.count('format("memory")') == 2
+    memory_sinks, batch_readers = set(), set()
+    for fn in ast.parse(src).body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        body = ast.get_source_segment(src, fn)
+        if 'format("memory")' in body:
+            memory_sinks.add(fn.name)
+        if fn.name != "_write_mtime_batches" and "_write_mtime_batches(" in body:
+            batch_readers.add(fn.name)
+            assert "readStream.schema" not in body, fn.name
+    assert memory_sinks == {"_drain_to_view", "streaming_python_datasource"}
+    assert len(batch_readers) == 11, sorted(batch_readers)

@@ -844,13 +844,14 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Custom STREAMING source in pure Python (Spark 4 "
     "SimpleDataSourceStreamReader): the Kinesis-envelope connector's "
     "streaming half tracks its offset as the high-water file NAME "
-    "(the last consumed part-* basename), serves one file "
-    "per read() call (so each envelope file is its own micro-batch), "
+    "(the last consumed part-* basename), serves every file past it "
+    "per read() call (so an availableNow drain takes every file present "
+    "at its start), "
     "and implements readBetweenOffsets for deterministic replay after "
     "restart — the exactly-once contract a checkpointed source must "
     "honor, re-expressed in Python where no JVM connector jar exists "
     "(sources/python_datasource.py).  The query runs a REAL "
-    "StreamingQuery: 3 envelope files drain micro-batch-by-micro-batch "
+    "StreamingQuery: 3 envelope files drain under availableNow "
     "into a complete-mode aggregate whose final emission must equal "
     "the batch ground truth.  Downstream of the scan everything is "
     "codegen'd DataFrame ops (unbase64 / get_json_object / hash agg).",
@@ -922,26 +923,10 @@ def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = decoded.groupBy("performer_kind").agg(
             F.count(F.lit(1)).cast("bigint").alias("n")
         )
-        name = f"pyds_{uuid.uuid4().hex[:12]}"
-        # NOT availableNow (so not _drain_to_view): a simple stream
-        # reader does not support it, and Spark's fallback fixes the end
-        # offset at the reader's first prefetch — one file, an
-        # under-drain.  processAllAvailable() blocks until read()
-        # reports no file past the high-water name, then the query
-        # stops cleanly.
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{d}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        # complete mode rewrites the whole table each batch; counts only
+        # grow, so max per key == the final (fully-drained) emission
         return (
-            spark.table(name)
+            _drain_to_view(agg, "complete", d)
             .groupBy("performer_kind")
             .agg(F.max("n").cast("bigint").alias("n"))
         )

@@ -6,7 +6,11 @@ Semantics preserved:
 - full (unprojected) record, schemaless passthrough
   (lambda_function.py:148 — the Splunk branch sees every field): the
   event is the decoded ``_raw`` JSON text with the two normalize steps
-  re-applied textually, so unknown fields survive byte for byte;
+  re-applied textually, so unknown fields survive byte for byte.  Each
+  field's three strips run behind a guard that every one of them
+  implies (the literal ``"@timestamp"``; one find of an ``"ip"`` key
+  with a ``""`` or ``null`` value), so a row its guard skips is one no
+  strip could change, for any input;
 - HEC envelope ``{"event": ..., "sourcetype": "json", "index": ...}``
   (:121-125), built by :meth:`SplunkHECSink.payload` — the one payload
   expression;
@@ -35,16 +39,30 @@ from .base import ChunkedTransportSink
 
 # escape-aware JSON string-value pattern (handles \" inside values)
 _JSTR = r'"(?:[^"\\]|\\.)*"'
+# the values the reference's falsy-ip pop removes (lambda_function.py:48-49)
+_FALSY = r'(?:""|null)'
 
 
-def _strip_json_field(col: Column, field: str, value_pattern: str = _JSTR) -> Column:
+def _pair(field: str, value_pattern: str = _JSTR) -> str:
+    """Regex of ``"field": <value>``, part of every strip pattern."""
+    return f'"{re.escape(field)}"\\s*:\\s*{value_pattern}'
+
+
+def _strip_json_field(
+    col: Column, guard: Column, field: str, value_pattern: str = _JSTR
+) -> Column:
     """Textually remove ``"field": <value>`` from a JSON object string,
     keeping the object well-formed (field-with-trailing-comma, then
-    comma-preceded-last-field, then lone-field)."""
-    f = re.escape(field)
-    out = F.regexp_replace(col, f'"{f}"\\s*:\\s*{value_pattern}\\s*,', "")
-    out = F.regexp_replace(out, f',\\s*"{f}"\\s*:\\s*{value_pattern}', "")
-    return F.regexp_replace(out, f'"{f}"\\s*:\\s*{value_pattern}', "")
+    comma-preceded-last-field, then lone-field).
+
+    The three passes run only where ``guard`` holds, and ``guard`` must
+    hold wherever :func:`_pair` matches ``col``.  Every pass's pattern
+    contains that pair, so a row the guard skips is one all three
+    passes would return unchanged."""
+    pair = _pair(field, value_pattern)
+    out = F.regexp_replace(col, pair + r"\s*,", "")
+    out = F.regexp_replace(out, r",\s*" + pair, "")
+    return F.when(guard, F.regexp_replace(out, pair, "")).otherwise(col)
 
 
 def is_disabled(flag: object) -> bool:
@@ -72,7 +90,13 @@ class SplunkHECSink(ChunkedTransportSink):
         ``_raw`` with any pre-existing ``@timestamp`` replaced
         (dict-assignment parity, the new value quoted by ``to_json``)
         and an ``"ip": ""`` / ``"ip": null`` removed (falsy-pop parity).
-        The reference posts ``event`` as a *nested JSON object*
+        Each field's strips run only where a test that all of them
+        imply passes: for ``@timestamp``, ``_raw`` contains the literal
+        ``"@timestamp"`` (a byte search); for ``ip``, one find of the
+        ``"ip"`` pair succeeds (its literal prefix lets the regex engine
+        skip ahead).  A skipped row is one no strip could change, so the
+        text is byte-identical to running every strip on every row.  The
+        reference posts ``event`` as a *nested JSON object*
         (requests.post(json=events), lambda_function.py:97,121-125), so
         the rendered event text is spliced in verbatim rather than
         re-serialized as a string field.
@@ -80,13 +104,17 @@ class SplunkHECSink(ChunkedTransportSink):
         # None-guard (lambda_function.py:117-119).  ``OR`` short-circuits:
         # the second parse runs only for id-less rows.
         parsed = F.col("random_id").isNotNull() | F.json_object_keys("_raw").isNotNull()
-        raw = _strip_json_field(F.col("_raw"), "@timestamp")
-        raw = _strip_json_field(raw, "ip", '(?:""|null)')
-        # ``_event`` is referenced four times below; Catalyst does not
-        # collapse a non-cheap projection into a multi-reference consumer,
-        # so the strip chain is evaluated once per row, and only for a
+        raw = F.col("_raw")
+        ts = _strip_json_field(raw, raw.contains('"@timestamp"'), "@timestamp")
+        # ``_ts`` is referenced three times by the ip step and ``_event``
+        # four times below; Catalyst does not collapse a non-cheap
+        # projection into a multi-reference consumer, so each step and
+        # each guard is evaluated at most once per row, and only for a
         # parsed one.  A NULL ``_event`` makes the payload NULL.
-        frame = df.withColumn("_event", F.when(parsed, raw))
+        frame = df.withColumn("_ts", F.when(parsed, ts))
+        ts = F.col("_ts")
+        has_ip = F.regexp_like(ts, F.lit(_pair("ip", _FALSY)))
+        frame = frame.withColumn("_event", _strip_json_field(ts, has_ip, "ip", _FALSY))
         event = F.col("_event")
         frag = F.to_json(F.struct(F.col("datetime").alias("@timestamp")))
         # '{"@timestamp":"..."}' -> '"@timestamp":"..."'
@@ -97,7 +125,7 @@ class SplunkHECSink(ChunkedTransportSink):
             F.when(F.regexp_like(event, F.lit(r"^\{\s*\}$")), F.lit("")).otherwise(
                 F.lit(",")
             ),
-            F.substring(event, 2, F.length(event) - 1),
+            F.substr(event, F.lit(2)),
         )
         # the constant tail ',"sourcetype":"json","index":...}', rendered once
         tail = json.dumps(

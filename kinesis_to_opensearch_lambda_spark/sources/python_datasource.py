@@ -85,10 +85,15 @@ class KinesisEnvelopeJsonlReader(DataSourceReader):
 class KinesisEnvelopeJsonlStreamReader(SimpleDataSourceStreamReader):
     """Streaming half of the connector: offset = high-water FILENAME.
 
-    One file per `read()` call, so every envelope file becomes its own
-    micro-batch (the same drain shape the file-source streaming queries
-    pin with maxFilesPerTrigger=1).  The offset records the basename of
-    the last consumed file, NOT a positional index: an
+    One `read()` call takes every file past the high-water name, and
+    its offset is the last of them.  Spark fixes an availableNow
+    query's end offset at the simple reader's first `read()` (a
+    `SimpleDataSourceStreamReader` does not implement
+    SupportsTriggerAvailableNow), so that query drains every file
+    present when it starts; under a processing-time trigger each
+    micro-batch takes what arrived since the last one, as the built-in
+    file source does without maxFilesPerTrigger.  The offset records
+    the basename of the last consumed file, NOT a positional index: an
     integer index into a freshly re-sorted listing re-maps to different
     files if a lexically earlier name appears (or one is removed)
     between commit and restart.  With a name high-water mark,
@@ -122,9 +127,9 @@ class KinesisEnvelopeJsonlStreamReader(SimpleDataSourceStreamReader):
         pending = [p for p in _part_files(self.path) if self._name(p) > pos]
         if not pending:
             return iter([]), {"pos": pos}
-        nxt = pending[0]
         # read now, so the rows are the ones the returned offset covers
-        return iter(list(_envelope_rows(nxt))), {"pos": self._name(nxt)}
+        rows = [row for p in pending for row in _envelope_rows(p)]
+        return iter(rows), {"pos": self._name(pending[-1])}
 
     def readBetweenOffsets(self, start: dict, end: dict):  # noqa: ANN201
         lo, hi = self._pos(start), self._pos(end)

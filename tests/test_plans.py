@@ -4,6 +4,8 @@ no-row-Python ban are asserted properties of the physical plans."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from kinesis_to_opensearch_lambda_spark.plans import (
@@ -75,9 +77,12 @@ def test_pipeline_chain_shuffle_free_before_agg(spark):
 
 def test_sink_serialize_strips_raw_json_once(spark):
     # The HEC payload strips ``_raw`` (3 regexp_replace per field, 2
-    # fields) once per row; OpenSearch serialization never touches it.
-    # The one-pass delivery frame carries both payloads with the same
-    # single strip and reads the batch uncached.
+    # fields) at most once per row, each field's chain behind its guard
+    # (a byte search for '"@timestamp"', one regex find of the ip pair),
+    # and splices the event without counting its characters; OpenSearch
+    # serialization never touches it.  The one-pass delivery frame
+    # carries both payloads with the same single strip and reads the
+    # batch uncached.
     from kinesis_to_opensearch_lambda_spark.sinks import OpenSearchBulkSink, SplunkHECSink
     from kinesis_to_opensearch_lambda_spark.sinks.base import payload_frame
     from kinesis_to_opensearch_lambda_spark.streaming.pipeline import decode_stream
@@ -93,6 +98,11 @@ def test_sink_serialize_strips_raw_json_once(spark):
     one_pass = plan(payload_frame(env, [es, hec]))
     assert one_pass.count("regexp_replace(") <= 6
     assert "InMemoryRelation" not in one_pass
+    chain = r" THEN regexp_replace\(regexp_replace\(regexp_replace\("
+    assert re.search(r'CASE WHEN Contains\([^,()]+, "@timestamp"\)' + chain, one_pass)
+    ip_find = re.escape('"ip"\\s*:\\s*(?:""|null))')
+    assert re.search(r"CASE WHEN RLIKE\([^,()]+, " + ip_find + chain, one_pass)
+    assert not re.search(r"length\(_event#", one_pass)
 
 
 def test_minhash_signatures_shuffle_free(spark):

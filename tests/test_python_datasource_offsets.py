@@ -1,7 +1,8 @@
-"""KinesisEnvelopeJsonlStreamReader offset contract (r5 ADVICE fix):
-offsets are high-water FILENAMES, not positional indices, so a file
-with a lexically earlier name appearing between commit and restart
-neither shifts the replayed range nor gets double-read."""
+"""KinesisEnvelopeJsonlStreamReader offset contract: offsets are
+high-water FILENAMES, not positional indices, so a file with a
+lexically earlier name appearing between commit and restart neither
+shifts the replayed range nor gets double-read; one read() takes every
+file past the high-water name, so an availableNow drain is complete."""
 
 from __future__ import annotations
 
@@ -27,19 +28,56 @@ def _reader(tmp_path) -> KinesisEnvelopeJsonlStreamReader:
     return KinesisEnvelopeJsonlStreamReader({"path": str(tmp_path)})
 
 
-def test_one_file_per_microbatch_by_name(tmp_path):
+def test_one_read_takes_every_pending_file_by_name(tmp_path):
     _write(tmp_path, "part-001", ["a"])
     _write(tmp_path, "part-002", ["b", "c"])
+    _write(tmp_path, "part-003", ["d"])
     r = _reader(tmp_path)
-    off0 = r.initialOffset()
-    rows1, off1 = r.read(off0)
-    assert len(list(rows1)) == 1
-    assert off1 == {"pos": "part-001"}
+    rows1, off1 = r.read(r.initialOffset())
+    assert [base64.b64decode(t[0]).decode() for t in rows1] == ["a", "b", "c", "d"]
+    assert off1 == {"pos": "part-003"}
     rows2, off2 = r.read(off1)
-    assert len(list(rows2)) == 2
-    assert off2 == {"pos": "part-002"}
+    assert list(rows2) == [] and off2 == off1
+    # a file that lands later is the whole of the next read
+    _write(tmp_path, "part-004", ["e"])
     rows3, off3 = r.read(off2)
-    assert list(rows3) == [] and off3 == off2
+    assert len(list(rows3)) == 1 and off3 == {"pos": "part-004"}
+
+
+def test_available_now_drains_every_file_present_at_start(spark, tmp_path):
+    """Spark fixes an availableNow query's end offset at the simple
+    reader's first read(), so that read must cover every pending file:
+    3 files of 4 records drain to 12 rows, not the first file's 4."""
+    import uuid
+
+    from kinesis_to_opensearch_lambda_spark.sources.python_datasource import (
+        KinesisEnvelopeJsonlSource,
+    )
+
+    src = tmp_path / "env"
+    src.mkdir()
+    for f in range(3):
+        _write(src, f"part-{f:03d}.jsonl", [f"{f}-{i}" for i in range(4)])
+    spark.dataSource.register(KinesisEnvelopeJsonlSource)
+    name = f"pyds_avail_{uuid.uuid4().hex[:8]}"
+    q = (
+        spark.readStream.format("kinesis_envelope_jsonl")
+        .option("path", str(src))
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    got = sorted(
+        base64.b64decode(r.kinesis_data).decode() for r in spark.table(name).collect()
+    )
+    assert got == sorted(f"{f}-{i}" for f in range(3) for i in range(4))
 
 
 def test_replay_is_stable_when_earlier_name_appears(tmp_path):

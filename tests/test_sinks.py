@@ -6,10 +6,14 @@ foreachPartition execution with a filesystem spool transport."""
 
 from __future__ import annotations
 
+import base64
 import json
 import sys
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from kinesis_to_opensearch_lambda_spark.sinks import (
     OpenSearchBulkSink,
@@ -17,6 +21,7 @@ from kinesis_to_opensearch_lambda_spark.sinks import (
     SpoolDirTransport,
 )
 
+from .test_properties import record_st, tricky_text
 from .test_transforms import FULL_RECORD, decoded
 
 
@@ -156,6 +161,143 @@ def test_chunking_property():
             assert all(len(c) == size for c in out[:-1])
 
     check()
+
+
+def _unguarded_hec_payload(df, splunk_index: str):
+    """Oracle for the HEC payload: all six strips on every parsed row and
+    a splice that counts the event's characters, with no guard.  The
+    patterns are written out here rather than imported, so a change to
+    the sink's patterns shows up as a difference."""
+    jstr = r'"(?:[^"\\]|\\.)*"'
+
+    def strip(col, field, value):
+        out = F.regexp_replace(col, f'"{field}"\\s*:\\s*{value}\\s*,', "")
+        out = F.regexp_replace(out, f',\\s*"{field}"\\s*:\\s*{value}', "")
+        return F.regexp_replace(out, f'"{field}"\\s*:\\s*{value}', "")
+
+    parsed = F.col("random_id").isNotNull() | F.json_object_keys("_raw").isNotNull()
+    raw = strip(strip(F.col("_raw"), "@timestamp", jstr), "ip", '(?:""|null)')
+    frame = df.withColumn("_oracle_event", F.when(parsed, raw))
+    event = F.col("_oracle_event")
+    frag = F.to_json(F.struct(F.col("datetime").alias("@timestamp")))
+    injected = F.concat(
+        F.lit("{"),
+        F.substring(frag, 2, F.length(frag) - 2),
+        F.when(F.regexp_like(event, F.lit(r"^\{\s*\}$")), F.lit("")).otherwise(F.lit(",")),
+        F.substring(event, 2, F.length(event) - 1),
+    )
+    tail = json.dumps({"sourcetype": "json", "index": splunk_index}, separators=(",", ":"))
+    return frame, F.concat(
+        F.lit('{"event":'),
+        F.when(F.col("datetime").isNull(), event).otherwise(injected),
+        F.lit("," + tail[1:]),
+    )
+
+
+def assert_hec_bytes_match_unguarded(spark, texts: list[str]) -> None:
+    """Each decoded text's HEC payload is the oracle's, byte for byte
+    (a NULL, the skip, included)."""
+    from kinesis_to_opensearch_lambda_spark.streaming.pipeline import decode_stream
+
+    env = spark.createDataFrame(
+        [(base64.b64encode(t.encode()).decode(),) for t in texts], "kinesis_data string"
+    )
+    frame, got = SplunkHECSink(transport_factory=None, splunk_index="audit").payload(
+        decode_stream(env)
+    )
+    frame, want = _unguarded_hec_payload(frame, "audit")
+    rows = frame.select("_raw", got.alias("got"), want.alias("want")).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        got_b = None if r.got is None else r.got.encode()
+        want_b = None if r.want is None else r.want.encode()
+        assert got_b == want_b, f"\n_raw={r._raw!r}\ngot ={r.got!r}\nwant={r.want!r}"
+
+
+DT = '"datetime": "2026-02-18T10:30:00"'
+HOSTILE_HEC_TEXTS = [
+    # "ip" first, middle, last and only; whitespace around colon and comma
+    '{"ip": null, "random_id": "ip-first", ' + DT + "}",
+    '{"random_id": "ip-mid", "ip" :  null , ' + DT + "}",
+    '{"random_id": "ip-last", ' + DT + ', "ip":""}',
+    '{"ip": null}',
+    '{"ip": ""}',
+    '{"random_id": "ip-ws",\n\t"ip"\t:\n"" ,\n' + DT + "}",
+    '{"random_id": "ip-kept", "ip": "10.0.0.1", ' + DT + "}",
+    '{"random_id": "ip-str-null", "ip": "null", ' + DT + "}",
+    # "@timestamp" first, middle, last and only
+    '{"@timestamp": "old", "random_id": "ts-first", ' + DT + "}",
+    '{"random_id": "ts-mid", "@timestamp" :  "old" , ' + DT + "}",
+    '{"random_id": "ts-last", ' + DT + ', "@timestamp":"old"}',
+    '{"@timestamp": "old"}',
+    '{"@timestamp": 7, "random_id": "ts-number", ' + DT + "}",
+    # both, in either order, and both only
+    '{"@timestamp": "old", "ip": null}',
+    '{"ip": "", "@timestamp": "o\\"ld", "random_id": "both", ' + DT + "}",
+    # nested fields are stripped too: the strips are textual
+    '{"x": {"ip": null}, "random_id": "nested-ip", ' + DT + "}",
+    '{"x": {"@timestamp": "t", "y": 1}, "random_id": "nested-ts", ' + DT + "}",
+    # the literals inside string values
+    '{"random_id": "ts-in-value", "note": "@timestamp", ' + DT + "}",
+    '{"random_id": "quoted-in-value", "note": "\\"@timestamp\\": \\"x\\", \\"ip\\": null", '
+    + DT + "}",
+    '{"x\\"@timestamp": "v", "random_id": "escaped-key", ' + DT + "}",
+    # escaped quotes and multi-byte characters around the strips
+    '{"random_id": "mb-\u00fc", "u": "h\u00e9llo \u65e5\u672c \U0001F600 \\"q\\"", '
+    '"ip": "", "@timestamp": "\u00f6", ' + DT + "}",
+    '{"random_id": "\U0001F600", "@timestamp": "\u65e5", "ip": null}',
+    # id-less records still reach Splunk; no datetime means no injection
+    '{"ip": null, ' + DT + "}",
+    '{"random_id": "no-dt", "ip": null}',
+    "{}",
+    "{ }",
+    # non-object JSON and invalid JSON are skipped
+    "[1, 2]",
+    '"@timestamp"',
+    "42",
+    "null",
+    '{"ip": null',
+    '{"ip": nullx, "random_id": "bad"}',
+]
+
+
+def test_hec_payload_bytes_match_unguarded_chain_on_hostile_records(spark):
+    assert_hec_bytes_match_unguarded(spark, HOSTILE_HEC_TEXTS)
+
+
+_SEPARATORS = st.sampled_from([(", ", ": "), (",", ":"), (" , ", " :  "), (",\n", "\t:\t")])
+_hec_record_st = record_st.flatmap(
+    lambda r: st.fixed_dictionaries(
+        {},
+        optional={
+            "@timestamp": st.one_of(tricky_text, st.integers()),
+            "ip": st.one_of(st.just(""), st.none(), tricky_text),
+            "nested": st.fixed_dictionaries(
+                {}, optional={"ip": st.one_of(st.just(""), st.none()), "@timestamp": tricky_text}
+            ),
+        },
+    ).map(lambda extra: {**r, **extra})
+)
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    st.lists(
+        st.tuples(
+            _hec_record_st.flatmap(lambda r: st.permutations(list(r.items()))),
+            _SEPARATORS,
+            st.booleans(),
+        ),
+        min_size=1,
+        max_size=8,
+    )
+)
+def test_hec_payload_bytes_match_unguarded_chain(spark, records):
+    texts = [
+        json.dumps(dict(items), separators=sep, ensure_ascii=ascii_only)
+        for items, sep, ascii_only in records
+    ]
+    assert_hec_bytes_match_unguarded(spark, texts)
 
 
 @pytest.mark.skipif(

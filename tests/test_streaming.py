@@ -644,10 +644,8 @@ def test_drain_timeout_stops_and_raises(spark, tmp_path):
 
 def test_streaming_catalog_has_one_drain_path():
     """The streaming catalog drains through its helpers: one memory-sink
-    writer (``_drain_to_view``) besides the Python-datasource entry's
-    processAllAvailable drain (a simple stream reader cannot take
-    availableNow), ``TemporaryDirectory`` scratch dirs, no eager
-    localCheckpoint, and no builder restating the schema of the
+    writer (``_drain_to_view``), ``TemporaryDirectory`` scratch dirs, no
+    eager localCheckpoint, and no builder restating the schema of the
     micro-batch files ``_write_mtime_batches`` wrote for it."""
     import ast
     import inspect
@@ -658,7 +656,7 @@ def test_streaming_catalog_has_one_drain_path():
     src = inspect.getsource(streaming_queries)
     assert src.count("tempfile.mkdtemp") == 0
     assert src.count("localCheckpoint") == 0
-    assert src.count('format("memory")') == 2
+    assert src.count('format("memory")') == 1
     memory_sinks, batch_readers = set(), set()
     for fn in ast.parse(src).body:
         if not isinstance(fn, ast.FunctionDef):
@@ -669,5 +667,5 @@ def test_streaming_catalog_has_one_drain_path():
         if fn.name != "_write_mtime_batches" and "_write_mtime_batches(" in body:
             batch_readers.add(fn.name)
             assert "readStream.schema" not in body, fn.name
-    assert memory_sinks == {"_drain_to_view", "streaming_python_datasource"}
+    assert memory_sinks == {"_drain_to_view"}
     assert len(batch_readers) == 11, sorted(batch_readers)

@@ -982,7 +982,6 @@ def agg_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per slot.  Measured 3.16s -> see OPTIMIZATION_r13.md.
     per_key = truncate_lineage(
         keys.groupBy("k").agg(F.count(F.lit(1)).alias("exact_cnt")),
-        None,
         eager=False,
     )
     pairs = per_key.select(

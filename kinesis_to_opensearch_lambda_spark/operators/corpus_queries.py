@@ -770,7 +770,6 @@ def corpus_source_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
             "word",
             (F.col("c").cast("double") / F.col("t").cast("double")).alias("p"),
         ),
-        None,
     )
     srcs = d.select("source").distinct()
     pairs = (
@@ -921,7 +920,6 @@ def corpus_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokw.select("w")
         .distinct()
         .select("w", (md5_long(F.col("w")) % _DSIR_B).alias("b")),
-        None,
         eager=False,
     )
     tok = tokw.join(F.broadcast(vocab), "w").select("doc_id", "source", "b")
@@ -936,7 +934,7 @@ def corpus_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tok passes before the cut).  Cutting costs a 256-row
     # materialization and leaves exactly the two inherent corpus
     # passes (model fit + per-doc scoring).
-    counts = truncate_lineage(counts, None, eager=False)
+    counts = truncate_lineage(counts, eager=False)
     spine = (
         spark.range(_DSIR_B)
         .select(F.col("id").alias("b"))

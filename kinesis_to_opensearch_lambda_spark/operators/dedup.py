@@ -244,7 +244,6 @@ def simhash_near_pairs(
     band_bits: int = 4,
     hamming_max: int = 3,
     window: int | None = 256,
-    checkpoint_dir: str | None = None,
     exhaustive_bucket_cap: int = 10_000,
 ) -> DataFrame:
     """Banded hamming-neighbor lookup over SimHash fingerprints — the
@@ -322,11 +321,11 @@ def simhash_near_pairs(
     # The rank join references `ranked` twice; without a lineage cut
     # Catalyst recomputes the whole fingerprint pipeline (the dominant
     # cost — 60 md5 sign-folds per document) once per side.  Same
-    # durability knob as connected_components: executor-local by
-    # default, reliable checkpoint_dir for long cluster jobs.
+    # durability as connected_components: executor-local by default,
+    # reliable under $SPARK_GRAFT_CHECKPOINT_DIR for long cluster jobs.
     from .lineage import truncate_lineage
 
-    ranked = truncate_lineage(ranked, checkpoint_dir, eager=False)
+    ranked = truncate_lineage(ranked, eager=False)
     b = ranked.select(
         F.col("band_idx").alias("band_idx_b"),
         F.col("band_val").alias("band_val_b"),
@@ -466,7 +465,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Cluster candidate-duplicate pairs into components: each node gets
     ``cluster_id`` = the minimum node id reachable from it.
@@ -497,10 +495,10 @@ def connected_components(
     flagged by the r7 judge).
 
     Fault tolerance: the default executor-local checkpoint is fast but
-    lost on executor failure; on a long-running 1000-executor job pass
-    ``checkpoint_dir`` (HDFS/S3) to switch every lineage cut to a
-    reliable ``checkpoint()`` — the algorithm is unchanged (see
-    operators.lineage).
+    lost on executor failure; on a long-running 1000-executor job set
+    ``$SPARK_GRAFT_CHECKPOINT_DIR`` (HDFS/S3) to switch every lineage
+    cut to a reliable ``checkpoint()`` — the algorithm is unchanged
+    (see operators.lineage).
     """
     from .lineage import truncate_lineage
 
@@ -516,7 +514,6 @@ def connected_components(
         # Materialize once: `pairs` is typically the whole LSH candidate
         # pipeline (shingle -> minhash -> band join); without this every
         # propagation round would recompute it from the raw corpus.
-        checkpoint_dir,
         eager=False,
     )
     # r13 (guide §2): scope the LOOP's shuffle width to the edge mass
@@ -538,7 +535,7 @@ def connected_components(
     with scale.scoped_conf(
         spark, {"spark.sql.shuffle.partitions": scale.rows_width(spark, n_edges)}
     ):
-        return _cc_loop(edges, labels, max_iter, checkpoint_dir)
+        return _cc_loop(edges, labels, max_iter)
 
 
 def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -587,12 +584,7 @@ def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def _cc_loop(
-    edges: DataFrame,
-    labels: DataFrame,
-    max_iter: int,
-    checkpoint_dir: str | None,
-) -> DataFrame:
+def _cc_loop(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
     """The min-label propagation rounds of :func:`connected_components`
     (split out so the narrowed shuffle conf scopes exactly the loop).
 
@@ -635,14 +627,11 @@ def _cc_loop(
             # the lazy localCheckpoint makes them share one RDD that
             # materializes inside the pair's single blocking job.
             head = _cc_round(
-                edges,
-                truncate_lineage(
-                    head.drop("_changed"), checkpoint_dir, eager=False
-                ),
+                edges, truncate_lineage(head.drop("_changed"), eager=False)
             )
             rounds_left -= 1
         head, obs = _observed(head)
-        labels = truncate_lineage(head, checkpoint_dir, eager=True)
+        labels = truncate_lineage(head, eager=True)
         if obs.get["n_changed"] == 0:
             return labels
     raise RuntimeError(

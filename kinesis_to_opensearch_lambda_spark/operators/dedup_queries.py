@@ -1607,7 +1607,7 @@ def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interleaved A/B at sf1/sf10 in SWEEP_SEMDEDUP_r11.json.
     from .lineage import truncate_lineage
 
-    ranked = truncate_lineage(ranked, None, eager=False)
+    ranked = truncate_lineage(ranked, eager=False)
 
     masked = F.expr("shiftleft(1, B) - 1")
     withB = ranked.crossJoin(F.broadcast(nbits))
@@ -1641,7 +1641,7 @@ def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SCALING_r13).
     from .lineage import truncate_lineage_scaled
 
-    slim = truncate_lineage_scaled(slim, None, source=emb)
+    slim = truncate_lineage_scaled(slim, source=emb)
     a = slim.select(
         F.col("cluster").alias("cluster_a"),
         F.col("t").alias("t_a"),

@@ -33,9 +33,7 @@ TELEPORT_I = 150_000  # 0.15 in micro-units
 DAMPING_PCT = 85  # 0.85 as an integer percentage
 
 
-def pagerank(
-    edges: DataFrame, iters: int = 5, checkpoint_dir: str | None = None
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = 5) -> DataFrame:
     """Integer-exact PageRank over a directed edge list ``(src, dst)``.
 
     Assumes every node has at least one out-edge (callers modelling an
@@ -47,9 +45,10 @@ def pagerank(
     key) and an eager lineage cut to stop plan growth.  Rounds are
     bounded by ``iters`` — PageRank is a fixed-point iteration, not
     a convergence race, so a fixed small round count is the standard
-    production choice.  On a real cluster pass ``checkpoint_dir``
-    (HDFS/S3) for executor-loss-resilient reliable checkpoints; the
-    default is executor-local (see operators.lineage).
+    production choice.  On a real cluster set
+    ``$SPARK_GRAFT_CHECKPOINT_DIR`` (HDFS/S3) for executor-loss-resilient
+    reliable checkpoints; the default is executor-local (see
+    operators.lineage).
 
     Returns ``(node, degree, rank_i)`` with ``rank_i`` in micro-units.
     """
@@ -57,7 +56,7 @@ def pagerank(
     # Static per-round operand: edge list with the source's out-degree
     # attached, materialized ONCE (the join would otherwise recompute
     # the degree aggregation every round).
-    ew = truncate_lineage(edges.join(deg, "src"), checkpoint_dir, eager=False)
+    ew = truncate_lineage(edges.join(deg, "src"), eager=False)
     ranks = deg.select(
         F.col("src").alias("node"),
         F.lit(RANK_UNIT).cast("long").alias("rank_i"),
@@ -77,15 +76,13 @@ def pagerank(
                 ).alias("rank_i"),
             )
         )
-        ranks = truncate_lineage(ranks, checkpoint_dir, eager=True)
+        ranks = truncate_lineage(ranks, eager=True)
     return ranks.join(
         deg.select(F.col("src").alias("node"), F.col("deg").alias("degree")), "node"
     ).select("node", "degree", "rank_i")
 
 
-def label_propagation(
-    edges: DataFrame, iters: int = 3, checkpoint_dir: str | None = None
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over a
     directed edge list ``(src, dst)`` — undirected graphs union both
     directions, as for :func:`pagerank`.
@@ -97,8 +94,8 @@ def label_propagation(
     faster but is irreproducible, the wrong trade for a verified
     pipeline).  Fixed round count, same per-round shape as pagerank:
     one join + one shuffle on the neighbor key + the window pick, with
-    lineage truncated per round (reliable when ``checkpoint_dir`` is
-    set — see operators.lineage).
+    lineage truncated per round (reliable when
+    ``$SPARK_GRAFT_CHECKPOINT_DIR`` is set — see operators.lineage).
 
     Returns ``(node, lbl)`` after ``iters`` rounds.
     """
@@ -106,7 +103,7 @@ def label_propagation(
 
     nodes = edges.select("src").distinct()
     labels = nodes.select(F.col("src").alias("node"), F.col("src").alias("lbl"))
-    e = truncate_lineage(edges, checkpoint_dir, eager=False)
+    e = truncate_lineage(edges, eager=False)
     w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("lbl"))
     for _ in range(iters):
         neigh = e.join(labels, e.src == labels.node).select(
@@ -119,5 +116,5 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("node", "lbl")
         )
-        labels = truncate_lineage(labels, checkpoint_dir, eager=True)
+        labels = truncate_lineage(labels, eager=True)
     return labels

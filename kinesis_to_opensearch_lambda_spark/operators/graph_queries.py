@@ -307,7 +307,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineitem scan fits the executor-local budget, and always cuts
     # when SPARK_GRAFT_CHECKPOINT_DIR points at a reliable FS.
     src = load_table(spark, sf_dir, "lineitem")
-    e = truncate_lineage_scaled(_co_order_edges(spark, sf_dir), None, source=src)
+    e = truncate_lineage_scaled(_co_order_edges(spark, sf_dir), source=src)
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
@@ -325,7 +325,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         ),
-        None,
         source=src,
     )
     # Sorted out-adjacency per source; out_deg <= O(sqrt(E)) under the
@@ -334,7 +333,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         oriented.groupBy("src").agg(
             F.array_sort(F.collect_list("dst")).alias("nbrs")
         ),
-        None,
         source=src,
     )
     tri = (
@@ -552,7 +550,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # up to 4 edge-scale cuts are live at once — derate the per-cut
     # deserialized budget accordingly (r13 ADVICE).
     e = truncate_lineage_scaled(
-        _co_order_edges(spark, sf_dir), None, source=src, live_cuts=4
+        _co_order_edges(spark, sf_dir), source=src, live_cuts=4
     )
     rows = []
     cur = e
@@ -565,7 +563,6 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # keep feeds three subtrees (both semi-joins + the node count)
         keep = truncate_lineage_scaled(
             deg.filter(F.col("deg") >= _KCORE_K).select("node"),
-            None,
             source=node_src,
         )
         # cur feeds two (the edge count + the next round)
@@ -573,7 +570,6 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v"),
-            None,
             source=src,
             live_cuts=4,
         )
@@ -662,7 +658,6 @@ def graph_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select("u", "v").unionByName(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ),
-        None,
         source=src,
         serialized_tier=False,
     )
@@ -674,7 +669,6 @@ def graph_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         und.filter(F.col("u") < _BFS_SEEDS)
         .select(F.col("u").alias("node"))
         .distinct(),
-        None,
         source=node_src,
         live_cuts=7,
     )
@@ -695,13 +689,11 @@ def graph_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         frontier = truncate_lineage_scaled(
             reached.join(visited, "node", "left_anti"),
-            None,
             source=node_src,
             live_cuts=7,
         )
         visited = truncate_lineage_scaled(
             visited.unionByName(frontier).distinct(),
-            None,
             source=node_src,
             live_cuts=7,
         )
@@ -794,7 +786,6 @@ def graph_random_walk_deterministic(spark: SparkSession, sf_dir: str) -> DataFra
             (F.row_number().over(w) - 1).alias("idx"),
             F.count(F.lit(1)).over(wd).alias("deg"),
         ),
-        None,
         source=load_table(spark, sf_dir, "lineitem"),
         eager=True,
         serialized_tier=False,

@@ -2,21 +2,29 @@
 propagation, connected components).
 
 Iterative DataFrame algorithms grow an O(rounds)-deep plan unless each
-round's result is checkpointed.  Two modes:
+round's result is checkpointed.  Two modes, picked for the whole
+deployment by one setting, ``$SPARK_GRAFT_CHECKPOINT_DIR``:
 
-- ``checkpoint_dir=None`` → ``localCheckpoint``: blocks live on
-  executors.  Fast (no FS round-trip) and right for local / short jobs,
-  but an executor loss on a real cluster drops blocks whose lineage has
-  been truncated — the job cannot recover.
-- ``checkpoint_dir=<path>`` → reliable ``checkpoint()`` against a
-  fault-tolerant filesystem (HDFS/S3/NFS): survives executor loss, at
-  the cost of a write + an extra computation of the checkpointed round
-  (Spark recomputes the RDD when materializing a reliable checkpoint;
-  for these operators each round is one join + one aggregation, so the
+- unset (or empty) → ``localCheckpoint``: blocks live on executors.
+  Fast (no FS round-trip) and right for local / short jobs, but an
+  executor loss on a real cluster drops blocks whose lineage has been
+  truncated — the job cannot recover.
+- a path → reliable ``checkpoint()`` against a fault-tolerant
+  filesystem (HDFS/S3/NFS): survives executor loss, at the cost of a
+  write + an extra computation of the checkpointed round (Spark
+  recomputes the RDD when materializing a reliable checkpoint; for
+  these operators each round is one join + one aggregation, so the
   overhead is a constant factor on the round, not the job).
 
-This is the knob the round-4 verdict asked for: durability is a
-parameter, not a docstring promise.
+Durability is a deployment setting, not a per-call argument: every
+registered query builder has the signature ``(spark, sf_dir)``, which
+cannot carry a directory, and a cluster wants every cut reliable at
+once.  Motivation (r9 sweep, SWEEP_SF10_r09.json): a long heavy-entry
+session died of GCLocker allocation thrash evicting a localCheckpoint
+block mid-CC — executor-local blocks share the sick JVM's fate,
+reliable checkpoint files do not.  ``tools/sweep.py --checkpoint-dir``
+sets the variable; on a real cluster set it to an HDFS/S3 path in
+spark-env.
 """
 
 from __future__ import annotations
@@ -27,44 +35,30 @@ from pyspark.sql import DataFrame
 
 from .. import scale
 
-# Deployment-level override: when a caller passes checkpoint_dir=None
-# (every registered query builder does — the registry signature is
-# (spark, sf_dir) and cannot thread the knob), this env var switches
-# ALL lineage cuts to reliable checkpoints at once.  Motivation
-# (r9 sweep, SWEEP_SF10_r09.json): a long heavy-entry session died of
-# GCLocker allocation thrash evicting a localCheckpoint block mid-CC —
-# executor-local blocks share the sick JVM's fate, reliable checkpoint
-# files do not.  tools/sweep.py sets it from --checkpoint-dir; on a
-# real cluster set it to an HDFS/S3 path in spark-env.
 CHECKPOINT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
 
 
-def truncate_lineage(
-    df: DataFrame, checkpoint_dir: str | None, eager: bool = True
-) -> DataFrame:
+def _reliable_dir() -> str | None:
+    """The deployment's reliable checkpoint directory, or None for
+    executor-local cuts (an exported-but-empty variable included)."""
+    return os.environ.get(CHECKPOINT_DIR_ENV) or None
+
+
+def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Cut ``df``'s lineage: reliable ``checkpoint()`` into
-    ``checkpoint_dir`` when set, else executor-local
+    ``$SPARK_GRAFT_CHECKPOINT_DIR`` when it is set, else executor-local
     ``localCheckpoint()``.  Eager by default — iterative callers want
     the materialization job to run now so the next round's plan starts
-    from the checkpoint.
-
-    An explicit ``checkpoint_dir`` argument wins; when it is None the
-    ``SPARK_GRAFT_CHECKPOINT_DIR`` env var is consulted so whole
-    deployments (sweeps, cluster jobs running registry builders whose
-    signature cannot carry the knob) can opt into reliable checkpoints
-    without touching call sites."""
-    if checkpoint_dir is None:
-        checkpoint_dir = os.environ.get(CHECKPOINT_DIR_ENV) or None
+    from the checkpoint."""
+    checkpoint_dir = _reliable_dir()
     if checkpoint_dir is None:
         return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
+    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
     return df.checkpoint(eager=eager)
 
 
 def truncate_lineage_scaled(
     df: DataFrame,
-    checkpoint_dir: str | None,
     source: DataFrame,
     eager: bool = False,
     live_cuts: int = 3,
@@ -72,9 +66,9 @@ def truncate_lineage_scaled(
 ) -> DataFrame:
     """Cut ``df``'s lineage with storage matched to the frame's scale.
 
-    - A reliable checkpoint dir (argument or $SPARK_GRAFT_CHECKPOINT_DIR)
-      always cuts: the blocks land on a fault-tolerant FS, not in
-      executor heap — the cluster deployment path.
+    - A reliable checkpoint dir ($SPARK_GRAFT_CHECKPOINT_DIR) always
+      cuts: the blocks land on a fault-tolerant FS, not in executor
+      heap — the cluster deployment path.
     - Otherwise ``scale.cut_tier`` picks the executor-local tier from
       ``source``'s scan bytes, the heap and ``live_cuts`` (the number
       of concurrently-live cuts in the calling query; default 3, the
@@ -98,13 +92,11 @@ def truncate_lineage_scaled(
     (isolated fresh sessions), while kcore/triangle won 197.6→160.6 /
     372.0→357.6 s.
     """
-    if checkpoint_dir is None:
-        checkpoint_dir = os.environ.get(CHECKPOINT_DIR_ENV) or None
-    if checkpoint_dir is not None:
-        return truncate_lineage(df, checkpoint_dir, eager=eager)
+    if _reliable_dir() is not None:
+        return truncate_lineage(df, eager=eager)
     tier = scale.cut_tier(df, source, live_cuts)
     if tier == "deserialized":
-        return truncate_lineage(df, None, eager=eager)
+        return df.localCheckpoint(eager=eager)
     if tier == "serialized" and serialized_tier:
         from pyspark import StorageLevel
 

@@ -3,10 +3,8 @@ columns with typed metadata.
 
 The Spark-side plumbing is real — schemas, Arrow-batched
 ``mapInPandas`` operators, partitioning discipline — while the actual
-codec work is stubbed (the image/audio libraries are not in this
-container): decode functions raise ``NotImplementedError`` unless a
-deterministic fake decode is requested, so the pipeline shape is fully
-testable.
+codec work is a deterministic fake (no image/audio codec library is a
+dependency), so the pipeline shape is fully testable.
 
 Scale notes: binary payloads ride in the same row as their metadata, so
 filters on metadata prune *before* bytes move (select the metadata
@@ -26,13 +24,6 @@ from pyspark.sql import functions as F
 
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, byte_offset bigint"
 
-try:  # pragma: no cover - not present in this container
-    from PIL import Image  # noqa: F401
-
-    HAS_PIL = True
-except ImportError:
-    HAS_PIL = False
-
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Test-table adapter: materialize an opaque binary column (the
@@ -45,17 +36,6 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.lower(F.hex(F.substring(text_col, 1, 4).cast("binary"))).alias("header_hex"),
         F.md5(text_col).alias("checksum"),
     )
-
-
-def decode_image(payload: bytes):  # pragma: no cover - stub
-    """Decode an image payload. STUB: requires PIL, not in this image."""
-    if not HAS_PIL:
-        raise NotImplementedError(
-            "image decode requires PIL; install pillow or use fake_decode_meta"
-        )
-    import io
-
-    return Image.open(io.BytesIO(payload))
 
 
 def fake_decode_meta(n_bytes: int) -> tuple[int, int]:

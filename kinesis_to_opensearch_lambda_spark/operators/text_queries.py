@@ -225,7 +225,7 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc x distinct term), so the executor-local cut applies only
     # while the documents scan fits the storage budget — the sf10
     # graph-cut OOM lesson applied preemptively.
-    tf = truncate_lineage_scaled(tf, None, source=raw)
+    tf = truncate_lineage_scaled(tf, source=raw)
     # tf already holds one row per (doc, word): document frequency is a
     # plain count over it — no second explode, no count_distinct shuffle.
     dfreq = tf.groupBy("word").agg(F.count("*").alias("dfreq"))
@@ -654,7 +654,7 @@ def dedup_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4x — .explain showed four copies.  One materialization of the
     # narrow (doc_id, fp) table (16 bytes/row) feeds all four
     # consumers; the simhash rank-join lineage-cut precedent.
-    kept = truncate_lineage(kept, checkpoint_dir=None)
+    kept = truncate_lineage(kept)
     sizes = kept.groupBy("doc_id").agg(F.count("*").cast("long").alias("n_fps"))
     a = kept.select(F.col("doc_id").alias("doc_a"), "fp")
     b = kept.select(F.col("doc_id").alias("doc_b"), "fp")
@@ -1115,7 +1115,7 @@ def text_bm25_chunk_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documents scan outgrows the storage budget.
     from .lineage import truncate_lineage_scaled
 
-    scored_units = truncate_lineage_scaled(scored_units, None, source=docs)
+    scored_units = truncate_lineage_scaled(scored_units, source=docs)
     corpus = scored_units.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("total_dl"),

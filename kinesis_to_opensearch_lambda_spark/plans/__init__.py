@@ -64,10 +64,3 @@ def python_eval_nodes(df: DataFrame) -> list[str]:
     return re.findall(
         r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan
     )
-
-
-def wholestage_codegen_ids(df: DataFrame) -> set[int]:
-    """Distinct whole-stage-codegen region ids — wider regions mean more
-    of the plan runs as fused generated code."""
-    plan = plan_string(df, "simple")
-    return {int(m) for m in re.findall(r"WholeStageCodegen \((\d+)\)", plan)}

@@ -2,17 +2,21 @@
 
 Three inputs drive them: the bytes a query reads (:func:`source_bytes`
 for a streaming operator's local micro-batch source, :func:`scan_bytes`
-for a DataFrame's file scan), the heap of the JVM that holds cached
-blocks (:func:`heap_bytes`), and the session's width (shuffle
-partitions, default parallelism).  Partition counts derive from input
-size, never from a constant tuned to one box: a 100 TB input keeps the
-session's settings, the test corpus gets the smallest layout.
+for a DataFrame's file scan, and that scan's file sizes and parquet
+row groups for :func:`fan_out_width`), the heap of the JVM that holds
+cached blocks (:func:`heap_bytes`), and the session's width (shuffle
+partitions, default parallelism).  This is the one module that stats
+files, reads parquet footers or parses byte sizes.  Partition counts
+derive from input size, never from a constant tuned to one box: a
+100 TB input keeps the session's settings, the test corpus gets the
+smallest layout.
 
 Each choice is a plain function of those inputs.  None of them changes
 results, only layout and execution strategy: stateful logic is per key,
-bucketing is pure placement, projection mode and split size are
-execution detail, and a lineage cut never changes expressions.  The
-oracle parity suite asserts that at every width it produces.
+bucketing and a scan fan-out are pure placement, projection mode and
+split size are execution detail, and a lineage cut never changes
+expressions.  The oracle parity suite asserts that at every width it
+produces.
 
 A stateful streaming query's shuffle width is fixed at its first start:
 Spark records ``spark.sql.shuffle.partitions`` in the offset log and
@@ -30,6 +34,7 @@ from __future__ import annotations
 
 import os
 import re
+import sys
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -53,6 +58,10 @@ MIN_SPLIT_BYTES = 1 << 20
 # source parquet bytes and up to 3 live cuts per query keeps the
 # materialized mass comfortably under half the heap.
 CUT_HEAP_FRACTION = 64
+
+# A file scan of at most cores / this many tasks is starved: one cheap
+# round-robin shuffle of its narrow input is worth full-width execution.
+FAN_OUT_MIN_FACTOR = 2
 
 
 # --- inputs ----------------------------------------------------------
@@ -125,16 +134,43 @@ def scan_bytes(source: DataFrame) -> int:
     py4j round-trip per file to a path whose cluster story is the
     checkpoint dir anyway.
     """
-    files = source.inputFiles()
-    if not files:
-        return 1 << 62
+    sizes = _local_sizes(source.inputFiles())
+    return sum(sizes) if sizes else 1 << 62
+
+
+def _local_path(uri: str) -> str:
+    return uri[len("file:"):] if uri.startswith("file:") else uri
+
+
+def _local_sizes(uris: list[str]) -> list[int] | None:
+    """Local sizes of these URIs, or None if any is not a readable
+    local file."""
+    try:
+        return [os.path.getsize(_local_path(uri)) for uri in uris]
+    except OSError:
+        return None
+
+
+def _row_group_count(uris: list[str]) -> int | None:
+    """Total parquet row groups across ``uris`` (None for non-parquet
+    sources, whose byte-range splits are genuinely row-bearing)."""
     total = 0
-    for uri in files:
-        path = uri[len("file:"):] if uri.startswith("file:") else uri
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return 1 << 62
+    try:
+        import pyarrow.parquet as pq
+
+        for uri in uris:
+            path = _local_path(uri)
+            if not path.endswith(".parquet"):
+                return None
+            total += pq.ParquetFile(path).metadata.num_row_groups
+    except Exception as exc:
+        # A footer-read failure disables the row-group cap (the
+        # estimate falls back to byte-range splits, which can only
+        # OVER-estimate width and suppress the fan-out).  Say so — a
+        # silent fallback here is how a single-row-group file regresses
+        # to a single-task scan.
+        print(f"# fan_out: row-group cap skipped ({exc!r})", file=sys.stderr)
+        return None
     return total
 
 
@@ -207,6 +243,60 @@ def scan_split(spark: SparkSession, nbytes: int, n_batches: int) -> str:
     cores = max(1, spark.sparkContext.defaultParallelism)
     per = max(MIN_SPLIT_BYTES, -(-nbytes // max(1, n_batches) // cores))
     return str(min(prev, per))
+
+
+def fan_out_width(df: DataFrame) -> int | None:
+    """Repartition width for a parallelism-starved file scan:
+    defaultParallelism when the scan runs at most cores /
+    ``FAN_OUT_MIN_FACTOR`` tasks, else None (pass the frame through).
+
+    Parquet scans parallelize at row-group granularity; a source laid
+    out as few large row groups (the test tables are single-row-group
+    files) binds CPU-heavy per-row operators (md5 shingling, vector
+    folds) to a handful of tasks.  Already-wide scans — the 100 TB
+    case, thousands of row groups — pass through, so a fan-out never
+    adds a shuffle where the source is properly laid out.  In-memory
+    and non-local sources pass through too: there is no local layout
+    to measure.
+
+    The task count reproduces Spark's own split math from file
+    metadata instead of probing ``df.rdd`` (which forces a full plan
+    conversion): ``maxSplitBytes = min(maxPartitionBytes,
+    max(openCostInBytes, totalBytes / defaultParallelism))``, then
+    bin-packing where each file costs ``size + openCostInBytes``.
+    """
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    sizes = _local_sizes(files) if files else None
+    if sizes is None:
+        return None
+    max_bytes = parse_mem(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    open_cost = parse_mem(spark.conf.get("spark.sql.files.openCostInBytes", "4194304"))
+    total = sum(sizes) + open_cost * len(sizes)
+    max_split = min(max_bytes, max(open_cost, total // max(1, target)))
+    # Packing merges small files into shared tasks, so the task count is
+    # the packed bin count — NOT one task per file (a per-file estimate
+    # over-counts on many-tiny-file layouts and would suppress the
+    # fan-out exactly when the scan is most starved).
+    tasks = max(1, -(-total // max_split))
+    # Byte-range splits are an UPPER BOUND on useful width: a parquet
+    # row group belongs entirely to the split containing its start, so
+    # a file with fewer row groups than splits yields row-carrying
+    # tasks only for those row groups — the rest scan footer bytes and
+    # emit nothing.  Found at sf10: a 51 MB single-row-group embeddings
+    # file estimated 13 splits (above the fan-out threshold, so no
+    # repartition) but executed as ONE row-bearing task — brute-force
+    # cosine ran single-threaded, 75s instead of 8s.  Every parquet file
+    # holds >=1 row group, so on a listing wider than the cluster the
+    # cap cannot pull the count below the threshold, and reading
+    # thousands of footers driver-side would be pure cost: footers are
+    # read only for listings of at most ``target`` files.
+    if len(files) <= target:
+        row_groups = _row_group_count(files)
+        if row_groups is not None:
+            tasks = min(tasks, max(1, row_groups))
+    return target if tasks * FAN_OUT_MIN_FACTOR <= target else None
 
 
 def srp_index_buckets(spark: SparkSession) -> int:

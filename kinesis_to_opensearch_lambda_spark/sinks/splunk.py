@@ -119,12 +119,18 @@ class SplunkHECSink(ChunkedTransportSink):
         frag = F.to_json(F.struct(F.col("datetime").alias("@timestamp")))
         # '{"@timestamp":"..."}' -> '"@timestamp":"..."'
         ts_pair = F.substring(frag, 2, F.length(frag) - 2)
+        # An empty object ('{}', '{ }') takes no separating comma.  Every
+        # match of the emptiness regex has '}' or a Java ``\s`` character
+        # second, so the full-text regex runs only behind that one-character
+        # test (``AND`` evaluates its right side only when the left holds).
+        second = F.substr(event, F.lit(2), F.lit(1))
+        empty = second.isin("}", " ", "\t", "\n", "\x0b", "\f", "\r") & F.regexp_like(
+            event, F.lit(r"^\{\s*\}$")
+        )
         injected = F.concat(
             F.lit("{"),
             ts_pair,
-            F.when(F.regexp_like(event, F.lit(r"^\{\s*\}$")), F.lit("")).otherwise(
-                F.lit(",")
-            ),
+            F.when(empty, F.lit("")).otherwise(F.lit(",")),
             F.substr(event, F.lit(2)),
         )
         # the constant tail ',"sourcetype":"json","index":...}', rendered once

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import scale
+
 TABLES: tuple[str, ...] = (
     "region",
     "nation",
@@ -87,140 +89,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _parse_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ('134217728', '134217728b', '128m', '128MB')."""
-    s = str(v).strip().lower().removesuffix("b")
-    if s and s[-1] in _SIZE_SUFFIX:
-        return int(float(s[:-1]) * _SIZE_SUFFIX[s[-1]])
-    return int(s)
-
-
-# fan_out width estimates, keyed by (files, confs): repeated load_table
-# calls on the same immutable parquet roots must not re-stat every file —
-# on a 100k-file table that is a driver-side listing in the query path.
-_FAN_OUT_CACHE: dict[tuple, int] = {}
-
-
-def _scan_task_estimate(
-    files: tuple[str, ...], max_bytes: int, open_cost: int, target: int
-) -> int | None:
-    """Estimate Spark's parquet scan task count using the engine's own
-    split math: ``maxSplitBytes = min(maxPartitionBytes,
-    max(openCostInBytes, totalBytes / defaultParallelism))``, then
-    bin-packing where each split costs ``size + openCostInBytes``.
-    Returns None when file sizes are unavailable (non-local source)."""
-    key = (files, max_bytes, open_cost, target)
-    if key in _FAN_OUT_CACHE:
-        return _FAN_OUT_CACHE[key]
-    sizes = []
-    for uri in files:
-        path = uri[len("file:"):] if uri.startswith("file:") else uri
-        try:
-            sizes.append(os.path.getsize(path))
-        except OSError:
-            return None  # non-local source: trust the scan's own layout
-    total = sum(sizes) + open_cost * len(sizes)
-    max_split = min(max_bytes, max(open_cost, total // max(1, target)))
-    # Packing merges small files into shared tasks, so the task count is
-    # the packed bin count — NOT one task per file (a per-file estimate
-    # over-counts on many-tiny-file layouts and would suppress the
-    # fan-out exactly when the scan is most starved).
-    packed = max(1, -(-total // max_split))
-    # Byte-range splits are an UPPER BOUND on useful width: a parquet
-    # row group belongs entirely to the split containing its start, so
-    # a file with fewer row groups than splits yields row-carrying
-    # tasks only for those row groups — the rest scan footer bytes and
-    # emit nothing.  Found at sf10: a 51 MB single-row-group embeddings
-    # file estimated 13 splits (above the fan-out threshold, so no
-    # repartition) but executed as ONE row-bearing task — brute-force
-    # cosine ran single-threaded, 75s instead of 8s.  Cap the estimate
-    # by the actual row-group count (footer-only metadata read, cached
-    # like the sizes).
-    # Every parquet file holds >=1 row group, so rg_total >= len(files):
-    # on a listing wider than the cluster the cap cannot pull the
-    # estimate below any fan-out threshold (<= target), and reading
-    # thousands of footers driver-side would be pure cost — exactly the
-    # 100 TB layout.  Footer reads are therefore bounded to listings of
-    # at most `target` files (the only case the cap can matter).
-    if len(files) <= target:
-        rg_total = _row_group_count(files)
-        if rg_total is not None:
-            packed = min(packed, max(1, rg_total))
-    _FAN_OUT_CACHE[key] = packed
-    return packed
-
-
-def _row_group_count(files: tuple[str, ...]) -> int | None:
-    """Total parquet row groups across ``files`` (None for non-parquet
-    sources, whose byte-range splits are genuinely row-bearing)."""
-    key = ("rg", files)
-    if key in _FAN_OUT_CACHE:
-        return _FAN_OUT_CACHE[key]
-    total: int | None = 0
-    try:
-        import pyarrow.parquet as pq
-
-        for uri in files:
-            path = uri[len("file:"):] if uri.startswith("file:") else uri
-            if not path.endswith(".parquet"):
-                total = None
-                break
-            total += pq.ParquetFile(path).metadata.num_row_groups
-    except Exception as exc:
-        # A transient footer-read failure disables the row-group cap
-        # for this listing (the estimate falls back to byte-range
-        # splits, which can only OVER-estimate width and suppress the
-        # fan-out).  Cache the None so the footers are not re-opened
-        # per query, and say so — a silent fallback here is how a
-        # single-row-group file regresses to a single-task scan.
-        import sys
-
-        print(f"# fan_out: row-group cap skipped ({exc!r})", file=sys.stderr)
-        total = None
-    _FAN_OUT_CACHE[key] = total
-    return total
-
-
-def fan_out(df: DataFrame, min_factor: int = 2) -> DataFrame:
-    """Spread a parallelism-starved scan across the cluster.
-
-    Parquet scans parallelize at row-group granularity; a source laid
-    out as few large row groups (the test tables are single-row-group
-    files) binds CPU-heavy per-row operators (md5 shingling, vector
-    folds) to a handful of tasks.  When the scan has at most
-    ``cores / min_factor`` partitions, one cheap round-robin shuffle of
-    the (narrow) input unlocks full-width execution.  Already-wide scans
-    — the 100 TB case, thousands of row groups — pass through untouched,
-    so this never adds a shuffle where the source is properly laid out.
-
-    The width estimate reproduces Spark's own split/bin-packing math
-    (openCostInBytes included) from file metadata instead of probing
-    ``df.rdd`` (which forces a full plan conversion), and is cached per
-    (files, conf) so repeated loads never re-stat the listing.
-    """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    files = tuple(df.inputFiles())
-    if not files:
-        return df  # in-memory/derived source: no scan layout to widen
-    max_bytes = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    open_cost = _parse_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4194304"))
-    est = _scan_task_estimate(files, max_bytes, open_cost, target)
-    if est is not None and est * min_factor <= target:
-        return df.repartition(target)
-    return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+def fan_out(df: DataFrame) -> DataFrame:
+    """Spread a parallelism-starved scan across the cluster: one
+    round-robin repartition to the width :func:`scale.fan_out_width`
+    picks, or ``df`` unchanged when it picks none."""
+    width = scale.fan_out_width(df)
+    return df if width is None else df.repartition(width)

@@ -1,11 +1,10 @@
-"""truncate_lineage durability knob (operators/lineage.py).
+"""truncate_lineage durability (operators/lineage.py).
 
-The explicit ``checkpoint_dir`` argument always wins; when callers pass
-None (every registry builder — the (spark, sf_dir) signature cannot
-carry the knob) the SPARK_GRAFT_CHECKPOINT_DIR env var switches the cut
-to a reliable checkpoint().  This is how tools/sweep.py
---checkpoint-dir closes the r9 GCLocker/localCheckpoint-eviction
-session-death class without touching any call site.
+The one deployment setting, SPARK_GRAFT_CHECKPOINT_DIR, switches every
+cut to a reliable checkpoint(); unset or empty, cuts are
+executor-local.  This is how tools/sweep.py --checkpoint-dir closes the
+r9 GCLocker/localCheckpoint-eviction session-death class without
+touching any call site.
 """
 
 from __future__ import annotations
@@ -25,20 +24,13 @@ def _n_files(d: str) -> int:
     return sum(len(fs) for _, _, fs in os.walk(d))
 
 
-def test_explicit_dir_writes_reliable_checkpoint(spark, tmp_path):
-    ckpt = str(tmp_path / "explicit")
-    out = truncate_lineage(spark.range(100), ckpt, eager=True)
-    assert out.count() == 100
-    # File presence IS the durability evidence (out.rdd wraps a fresh
-    # javaToPython RDD, so isCheckpointed() can't observe the cut).
-    assert _n_files(ckpt) > 0, "reliable checkpoint wrote no files"
-
-
 def test_env_var_fallback_writes_reliable_checkpoint(spark, tmp_path, monkeypatch):
     ckpt = str(tmp_path / "from-env")
     monkeypatch.setenv(CHECKPOINT_DIR_ENV, ckpt)
-    out = truncate_lineage(spark.range(100), None, eager=True)
+    out = truncate_lineage(spark.range(100), eager=True)
     assert out.count() == 100
+    # File presence IS the durability evidence (out.rdd wraps a fresh
+    # javaToPython RDD, so isCheckpointed() can't observe the cut).
     assert _n_files(ckpt) > 0, "env-var checkpoint dir got no files"
 
 
@@ -47,7 +39,7 @@ def test_default_stays_local(spark, monkeypatch, tmp_path):
     # files appear in a candidate dir, and execution succeeds.
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
     probe = str(tmp_path / "never-used")
-    out = truncate_lineage(spark.range(10), None, eager=True)
+    out = truncate_lineage(spark.range(10), eager=True)
     assert out.count() == 10
     assert not os.path.exists(probe)
 
@@ -56,7 +48,7 @@ def test_empty_env_var_means_local(spark, monkeypatch):
     # An exported-but-empty var (e.g. SPARK_GRAFT_CHECKPOINT_DIR= in a
     # wrapper script) must not become setCheckpointDir("").
     monkeypatch.setenv(CHECKPOINT_DIR_ENV, "")
-    out = truncate_lineage(spark.range(10), None, eager=True)
+    out = truncate_lineage(spark.range(10), eager=True)
     assert out.count() == 10
 
 
@@ -93,7 +85,7 @@ def test_scaled_cut_fires_under_budget(spark, tmp_path, monkeypatch):
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
     _heap(monkeypatch, 1 << 40)  # 1 TiB heap: the tiny file fits
     src = _parquet_df(spark, tmp_path)
-    out = truncate_lineage_scaled(src.selectExpr("id * 2 AS v"), None, source=src)
+    out = truncate_lineage_scaled(src.selectExpr("id * 2 AS v"), source=src)
     assert out is not src
     # a cut plan no longer references the parquet scan
     assert "Scan parquet" not in out._jdf.queryExecution().toString()
@@ -110,7 +102,7 @@ def test_scaled_cut_over_deser_budget_cuts_serialized(spark, tmp_path, monkeypat
     # serialized one (the whole heap) just does
     _heap(monkeypatch, scale.scan_bytes(src))
     derived = src.selectExpr("id * 2 AS v")
-    out = truncate_lineage_scaled(derived, None, source=src, eager=True)
+    out = truncate_lineage_scaled(derived, source=src, eager=True)
     assert out is not derived
     assert "Scan parquet" not in out._jdf.queryExecution().toString()
     assert out.count() == 1000
@@ -126,7 +118,7 @@ def test_scaled_cut_lapses_over_both_budgets(spark, tmp_path, monkeypatch):
     _heap(monkeypatch, 1)  # 1 byte: nothing fits
     src = _parquet_df(spark, tmp_path)
     derived = src.selectExpr("id * 2 AS v")
-    out = truncate_lineage_scaled(derived, None, source=src)
+    out = truncate_lineage_scaled(derived, source=src)
     assert out is derived  # returned UNCUT — results identical by construction
     assert out.count() == 1000
 
@@ -141,7 +133,7 @@ def test_scaled_cut_serialized_tier_opt_out(spark, tmp_path, monkeypatch):
     _heap(monkeypatch, scale.scan_bytes(src))  # serialized tier would fit
     derived = src.selectExpr("id * 2 AS v")
     out = truncate_lineage_scaled(
-        derived, None, source=src, serialized_tier=False
+        derived, source=src, serialized_tier=False
     )
     assert out is derived
 
@@ -157,13 +149,13 @@ def test_scaled_cut_live_cuts_derates_budget(spark, tmp_path, monkeypatch):
     derived = src.selectExpr("id * 2 AS v")
     assert (
         truncate_lineage_scaled(
-            derived, None, source=src, live_cuts=10**9, serialized_tier=False
+            derived, source=src, live_cuts=10**9, serialized_tier=False
         )
         is derived
     )
     assert (
         truncate_lineage_scaled(
-            derived, None, source=src, live_cuts=3, serialized_tier=False
+            derived, source=src, live_cuts=3, serialized_tier=False
         )
         is not derived
     )
@@ -212,7 +204,7 @@ def test_scaled_cut_unknown_source_fails_safe(spark, monkeypatch):
     monkeypatch.delenv(CHECKPOINT_DIR_ENV, raising=False)
     src = spark.range(10)
     derived = src.selectExpr("id + 1 AS v")
-    out = truncate_lineage_scaled(derived, None, source=src)
+    out = truncate_lineage_scaled(derived, source=src)
     assert out is derived
 
 
@@ -224,7 +216,7 @@ def test_scaled_cut_reliable_dir_always_cuts(spark, tmp_path, monkeypatch):
     monkeypatch.setenv(CHECKPOINT_DIR_ENV, ckpt)
     src = _parquet_df(spark, tmp_path)
     out = truncate_lineage_scaled(
-        src.selectExpr("id * 2 AS v"), None, source=src, eager=True
+        src.selectExpr("id * 2 AS v"), source=src, eager=True
     )
     assert out.count() == 1000
     assert _n_files(ckpt) > 0, "reliable checkpoint wrote no files"

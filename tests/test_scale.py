@@ -1,13 +1,20 @@
-"""The scale module's conf scope, and the package's env surface."""
+"""The scale module's conf scope and scan fan-out, and the package's
+env surface and size probes."""
 
 from __future__ import annotations
 
 import ast
+import os
 import pathlib
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark import SparkContext
 
 from kinesis_to_opensearch_lambda_spark import scale
+from kinesis_to_opensearch_lambda_spark.sources.batch import fan_out
 
 PACKAGE = pathlib.Path(scale.__file__).parent
 
@@ -84,3 +91,118 @@ def test_env_surface_is_deployment_settings_only():
     # config.py hands the whole environment to the reference's own
     # deployment keys (es_endpoint, index_prefix)
     assert other == ["config.py"]
+
+
+# --- scan fan-out ------------------------------------------------------
+#
+# The test tables are one single-row-group file each, so the registry
+# never reaches most branches of the fan-out decision.  These frames do.
+# The width is pinned at 32 so "starved" (at most 16 tasks) does not
+# depend on the host's cores.
+
+WIDTH = 32
+
+
+@pytest.fixture
+def wide(monkeypatch):
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: WIDTH))
+
+
+def _write(path: pathlib.Path, n_files: int, rows: int, row_groups: int) -> str:
+    """``n_files`` uncompressed parquet files of ``rows`` random longs
+    (8 bytes a row), each with ``row_groups`` row groups."""
+    path.mkdir()
+    rng = np.random.default_rng(7)
+    for i in range(n_files):
+        table = pa.table({"v": rng.integers(0, 1 << 62, rows)})
+        pq.write_table(
+            table,
+            path / f"part-{i}.parquet",
+            row_group_size=-(-rows // row_groups),
+            compression="none",
+        )
+    return str(path)
+
+
+def _repartitioned_to(df) -> int | None:
+    plan = df._jdf.queryExecution().logical().toString()
+    head = plan.splitlines()[0]
+    if not head.startswith("Repartition "):
+        return None
+    width, shuffle = head[len("Repartition "):].split(", ")
+    assert shuffle == "true", plan
+    return int(width)
+
+
+def test_fan_out_packs_many_tiny_files_into_few_bins(spark, tmp_path, wide):
+    # 12 files of 4 row groups: each costs openCostInBytes (4 MB) plus a
+    # few KB, so they pack into 13 bins of 4 MB, at most half the width.
+    # Counted per row group (48) the scan would look wide.
+    df = spark.read.parquet(_write(tmp_path / "tiny", 12, 400, 4))
+    assert _repartitioned_to(fan_out(df)) == WIDTH
+
+
+def _small_splits(spark):
+    """A 1 KB open cost: a 1 MB file splits into 33 byte ranges of
+    1 MB / 32 (under the 64 KB cap)."""
+    return scale.scoped_conf(
+        spark,
+        {
+            "spark.sql.files.maxPartitionBytes": "64k",
+            "spark.sql.files.openCostInBytes": "1k",
+        },
+    )
+
+
+def test_fan_out_caps_one_row_group_file_by_its_row_groups(spark, tmp_path, wide):
+    # 33 byte-range splits, but only the split holding the one row
+    # group's start carries rows: the scan is one task wide.
+    df = spark.read.parquet(_write(tmp_path / "one_rg", 1, 1 << 17, 1))
+    with _small_splits(spark):
+        assert _repartitioned_to(fan_out(df)) == WIDTH
+
+
+def test_fan_out_passes_a_scan_with_enough_row_groups(spark, tmp_path, wide):
+    # the same 33 splits over 40 row groups are all row-bearing
+    df = spark.read.parquet(_write(tmp_path / "many_rg", 1, 1 << 17, 40))
+    with _small_splits(spark):
+        assert fan_out(df) is df
+
+
+def test_fan_out_passes_a_source_it_cannot_stat(spark, tmp_path, wide, monkeypatch):
+    path = _write(tmp_path / "gone", 1, 100, 1)
+    missing = spark.read.parquet(path)
+    os.remove(os.path.join(path, "part-0.parquet"))
+    assert fan_out(missing) is missing
+    remote = spark.read.parquet(_write(tmp_path / "remote", 1, 100, 1))
+    monkeypatch.setattr(remote, "inputFiles", lambda: ["s3a://bucket/t/part-0.parquet"])
+    assert fan_out(remote) is remote
+
+
+def test_fan_out_passes_an_in_memory_frame(spark, wide):
+    df = spark.range(10)
+    assert fan_out(df) is df
+
+
+def test_size_probes_live_in_scale():
+    """Only scale.py stats files, lists a scan's files or reads parquet
+    footers, and reliable lineage cuts are a deployment setting: no
+    function takes a checkpoint directory except the streaming fan-out,
+    whose checkpoint is the query's own location."""
+    probes = ("os.path.getsize", ".inputFiles(", "ParquetFile")
+    found = {
+        (str(p.relative_to(PACKAGE)), probe)
+        for p in PACKAGE.rglob("*.py")
+        for probe in probes
+        if probe in p.read_text()
+    }
+    assert found == {("scale.py", probe) for probe in probes}
+    takers = {
+        node.name
+        for p in PACKAGE.rglob("*.py")
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and "checkpoint_dir"
+        in [a.arg for a in node.args.args + node.args.kwonlyargs + node.args.posonlyargs]
+    }
+    assert takers == {"dual_sink_fanout"}

@@ -251,6 +251,10 @@ HOSTILE_HEC_TEXTS = [
     '{"random_id": "no-dt", "ip": null}',
     "{}",
     "{ }",
+    # the event's second character is each Java \s character, so the
+    # emptiness regex runs and must answer "not empty" (\x0b and \f are
+    # not JSON whitespace, so those two records are skipped)
+    *['{' + ws + f'"random_id": "ws-{ord(ws)}", ' + DT + "}" for ws in " \t\n\x0b\f\r"],
     # non-object JSON and invalid JSON are skipped
     "[1, 2]",
     '"@timestamp"',

@@ -3,6 +3,9 @@
 
 Usage: python tools/noop_time.py <name[,name...]> [SF_DIR] [CPUS] [RUNS]
 
+CPUS defaults to $SPARK_GRAFT_CPUS, else the host's cores
+(``session.DEFAULT_CPUS``).
+
 Times ``df.write.format("noop").mode("overwrite").save()`` — every
 column of every row is computed and discarded — after one warmup pass,
 and prints per-query samples + median as one JSON line.  This is the
@@ -25,11 +28,11 @@ sys.path.insert(0, REPO)
 def main() -> None:
     names = [n.strip() for n in sys.argv[1].split(",") if n.strip()]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    cpus = sys.argv[3] if len(sys.argv) > 3 else "32"
-    runs = int(sys.argv[4]) if len(sys.argv) > 4 else 3
-
     from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
-    from kinesis_to_opensearch_lambda_spark.session import get_session
+    from kinesis_to_opensearch_lambda_spark.session import DEFAULT_CPUS, get_session
+
+    cpus = sys.argv[3] if len(sys.argv) > 3 else DEFAULT_CPUS
+    runs = int(sys.argv[4]) if len(sys.argv) > 4 else 3
 
     spark = get_session(app_name="noop-time", cpus=cpus)
     samples: dict[str, list[float]] = {}

@@ -3,6 +3,9 @@
 
 Usage: python tools/sweep.py [SF_DIR] [CPUS] [ONLY] [--checkpoint-dir DIR]
 
+CPUS defaults to $SPARK_GRAFT_CPUS, else the host's cores
+(``session.DEFAULT_CPUS``).
+
 Runs every registered query against $SF_DIR (default /root/testdata/sf0.1)
 and compares rows + schema + value-hash with its DuckDB oracle — the same
 comparator strictness as the driver's CORRECTNESS gate.  This is the
@@ -34,6 +37,8 @@ sys.path.insert(0, REPO)
 
 
 def main() -> int:
+    from kinesis_to_opensearch_lambda_spark.session import DEFAULT_CPUS, get_session
+
     argv = list(sys.argv[1:])
     checkpoint_dir = None
     if "--checkpoint-dir" in argv:
@@ -41,14 +46,13 @@ def main() -> int:
         checkpoint_dir = argv[i + 1]
         del argv[i : i + 2]
     sf_dir = argv[0] if len(argv) > 0 else "/root/testdata/sf0.1"
-    cpus = argv[1] if len(argv) > 1 else "16"
+    cpus = argv[1] if len(argv) > 1 else DEFAULT_CPUS
     only = argv[2].split(",") if len(argv) > 2 else None
     if checkpoint_dir:
         os.makedirs(checkpoint_dir, exist_ok=True)
         os.environ["SPARK_GRAFT_CHECKPOINT_DIR"] = checkpoint_dir
         print(f"# reliable checkpoints -> {checkpoint_dir}", flush=True)
     from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
-    from kinesis_to_opensearch_lambda_spark.session import get_session
     from tests.oracle_compare import timed_parity
 
     spark = get_session(app_name="sweep", cpus=cpus)

@@ -21,7 +21,7 @@ from pyspark.sql import SparkSession
 
 from .config import EngineConfig
 from .sinks import OpenSearchBulkSink, SplunkHECSink
-from .sinks.base import deliver
+from .sinks.base import deliver, payload_frame
 from .sinks.splunk import is_disabled
 from .streaming.pipeline import decode_stream
 
@@ -74,7 +74,7 @@ def handler(
     df = decode_stream(records_to_envelope_df(spark, event))
     # one pass, one job (lambda_function.py:141,144,148); its row count
     # is the reference's shared denominator
-    total = deliver(df, sinks)
+    total = deliver(*payload_frame(df, sinks))
     result = {"elasticsearch": 0, "splunk": 0, "total": total}
     if es_sink is not None:
         result["elasticsearch"] = ok = es_sink.last_success

@@ -15,11 +15,11 @@ distributed engine:
   executor inside ``foreachPartition`` — nothing network-ish is
   serialized from the driver;
 - **one pass**: the reference loops over a batch once and hands each
-  record to both sinks (lambda_function.py:140-148).  Here each sink's
-  payload is a nullable column over one projection of the batch, and
-  one ``foreachPartition`` (:func:`deliver`) feeds every sink's non-NULL
-  payloads to that sink's own transport — one Spark job and no persist
-  per batch, however many sinks.
+  record to both sinks (lambda_function.py:140-148).  Here each enabled
+  sink's payload is a nullable column of one projection, built once per
+  query (:func:`payload_frame`), and one ``foreachPartition`` per batch
+  (:func:`deliver`) feeds every sink's non-NULL payloads to its own
+  transport — one Spark job and no persist per batch, however many sinks.
 
 Counters (R17) are Spark accumulators, the distributed analogue of the
 reference's ``success/total`` prints (lambda_function.py:87-88,137-138);
@@ -169,37 +169,37 @@ def _skip_unchanged_zip_rereads() -> None:
     cls.invalidate_caches = invalidate_caches
 
 
-def payload_frame(df: DataFrame, sinks: Sequence[ChunkedTransportSink]) -> DataFrame:
-    """One projection of ``df`` with one nullable payload column per sink
-    (``_p0``, ``_p1``, ...): NULL where that sink skips the row."""
-    frame, payloads = df, []
-    for sink in sinks:
-        frame, payload = sink.payload(frame)
-        payloads.append(payload.alias(f"_p{len(payloads)}"))
-    return frame.select(*payloads)
-
-
-def deliver(df: DataFrame, sinks: Sequence[ChunkedTransportSink]) -> int:
-    """Deliver ``df`` to every enabled sink in one pass: one
-    ``foreachPartition`` over :func:`payload_frame` chunks, retries and
-    counts each sink's non-NULL payloads through that sink's own
-    transport, like the reference's single loop over the batch
-    (lambda_function.py:140-148). Sets each sink's ``last_success`` /
-    ``last_total``; returns the number of rows the pass iterated.
-    """
-    active = []
+def payload_frame(
+    df: DataFrame, sinks: Sequence[ChunkedTransportSink]
+) -> tuple[DataFrame, list[ChunkedTransportSink]]:
+    """``(frame, active)``: ``df`` projected to one nullable payload column
+    per enabled sink (``_p0``, ``_p1``, ...; NULL where it skips the row),
+    and those sinks; a disabled one gets no column, reads 0/0 and says so."""
+    frame, active, payloads = df, [], []
     for sink in sinks:
         if sink.enabled:
+            frame, payload = sink.payload(frame)
+            payloads.append(payload.alias(f"_p{len(active)}"))
             active.append(sink)
         else:
             sink.last_success = sink.last_total = 0
             print(f"{sink.name} delivery is disabled")
-    sc = df.sparkSession.sparkContext
+    return frame.select(*payloads), active
+
+
+def deliver(frame: DataFrame, sinks: Sequence[ChunkedTransportSink]) -> int:
+    """Deliver ``(frame, sinks)`` from :func:`payload_frame` in one pass,
+    like the reference's single loop over the batch
+    (lambda_function.py:140-148): one ``foreachPartition`` chunks,
+    retries and counts each sink's non-NULL payloads through its own
+    transport.  Sets each sink's ``last_success`` / ``last_total``;
+    returns the number of rows the pass iterated."""
+    sc = frame.sparkSession.sparkContext
     acc_rows = sc.accumulator(0)
-    accs = [(sc.accumulator(0), sc.accumulator(0)) for _ in active]
+    accs = [(sc.accumulator(0), sc.accumulator(0)) for _ in sinks]
     # read when the pass runs, not when the sink was built, so that a
     # replaced transport factory takes effect on the next pass
-    specs = [(s.transport_factory, s.max_batch_size, s.max_retries) for s in active]
+    specs = [(s.transport_factory, s.max_batch_size, s.max_retries) for s in sinks]
 
     def deliver_partition(partition: Iterator[Any]) -> None:
         _skip_unchanged_zip_rereads()
@@ -217,8 +217,8 @@ def deliver(df: DataFrame, sinks: Sequence[ChunkedTransportSink]) -> int:
             acc_total.add(box.total)
         acc_rows.add(n)
 
-    payload_frame(df, active).foreachPartition(deliver_partition)
-    for sink, (acc_ok, acc_total) in zip(active, accs):
+    frame.foreachPartition(deliver_partition)
+    for sink, (acc_ok, acc_total) in zip(sinks, accs):
         sink.last_success, sink.last_total = acc_ok.value, acc_total.value
         print(
             f"Successfully sent {sink.last_success}/{sink.last_total} "
@@ -268,5 +268,5 @@ class ChunkedTransportSink:
 
     def write(self, df: DataFrame) -> tuple[int, int]:
         """Deliver ``df``; returns (success_count, total_count)."""
-        deliver(df, [self])
+        deliver(*payload_frame(df, [self]))
         return self.last_success, self.last_total

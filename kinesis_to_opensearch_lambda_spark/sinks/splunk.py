@@ -100,6 +100,13 @@ class SplunkHECSink(ChunkedTransportSink):
         (requests.post(json=events), lambda_function.py:97,121-125), so
         the rendered event text is spliced in verbatim rather than
         re-serialized as a string field.
+
+        The injected pair always takes a comma: the strips never leave
+        ``{}`` where ``datetime`` is non-null.  A stripped span starts
+        with a comma or the key ``"@timestamp"``/``"ip"``, so ``{}``
+        needs the parser's first key to start one; the parser then ends
+        each value where the regex does, so every key it read is
+        ``@timestamp`` or ``ip``.
         """
         # None-guard (lambda_function.py:117-119).  ``OR`` short-circuits:
         # the second parse runs only for id-less rows.
@@ -119,20 +126,11 @@ class SplunkHECSink(ChunkedTransportSink):
         frag = F.to_json(F.struct(F.col("datetime").alias("@timestamp")))
         # '{"@timestamp":"..."}' -> '"@timestamp":"..."'
         ts_pair = F.substring(frag, 2, F.length(frag) - 2)
-        # An empty object ('{}', '{ }') takes no separating comma.  Every
-        # match of the emptiness regex has '}' or a Java ``\s`` character
-        # second, so the full-text regex runs only behind that one-character
-        # test (``AND`` evaluates its right side only when the left holds).
-        second = F.substr(event, F.lit(2), F.lit(1))
-        empty = second.isin("}", " ", "\t", "\n", "\x0b", "\f", "\r") & F.regexp_like(
-            event, F.lit(r"^\{\s*\}$")
-        )
-        injected = F.concat(
-            F.lit("{"),
-            ts_pair,
-            F.when(empty, F.lit("")).otherwise(F.lit(",")),
-            F.substr(event, F.lit(2)),
-        )
+        # A record may start with JSON whitespace (``json.loads`` takes
+        # it); it is dropped only where the text does not start with '{'.
+        trimmed = F.ltrim(event, F.lit(" \t\n\r"))
+        body = F.when(event.startswith("{"), event).otherwise(trimmed)
+        injected = F.concat(F.lit("{"), ts_pair, F.lit(","), F.substr(body, F.lit(2)))
         # the constant tail ',"sourcetype":"json","index":...}', rendered once
         tail = json.dumps(
             {"sourcetype": "json", "index": self.splunk_index},

@@ -6,13 +6,13 @@ two sinks (lambda_function.py:140-148) — is one streaming query here:
     readStream (envelope) -> decode/normalize (operators.pipeline)
       -> writeStream.foreachBatch(fan-out)
 
-Inside ``foreachBatch`` the micro-batch is delivered in one pass
-(``sinks.base.deliver``): each sink's payload is a nullable column over
-one projection of the batch, and one ``foreachPartition`` hands every
-row to both sinks — one source read, one Spark job and no persist per
-micro-batch, exactly the reference's single loop over its batch (the
-two-`writeStream` alternative would read the source twice; SURVEY.md
-§2A R16).
+Each sink's payload is a column of one projection in the query's plan
+(``sinks.base.payload_frame``), analysed once at start and re-planned
+incrementally per micro-batch; inside ``foreachBatch`` one
+``foreachPartition`` (``sinks.base.deliver``) hands every row to both
+sinks — one source read, one Spark job and no persist per micro-batch,
+exactly the reference's single loop over its batch (the two-`writeStream`
+alternative would read the source twice; SURVEY.md §2A R16).
 
 Cadence: the live query fires one trigger per second, the reference's
 cadence — its Kinesis event-source mapping polls each shard once a
@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import pipeline as P
-from ..sinks.base import deliver
+from ..sinks.base import deliver, payload_frame
 
 # The live trigger: the Kinesis event-source mapping's once-per-second
 # poll per shard.
@@ -126,10 +126,11 @@ def dual_sink_fanout(
     stream = decoded
     if dedup_watermark is not None:
         stream = replay_dedup(stream, dedup_watermark)
+    # projected (R6) and full record (R13/R14), once per query
+    stream, sinks = payload_frame(stream, (es_sink, splunk_sink))
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # projected (R6) and full record (R13/R14), one pass
-        n = deliver(batch_df, (es_sink, splunk_sink))
+        n = deliver(batch_df, sinks)
         if on_batch is not None:
             on_batch(epoch_id, n)  # every row the pass iterated
 

@@ -252,9 +252,25 @@ HOSTILE_HEC_TEXTS = [
     "{}",
     "{ }",
     # the event's second character is each Java \s character, so the
-    # emptiness regex runs and must answer "not empty" (\x0b and \f are
-    # not JSON whitespace, so those two records are skipped)
+    # oracle's emptiness regex runs and must answer "not empty" (\x0b and
+    # \f are not JSON whitespace, so those two records are skipped)
     *['{' + ws + f'"random_id": "ws-{ord(ws)}", ' + DT + "}" for ws in " \t\n\x0b\f\r"],
+    # the parser takes single quotes, the regex reads only double-quoted
+    # strings: it spans a single-quoted value holding '"@timestamp":"' to
+    # the next '"', across the pairs after it, and strips a '"ip":null'
+    # inside one; with and without datetime, and a key in either quote
+    "{'note': '\"@timestamp\":\"', " + DT + ", 'random_id': 'sq-span', 'z': '\"'}",
+    "{'note': '\"@timestamp\":\"', 'datetime': '2026-02-18T10:30:00', 'random_id': "
+    "'sq-span-dt', 'z': '\"'}",
+    "{'note': '\"@timestamp\":\"', 'random_id': 'sq-span-no-dt', 'z': '\"'}",
+    "{'random_id': 'sq-ip', 'note': '\"ip\":null', 'datetime': '2026-02-18T10:30:00'}",
+    "{'random_id': 'sq-ip-no-dt', 'note': '\"ip\": null,'}",
+    "{'@timestamp': 'old', 'ip': null, 'random_id': 'sq-keys', " + DT + "}",
+    '{"@timestamp": "old", ' + "'random_id': 'sq-rest', 'datetime': '2026-02-18T10:30:00'}",
+    '{"ip": null, ' + "'random_id': 'sq-rest-ip', 'datetime': '2026-02-18T10:30:00'}",
+    # regex strips '"@timestamp":"...' up to the end, leaving '{}'; the
+    # parser reads one @timestamp key holding the rest, so no datetime
+    '{"@timestamp": "' + "', 'datetime': '2026-02-18T10:30:00', 'random_id': 'sq-in-ts', 'z': '\"}",
     # non-object JSON and invalid JSON are skipped
     "[1, 2]",
     '"@timestamp"',
@@ -267,6 +283,25 @@ HOSTILE_HEC_TEXTS = [
 
 def test_hec_payload_bytes_match_unguarded_chain_on_hostile_records(spark):
     assert_hec_bytes_match_unguarded(spark, HOSTILE_HEC_TEXTS)
+
+
+def test_hec_event_after_leading_whitespace_is_the_reference_dict(spark):
+    """A decoded record may start with JSON whitespace, as
+    ``json.loads`` accepts: its HEC payload still parses, and its event
+    is the reference transform's dict."""
+    from kinesis_to_opensearch_lambda_spark.streaming.pipeline import decode_stream
+
+    from .test_properties import model_splunk_event
+
+    record = '{"datetime": "2024-01-01T00:00:00.000000", "random_id": "%s", "ip": ""}'
+    texts = [lead + record % f"lead-{i}" for i, lead in enumerate([" ", "\n", "\r\n", "\t"])]
+    env = spark.createDataFrame(
+        [(base64.b64encode(t.encode()).decode(),) for t in texts], "kinesis_data string"
+    )
+    sink = SplunkHECSink(transport_factory=None, splunk_index="audit")
+    got = [json.loads(r.payload)["event"] for r in sink.serialize(decode_stream(env)).collect()]
+    want = [model_splunk_event(json.loads(t)) for t in texts]
+    assert sorted(got, key=lambda e: e["random_id"]) == want
 
 
 _SEPARATORS = st.sampled_from([(", ", ": "), (",", ":"), (" , ", " :  "), (",\n", "\t:\t")])

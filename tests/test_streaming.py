@@ -160,6 +160,155 @@ def test_fanout_runs_one_spark_job_per_micro_batch(spark, tmp_path, stream_recor
     assert len(SpoolDirTransport(str(tmp_path / "hec")).read_back()) == 12
 
 
+def _three_batch_stream(spark, tmp_path, records):
+    """A stream of ``records`` as three one-file micro-batches."""
+    src, n = str(tmp_path / "envelopes"), len(records) // 3
+    for i in range(3):
+        write_envelope_files(spark, src, records[n * i:n * i + n], n_files=1)
+    return decode_stream(read_envelope_stream(spark, src, max_files_per_trigger=1))
+
+
+def _spy_payload(sink, calls: list[str]) -> None:
+    """Record each call of ``sink.payload`` in ``calls``."""
+    payload = sink.payload
+
+    def spy(df):
+        calls.append(sink.name)
+        return payload(df)
+
+    sink.payload = spy
+
+
+def test_fanout_builds_each_payload_once_per_query(spark, tmp_path, stream_records):
+    """The delivery projection is part of the query's plan: across three
+    micro-batches each sink's payload expression is built once, and
+    every record still reaches both sinks."""
+    es, hec, es_spool, hec_spool = _spools(tmp_path)
+    calls: list[str] = []
+    _spy_payload(es, calls)
+    _spy_payload(hec, calls)
+    rows: list[int] = []
+    q = dual_sink_fanout(
+        _three_batch_stream(spark, tmp_path, stream_records), es, hec,
+        str(tmp_path / "ckpt"), on_batch=lambda epoch, n: rows.append(n),
+    )
+    q.awaitTermination(120)
+    assert rows == [4, 4, 4]
+    assert sorted(calls) == ["opensearch", "splunk"]
+    expected = sorted(f"s-{i}" for i in range(12))
+    assert sorted(d["_id"] for d in es_spool.read_back()) == expected
+    assert sorted(d["event"]["random_id"] for d in hec_spool.read_back()) == expected
+
+
+def test_fanout_replaced_transport_factory_takes_effect_next_batch(
+    spark, tmp_path, stream_records
+):
+    """A sink's transport factory is read on every pass: one replaced
+    after the first micro-batch receives every later batch."""
+    es, hec, first, _ = _spools(tmp_path)
+    second = SpoolDirTransport(str(tmp_path / "es2"))
+
+    def on_batch(epoch: int, n: int) -> None:
+        es.transport_factory = lambda: SpoolDirTransport(second.spool_dir)
+
+    q = dual_sink_fanout(
+        _three_batch_stream(spark, tmp_path, stream_records), es, hec,
+        str(tmp_path / "ckpt"), on_batch=on_batch,
+    )
+    q.awaitTermination(120)
+    assert sorted(d["_id"] for d in first.read_back()) == [f"s-{i}" for i in range(4)]
+    assert sorted(d["_id"] for d in second.read_back()) == sorted(
+        f"s-{i}" for i in range(4, 12)
+    )
+
+
+def test_fanout_disabled_sink_gets_no_payload_column(
+    spark, tmp_path, stream_records, monkeypatch, capsys
+):
+    """A sink disabled when the query starts contributes no payload
+    column to any micro-batch and says so once; the other sink still
+    delivers every record."""
+    from kinesis_to_opensearch_lambda_spark.streaming import pipeline
+
+    es, _, es_spool, _ = _spools(tmp_path)
+    hec = SplunkHECSink(
+        transport_factory=lambda: SpoolDirTransport(str(tmp_path / "hec")),
+        disabled="true",
+    )
+    calls: list[str] = []
+    _spy_payload(hec, calls)
+    columns = []
+    deliver = pipeline.deliver
+
+    def spy(frame, sinks):
+        columns.append(frame.columns)
+        return deliver(frame, sinks)
+
+    monkeypatch.setattr(pipeline, "deliver", spy)
+    q = dual_sink_fanout(
+        _three_batch_stream(spark, tmp_path, stream_records), es, hec,
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert columns == [["_p0"]] * 3
+    assert calls == []
+    assert capsys.readouterr().out.count("splunk delivery is disabled") == 1
+    assert (hec.last_success, hec.last_total) == (0, 0)
+    assert sorted(d["_id"] for d in es_spool.read_back()) == sorted(
+        f"s-{i}" for i in range(12)
+    )
+    assert SpoolDirTransport(str(tmp_path / "hec")).read_back() == []
+
+
+def _state_metadata(ckpt: str) -> dict[str, bytes]:
+    """Every file under the checkpoint's state metadata directories."""
+    out = {}
+    for root, _, files in os.walk(f"{ckpt}/state"):
+        rel = os.path.relpath(root, ckpt)
+        if "_metadata" in rel or "_stateSchema" in rel:
+            for name in files:
+                with open(os.path.join(root, name), "rb") as f:
+                    out[os.path.join(rel, name)] = f.read()
+    return out
+
+
+def test_restart_from_per_batch_payload_checkpoint(spark, tmp_path, stream_records):
+    """A dedup checkpoint written by a query that built the payloads
+    inside each micro-batch restarts under ``dual_sink_fanout``, whose
+    plan carries them: the dedup's state schema is the same, a
+    redelivered record is still dropped, and nothing is delivered
+    twice."""
+    from kinesis_to_opensearch_lambda_spark.sinks.base import deliver, payload_frame
+    from kinesis_to_opensearch_lambda_spark.streaming.pipeline import replay_dedup
+
+    src = str(tmp_path / "envelopes")
+    write_envelope_files(spark, src, stream_records[:6], n_files=1)
+    ckpt = str(tmp_path / "ckpt")
+    es, hec, es_spool, hec_spool = _spools(tmp_path)
+
+    def per_batch(batch_df, epoch_id):
+        deliver(*payload_frame(batch_df, (es, hec)))
+
+    stream = replay_dedup(decode_stream(read_envelope_stream(spark, src)), "1 day")
+    (
+        stream.writeStream.foreachBatch(per_batch)
+        .option("checkpointLocation", ckpt)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(180)
+    )
+    schema = _state_metadata(ckpt)
+    assert schema
+    write_envelope_files(spark, src, stream_records[6:] + stream_records[:1], n_files=1)
+    stream = decode_stream(read_envelope_stream(spark, src))
+    dual_sink_fanout(stream, es, hec, ckpt, dedup_watermark="1 day").awaitTermination(180)
+    assert _state_metadata(ckpt) == schema
+    expected = sorted(f"s-{i}" for i in range(12))
+    assert sorted(d["_id"] for d in es_spool.read_back()) == expected
+    assert sorted(d["event"]["random_id"] for d in hec_spool.read_back()) == expected
+
+
 def test_restart_does_not_redeliver(spark, tmp_path, stream_records):
     """Checkpointed offsets: a second run over the same source delivers
     nothing new (the engine-side half of at-least-once; doc-id dedup

@@ -72,6 +72,11 @@ AUDIT_SCHEMA = T.StructType(
 )
 
 
+# ``from_json`` options for the grammar the reference's ``json.loads``
+# accepts: Spark's parser takes single-quoted strings by default.
+STRICT_JSON = {"allowSingleQuotes": "false"}
+
+
 def decode_kinesis(df: DataFrame, tolerant: bool = False) -> DataFrame:
     """R2+R3: base64-decode the Kinesis payload and parse the JSON.
 
@@ -87,7 +92,9 @@ def decode_kinesis(df: DataFrame, tolerant: bool = False) -> DataFrame:
     a dead-letter branch captures) and the stream keeps going.
 
     Returns one column per ``AUDIT_SCHEMA`` field plus ``_raw`` (the
-    decoded JSON string) — the schemaless Splunk passthrough.
+    decoded JSON string) — the schemaless Splunk passthrough.  The parse
+    takes what ``json.loads`` takes (``STRICT_JSON``): a single-quoted
+    record is not JSON, so its fields are NULL and no sink posts it.
 
     The decode is wrapped in a one-element ``explode`` (a Generate
     node): generated attributes are a predicate-pushdown and
@@ -102,7 +109,7 @@ def decode_kinesis(df: DataFrame, tolerant: bool = False) -> DataFrame:
     else:
         raw = F.unbase64(F.col("kinesis_data")).cast("string")
     decoded = F.struct(
-        F.from_json(raw, AUDIT_SCHEMA).alias("p"), raw.alias("raw")
+        F.from_json(raw, AUDIT_SCHEMA, STRICT_JSON).alias("p"), raw.alias("raw")
     )
     passthrough = [F.col(c) for c in df.columns if c != "kinesis_data"]
     out = df.select(*passthrough, F.explode(F.array(decoded)).alias("_dec"))

@@ -55,12 +55,21 @@ def read_schemas(df: DataFrame) -> list[str]:
     return [m.group(1) for m in re.finditer(r"ReadSchema: (\S+)", plan)]
 
 
+# The Python exec nodes as PySpark 4.1's ``EXPLAIN`` names them; each
+# name is also the prefix of its ``...WithState`` or ``...UDTF`` variant.
+_PYTHON_NODE = (
+    r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow"
+    r"|FlatMapGroupsInPandas|FlatMapGroupsInArrow|FlatMapCoGroupsInPandas"
+    r"|FlatMapCoGroupsInArrow|ArrowAggregatePython|ArrowWindowPython"
+    r"|TransformWithStateInPySpark"
+)
+
+
 def python_eval_nodes(df: DataFrame) -> list[str]:
     """Python-execution operators in the plan.  Row-at-a-time
     ``BatchEvalPython`` is banned engine-wide; Arrow-batched nodes
-    (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) are the
-    sanctioned slow path for genuinely non-relational work."""
-    plan = plan_string(df, "simple")
-    return re.findall(
-        r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan
-    )
+    (scalar pandas UDFs, ``mapInPandas``/``mapInArrow``, pandas UDAFs and
+    window UDFs, grouped and cogrouped ``applyInPandas``/``applyInArrow``,
+    stateful processors) are the sanctioned slow path for genuinely
+    non-relational work."""
+    return re.findall(_PYTHON_NODE, plan_string(df, "simple"))

@@ -35,6 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.pipeline import STRICT_JSON
 from .base import ChunkedTransportSink
 
 # escape-aware JSON string-value pattern (handles \" inside values)
@@ -109,8 +110,10 @@ class SplunkHECSink(ChunkedTransportSink):
         ``@timestamp`` or ``ip``.
         """
         # None-guard (lambda_function.py:117-119).  ``OR`` short-circuits:
-        # the second parse runs only for id-less rows.
-        parsed = F.col("random_id").isNotNull() | F.json_object_keys("_raw").isNotNull()
+        # the second parse runs only for id-less rows, with the decode's
+        # options, so a text ``json.loads`` rejects is skipped either way.
+        is_object = F.from_json("_raw", "map<string,string>", STRICT_JSON).isNotNull()
+        parsed = F.col("random_id").isNotNull() | is_object
         raw = F.col("_raw")
         ts = _strip_json_field(raw, raw.contains('"@timestamp"'), "@timestamp")
         # ``_ts`` is referenced three times by the ip step and ``_event``

@@ -1,9 +1,10 @@
 """Local replica of the driver's DuckDB-oracle correctness gate.
 
-Runs a registered Spark query and its oracle SQL side by side and
-compares row count, column names, and canonicalized values — strict
-(exact string equality after canonicalization), because the driver
-compares by value hash.
+Builds a registered Spark query once, checks the no-row-Python ban on
+the plan it is about to execute, then runs it and its oracle SQL side
+by side and compares row count, column names, and canonicalized values
+— strict (exact string equality after canonicalization), because the
+driver compares by value hash.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from datetime import date, datetime
 import duckdb
 import pandas as pd
 
+from kinesis_to_opensearch_lambda_spark.plans import python_eval_nodes
 from kinesis_to_opensearch_lambda_spark.sources.batch import TABLES
 
 
@@ -56,12 +58,23 @@ def _rows(df: pd.DataFrame) -> list[tuple[str, ...]]:
     return sorted(tuple(_canon(v) for v in row) for row in df.itertuples(index=False))
 
 
-def assert_parity(spark, name: str, sf_dir: str) -> None:
-    timed_parity(spark, name, sf_dir)
+# The only queries allowed to run (Arrow-batched) Python: multimodal
+# decode plumbing and the grouped-map model-fitting operator.
+ARROW_ALLOWLIST = {
+    "mm_frame_extract",
+    "mm_audio_windows",
+    "mm_phash_neardup",
+    "mm_av_sync_join",  # composes the two Arrow fan-outs above
+    "grouped_map_regression",
+    "emb_gram_matrix",
+}
 
 
 def timed_parity(spark, name: str, sf_dir: str) -> dict[str, float]:
-    """assert_parity plus a cost attribution: returns
+    """Build ``name`` once, check the no-row-Python ban on its plan
+    before anything executes (``toPandas`` then runs that same
+    ``QueryExecution``, so the plan is not built twice), and compare
+    its rows with the oracle's.  Returns a cost attribution:
     ``{"spark_sec": ..., "oracle_sec": ..., "compare_sec": ...}``
     (oracle/compare 0.0 for rows-only entries).  Sweep artifacts
     record the split so harness cost is never mistaken for engine
@@ -79,7 +92,14 @@ def timed_parity(spark, name: str, sf_dir: str) -> dict[str, float]:
 
     q = REGISTRY[name]
     t0 = time.perf_counter()
-    actual = q.spark(spark, sf_dir).toPandas()
+    df = q.spark(spark, sf_dir)
+    # Row-at-a-time Python UDFs are banned engine-wide; only Arrow-batched
+    # nodes may appear, and only in the allowlisted ops.
+    nodes = python_eval_nodes(df)
+    assert "BatchEvalPython" not in nodes, f"{name}: {nodes}"
+    if name not in ARROW_ALLOWLIST:
+        assert nodes == [], f"{name} unexpectedly runs Python: {nodes}"
+    actual = df.toPandas()
     spark_sec = round(time.perf_counter() - t0, 2)
     if q.oracle is None:
         assert len(actual) >= 0  # rows-only smoke

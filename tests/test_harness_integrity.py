@@ -1,10 +1,14 @@
 """Guards on the verification harness itself: no trivially-empty
-oracle matches, and the comparator genuinely detects mismatches.
+oracle matches, the comparator genuinely detects mismatches, and the
+parity check enforces the no-row-Python ban before it runs a query.
 
 The non-empty guard runs on the DuckDB side only, so each query is
-executed in Spark once per suite (by ``test_oracle_parity``)."""
+built and executed in Spark once per suite, by ``test_oracle_parity``;
+``timed_parity`` checks the ban on that one build's plan."""
 
 from __future__ import annotations
+
+import dataclasses
 
 import pandas as pd
 import pytest
@@ -12,7 +16,7 @@ import pytest
 from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
 
 from .conftest import SF_DIR
-from .oracle_compare import _rows, duck_con
+from .oracle_compare import _rows, duck_con, timed_parity
 
 
 @pytest.fixture(scope="module")
@@ -71,3 +75,29 @@ def test_comparator_detects_negative_zero():
     a = pd.DataFrame({"v": [0.0]})
     b = pd.DataFrame({"v": [-0.0]})
     assert _rows(a) != _rows(b)
+
+
+def test_parity_checks_python_ban_before_running(spark, monkeypatch):
+    """``timed_parity`` builds a query once and rejects a row-at-a-time
+    Python UDF in its plan before any Spark job runs it."""
+    from pyspark.sql import functions as F
+
+    name = "tpch_q1_pricing_summary"
+    builds = []
+
+    def row_udf_build(spark, sf_dir):
+        builds.append(sf_dir)
+        return spark.range(3).select(F.udf(lambda x: x, "long")("id").alias("id"))
+
+    monkeypatch.setitem(REGISTRY, name, dataclasses.replace(REGISTRY[name], spark=row_udf_build))
+    sc = spark.sparkContext
+    sc.setJobGroup("python-ban-spy", "timed_parity over a row-UDF frame")
+    try:
+        with pytest.raises(AssertionError, match="BatchEvalPython"):
+            timed_parity(spark, name, SF_DIR)
+        assert sc.statusTracker().getJobIdsForGroup("python-ban-spy") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert builds == [SF_DIR]

@@ -1,11 +1,17 @@
 """Plan-discipline tests (SURVEY.md §4 / the 100 TB design rules):
-pushdown, pruning, broadcast choices, shuffle counts, and the
-no-row-Python ban are asserted properties of the physical plans."""
+pushdown, pruning, broadcast choices and shuffle counts are asserted
+properties of the physical plans.
+
+The no-row-Python ban is checked on every registered query by
+``oracle_compare.timed_parity``, on the plan parity executes, so no
+test here builds the registry again; one test here checks that the
+ban's node list sees every Python exec node."""
 
 from __future__ import annotations
 
 import re
 
+import pandas as pd
 import pytest
 
 from kinesis_to_opensearch_lambda_spark.plans import (
@@ -111,26 +117,41 @@ def test_minhash_signatures_shuffle_free(spark):
     assert shuffle_exchange_count(q(spark, "dedup_minhash_signature")) == 0
 
 
-# The only queries allowed to run (Arrow-batched) Python: multimodal
-# decode plumbing and the grouped-map model-fitting operator.
-ARROW_ALLOWLIST = {
-    "mm_frame_extract",
-    "mm_audio_windows",
-    "mm_phash_neardup",
-    "mm_av_sync_join",  # composes the two Arrow fan-outs above
-    "grouped_map_regression",
-    "emb_gram_matrix",
-}
+def test_python_eval_nodes_sees_every_arrow_node(spark):
+    """The ban's node list covers each Python exec node PySpark 4.1
+    plans, not only scalar UDFs, ``mapInPandas`` and grouped
+    ``applyInPandas``: one tiny frame per node."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming import StatefulProcessor
 
+    @F.pandas_udf("double")
+    def mean(v: pd.Series) -> float:
+        return v.mean()
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_no_row_python_anywhere(spark, name):
-    """Row-at-a-time Python UDFs are banned engine-wide; only
-    Arrow-batched nodes may appear, and only in the allowlisted ops."""
-    nodes = python_eval_nodes(q(spark, name))
-    assert "BatchEvalPython" not in nodes, nodes
-    if name not in ARROW_ALLOWLIST:
-        assert nodes == [], f"{name} unexpectedly runs Python: {nodes}"
+    class Echo(StatefulProcessor):
+        def init(self, handle):
+            pass
+
+        def handleInputRows(self, key, rows, timerValues):
+            yield from rows
+
+    df = spark.range(4).select(F.col("id").cast("double").alias("v"), (F.col("id") % 2).alias("g"))
+    cogrouped = df.groupBy("g").cogroup(df.groupBy("g"))
+    stream = spark.readStream.format("rate").load().select((F.col("value") % 2).alias("g"))
+    frames = {
+        "MapInArrow": df.mapInArrow(lambda batches: batches, df.schema),
+        "ArrowAggregatePython": df.groupBy("g").agg(mean("v")),
+        "ArrowWindowPython": df.select(mean("v").over(Window.partitionBy("g"))),
+        "FlatMapCoGroupsInPandas": cogrouped.applyInPandas(lambda a, b: a, df.schema),
+        "FlatMapCoGroupsInArrow": cogrouped.applyInArrow(lambda a, b: a, df.schema),
+        "FlatMapGroupsInArrow": df.groupBy("g").applyInArrow(lambda t: t, df.schema),
+        "TransformWithStateInPySpark": stream.groupBy("g").transformWithStateInPandas(
+            Echo(), "g long", "append", "none"
+        ),
+    }
+    for node, frame in frames.items():
+        assert python_eval_nodes(frame) == [node], node
 
 
 def test_q6_all_predicates_pushed(spark):
@@ -432,7 +453,6 @@ def test_triangle_count_all_hash_joins(spark):
     plan = plan_string(df)
     assert "NestedLoop" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    assert not python_eval_nodes(df)
     # the intersect kernel is the discriminating artifact of the
     # spill-lean form (sweeps/PARITY_TRI_SF10_r09.json)
     assert "array_intersect" in plan, plan
@@ -445,7 +465,6 @@ def test_degree_distribution_two_aggregations(spark):
     df = q(spark, "graph_degree_distribution")
     plan = plan_string(df)
     assert "NestedLoop" not in plan, plan
-    assert not python_eval_nodes(df)
 
 
 def test_rollup_hierarchy_one_scan_one_shuffle(spark):
@@ -467,7 +486,6 @@ def test_iqr_outliers_single_exchange(spark):
     percentile window)."""
     df = q(spark, "anomaly_iqr_outliers")
     assert shuffle_exchange_count(df) == 1
-    assert not python_eval_nodes(df)
 
 
 def test_asof_nearest_single_exchange(spark):
@@ -504,7 +522,6 @@ def test_knn_graph_no_allpairs(spark):
     plan = plan_string(df)
     assert "NestedLoop" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    assert not python_eval_nodes(df)
     assert "SortMergeJoin" in plan, plan
     assert plan.count("Bucketed: true") == 2, plan
 
@@ -526,7 +543,6 @@ def test_knn_graph_multitable_mutual_bounded(spark):
     plan = plan_string(df)
     assert "NestedLoop" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    assert not python_eval_nodes(df)
     assert plan.count("Bucketed: true") == 2 * _KNN_TABLES, plan
 
 
@@ -548,7 +564,6 @@ def test_knn_graph_multitable_no_allpairs_and_distinct_tables(spark):
     # stages must all be hash equi-joins.  A formatted plan prints
     # each node twice (tree + numbered detail), so one node == 2 hits.
     assert plan.count("BroadcastNestedLoopJoin") <= 2, plan
-    assert not python_eval_nodes(df)
     assert has_broadcast_hash_join(df)
 
     # independence: two plane sets disagree on some vector's bucket
@@ -636,7 +651,6 @@ def test_event_transitions_window_then_agg(spark):
     Python anywhere."""
     df = q(spark, "window_event_transitions")
     assert shuffle_exchange_count(df) <= 3
-    assert not python_eval_nodes(df)
 
 
 def test_av_sync_join_equi_not_nestedloop(spark):
@@ -679,7 +693,6 @@ def test_lsh_recall_shuffle_free(spark):
     band compare, Jaccard) is narrow/codegen — zero exchanges."""
     df = q(spark, "dedup_lsh_recall")
     assert shuffle_exchange_count(df) == 0
-    assert not python_eval_nodes(df)
 
 
 def test_psi_drift_two_exchanges_max(spark):
@@ -690,13 +703,6 @@ def test_psi_drift_two_exchanges_max(spark):
     df = q(spark, "quality_psi_drift")
     assert len(read_schemas(df)) == 1
     assert shuffle_exchange_count(df) <= 2
-    assert not python_eval_nodes(df)
-
-
-def test_iterative_graph_ops_no_python(spark):
-    """k-core peel and BFS frontier: int-key joins only, no Python."""
-    for name in ("graph_kcore_peel", "graph_bfs_reachability"):
-        assert not python_eval_nodes(q(spark, name)), name
 
 
 def test_round5_late_ops_no_python_no_allpairs(spark):
@@ -711,7 +717,6 @@ def test_round5_late_ops_no_python_no_allpairs(spark):
         "curation_dataset_card",
     ):
         df = q(spark, name)
-        assert not python_eval_nodes(df), name
         assert "CartesianProduct" not in plan_string(df), name
 
 
@@ -757,7 +762,6 @@ def test_leakage_split_shuffle_free_before_agg(spark):
     # (split, gk), final by split)
     df = q(spark, "split_leakage_safe_groups")
     assert shuffle_exchange_count(df) <= 2
-    assert not python_eval_nodes(df)
 
 
 def test_hll_merge_shuffles_sketches_never_ids(spark):
@@ -789,7 +793,6 @@ def test_variant_extract_single_shuffle_no_python(spark):
     # stage; one exchange for the final agg
     df = q(spark, "variant_typed_extract")
     assert shuffle_exchange_count(df) == 1
-    assert not python_eval_nodes(df)
 
 
 def test_countmin_sketch_bounded_shuffles_probe_broadcast(spark):
@@ -805,7 +808,6 @@ def test_countmin_sketch_bounded_shuffles_probe_broadcast(spark):
     p = plan_string(df)
     assert "TakeOrderedAndProject" in p, p
     assert has_broadcast_hash_join(df)
-    assert not python_eval_nodes(df)
 
 
 def test_ewma_single_exchange_no_python(spark):
@@ -813,7 +815,6 @@ def test_ewma_single_exchange_no_python(spark):
     # dot product is per-row array arithmetic inside the window stage
     df = q(spark, "window_ewma_finite")
     assert shuffle_exchange_count(df) == 1
-    assert not python_eval_nodes(df)
 
 
 def test_recursive_cte_unionloop_no_nestedloop(spark):
@@ -835,7 +836,6 @@ def test_sql_udf_is_inlined(spark):
     p = plan_string(df)
     assert "ScalaUDF" not in p and "PythonUDF" not in p
     assert shuffle_exchange_count(df) == 1
-    assert not python_eval_nodes(df)
 
 
 def test_aqe_splits_skewed_join_partition(spark):
@@ -885,7 +885,6 @@ def test_poisson_bootstrap_two_exchanges_no_python(spark):
     # aggregations (per-replicate means, then replicate summary)
     df = q(spark, "sample_poisson_bootstrap")
     assert shuffle_exchange_count(df) <= 2
-    assert not python_eval_nodes(df)
 
 
 def test_corr_moments_single_reduce(spark):
@@ -894,7 +893,6 @@ def test_corr_moments_single_reduce(spark):
     # correlation arithmetic is a projection over the 1-row result
     df = q(spark, "agg_corr_exact_moments")
     assert shuffle_exchange_count(df) <= 1
-    assert not python_eval_nodes(df)
 
 
 def test_mutual_information_single_exchange(spark):
@@ -902,7 +900,6 @@ def test_mutual_information_single_exchange(spark):
     # window sums over the tiny contingency table
     df = q(spark, "agg_mutual_information")
     assert shuffle_exchange_count(df) == 1
-    assert not python_eval_nodes(df)
 
 
 def test_rejection_funnel_one_scan_one_shuffle(spark):
@@ -910,7 +907,6 @@ def test_rejection_funnel_one_scan_one_shuffle(spark):
     # total joins via broadcast
     df = q(spark, "curation_rejection_funnel")
     assert shuffle_exchange_count(df) == 1
-    assert not python_eval_nodes(df)
 
 
 def test_random_walk_bounded_rounds_no_nestedloop(spark):
@@ -921,7 +917,6 @@ def test_random_walk_bounded_rounds_no_nestedloop(spark):
     p = plan_string(df)
     assert "BroadcastNestedLoop" not in p and "Cartesian" not in p
     assert shuffle_exchange_count(df) <= 12
-    assert not python_eval_nodes(df)
 
 
 def test_cusum_single_exchange_shared_window(spark):
@@ -930,7 +925,6 @@ def test_cusum_single_exchange_shared_window(spark):
     # key, no stateful UDF
     df = q(spark, "anomaly_cusum_drift")
     assert shuffle_exchange_count(df) == 1
-    assert not python_eval_nodes(df)
 
 
 def test_ks_two_sample_single_exchange(spark):
@@ -939,7 +933,6 @@ def test_ks_two_sample_single_exchange(spark):
     # all-integer arithmetic
     df = q(spark, "quality_ks_two_sample")
     assert shuffle_exchange_count(df) == 1
-    assert not python_eval_nodes(df)
 
 
 def test_quality_percentile_filter_no_corpus_global_sort(spark):

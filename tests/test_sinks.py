@@ -166,8 +166,8 @@ def test_chunking_property():
 def _unguarded_hec_payload(df, splunk_index: str):
     """Oracle for the HEC payload: all six strips on every parsed row and
     a splice that counts the event's characters, with no guard.  The
-    patterns are written out here rather than imported, so a change to
-    the sink's patterns shows up as a difference."""
+    patterns and the strict parse are written out here rather than
+    imported, so a change to the sink's shows up as a difference."""
     jstr = r'"(?:[^"\\]|\\.)*"'
 
     def strip(col, field, value):
@@ -175,7 +175,9 @@ def _unguarded_hec_payload(df, splunk_index: str):
         out = F.regexp_replace(out, f',\\s*"{field}"\\s*:\\s*{value}', "")
         return F.regexp_replace(out, f'"{field}"\\s*:\\s*{value}', "")
 
-    parsed = F.col("random_id").isNotNull() | F.json_object_keys("_raw").isNotNull()
+    strict = {"allowSingleQuotes": "false"}
+    is_object = F.from_json("_raw", "map<string,string>", strict).isNotNull()
+    parsed = F.col("random_id").isNotNull() | is_object
     raw = strip(strip(F.col("_raw"), "@timestamp", jstr), "ip", '(?:""|null)')
     frame = df.withColumn("_oracle_event", F.when(parsed, raw))
     event = F.col("_oracle_event")
@@ -255,9 +257,10 @@ HOSTILE_HEC_TEXTS = [
     # oracle's emptiness regex runs and must answer "not empty" (\x0b and
     # \f are not JSON whitespace, so those two records are skipped)
     *['{' + ws + f'"random_id": "ws-{ord(ws)}", ' + DT + "}" for ws in " \t\n\x0b\f\r"],
-    # the parser takes single quotes, the regex reads only double-quoted
-    # strings: it spans a single-quoted value holding '"@timestamp":"' to
-    # the next '"', across the pairs after it, and strips a '"ip":null'
+    # single quotes are not JSON, so these are skipped: a lenient parse
+    # would post them, and the regex, which reads only double-quoted
+    # strings, would span a single-quoted value holding '"@timestamp":"'
+    # to the next '"', across the pairs after it, and strip a '"ip":null'
     # inside one; with and without datetime, and a key in either quote
     "{'note': '\"@timestamp\":\"', " + DT + ", 'random_id': 'sq-span', 'z': '\"'}",
     "{'note': '\"@timestamp\":\"', 'datetime': '2026-02-18T10:30:00', 'random_id': "
@@ -268,8 +271,10 @@ HOSTILE_HEC_TEXTS = [
     "{'@timestamp': 'old', 'ip': null, 'random_id': 'sq-keys', " + DT + "}",
     '{"@timestamp": "old", ' + "'random_id': 'sq-rest', 'datetime': '2026-02-18T10:30:00'}",
     '{"ip": null, ' + "'random_id': 'sq-rest-ip', 'datetime': '2026-02-18T10:30:00'}",
-    # regex strips '"@timestamp":"...' up to the end, leaving '{}'; the
-    # parser reads one @timestamp key holding the rest, so no datetime
+    # a double-quoted @timestamp value holding single-quoted pairs is
+    # JSON: the regex strips '"@timestamp":"...' up to the end, leaving
+    # '{}'; the parser reads one @timestamp key holding the rest, so no
+    # datetime
     '{"@timestamp": "' + "', 'datetime': '2026-02-18T10:30:00', 'random_id': 'sq-in-ts', 'z': '\"}",
     # non-object JSON and invalid JSON are skipped
     "[1, 2]",

@@ -146,11 +146,18 @@ class TestDecodeNormalize:
         assert row["ip"] == "192.168.1.1"
 
     def test_malformed_record_filtered(self, spark):
+        # ``json.loads`` rejects single quotes too, with or without an id
+        texts = [
+            "not json{{",
+            "{'random_id': 'sq', 'datetime': '2026-02-18T10:30:00', 'ip': ''}",
+            "{'datetime': '2026-02-18T10:30:00'}",
+            "{\"random_id\": 'sq-value'}",
+        ]
         env = spark.createDataFrame(
-            [(base64.b64encode(b"not json{{").decode(),)], "kinesis_data: string"
+            [(base64.b64encode(t.encode()).decode(),) for t in texts], "kinesis_data: string"
         )
         df = decode_stream(env)
-        assert df.count() == 1  # the decode chain keeps every row
+        assert df.count() == len(texts)  # the decode chain keeps every row
         # R7 None-guard semantics, owned by each sink
         assert sink_payloads(df) == ([], [])
 

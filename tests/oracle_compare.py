@@ -4,7 +4,9 @@ Builds a registered Spark query once, checks the no-row-Python ban on
 the plan it is about to execute, then runs it and its oracle SQL side
 by side and compares row count, column names, and canonicalized values
 — strict (exact string equality after canonicalization), because the
-driver compares by value hash.
+driver compares by value hash.  A passed ban check is remembered per
+builder, so ``assert_python_ban`` re-checks a query parity already ran
+without building it a second time.
 """
 
 from __future__ import annotations
@@ -70,6 +72,33 @@ ARROW_ALLOWLIST = {
 }
 
 
+# (builder, sf_dir) pairs whose built plan passed the ban this session.
+# Keyed by the builder, not the name, so a test that swaps a builder in
+# never stands for the registered one.
+_BAN_PASSED: set[tuple[object, str]] = set()
+
+
+def _check_python_ban(name: str, build, sf_dir: str, df) -> None:
+    # Row-at-a-time Python UDFs are banned engine-wide; only Arrow-batched
+    # nodes may appear, and only in the allowlisted ops.
+    nodes = python_eval_nodes(df)
+    assert "BatchEvalPython" not in nodes, f"{name}: {nodes}"
+    if name not in ARROW_ALLOWLIST:
+        assert nodes == [], f"{name} unexpectedly runs Python: {nodes}"
+    _BAN_PASSED.add((build, sf_dir))
+
+
+def assert_python_ban(spark, name: str, sf_dir: str) -> None:
+    """Check the no-row-Python ban on ``name`` at ``sf_dir``.  A query
+    whose plan ``timed_parity`` already checked this session is not
+    built again; any other is built here and its plan checked."""
+    from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
+
+    build = REGISTRY[name].spark
+    if (build, sf_dir) not in _BAN_PASSED:
+        _check_python_ban(name, build, sf_dir, build(spark, sf_dir))
+
+
 def timed_parity(spark, name: str, sf_dir: str) -> dict[str, float]:
     """Build ``name`` once, check the no-row-Python ban on its plan
     before anything executes (``toPandas`` then runs that same
@@ -93,12 +122,7 @@ def timed_parity(spark, name: str, sf_dir: str) -> dict[str, float]:
     q = REGISTRY[name]
     t0 = time.perf_counter()
     df = q.spark(spark, sf_dir)
-    # Row-at-a-time Python UDFs are banned engine-wide; only Arrow-batched
-    # nodes may appear, and only in the allowlisted ops.
-    nodes = python_eval_nodes(df)
-    assert "BatchEvalPython" not in nodes, f"{name}: {nodes}"
-    if name not in ARROW_ALLOWLIST:
-        assert nodes == [], f"{name} unexpectedly runs Python: {nodes}"
+    _check_python_ban(name, q.spark, sf_dir, df)
     actual = df.toPandas()
     spark_sec = round(time.perf_counter() - t0, 2)
     if q.oracle is None:

@@ -16,7 +16,7 @@ import pytest
 from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
 
 from .conftest import SF_DIR
-from .oracle_compare import _rows, duck_con, timed_parity
+from .oracle_compare import _rows, assert_python_ban, duck_con, timed_parity
 
 
 @pytest.fixture(scope="module")
@@ -101,3 +101,33 @@ def test_parity_checks_python_ban_before_running(spark, monkeypatch):
         sc.setLocalProperty("spark.job.description", None)
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
     assert builds == [SF_DIR]
+
+
+def test_python_ban_builds_a_checked_builder_once(spark, monkeypatch):
+    """``assert_python_ban`` skips the build of a builder whose plan
+    already passed the ban at that scale, and keeps rejecting one that
+    failed it."""
+    from pyspark.sql import functions as F
+
+    name = "tpch_q1_pricing_summary"
+    builds = []
+
+    def clean_build(spark, sf_dir):
+        builds.append(sf_dir)
+        return spark.range(3)
+
+    def row_udf_build(spark, sf_dir):
+        builds.append(sf_dir)
+        return spark.range(3).select(F.udf(lambda x: x, "long")("id").alias("id"))
+
+    monkeypatch.setitem(REGISTRY, name, dataclasses.replace(REGISTRY[name], spark=clean_build))
+    assert_python_ban(spark, name, SF_DIR)
+    assert_python_ban(spark, name, SF_DIR)
+    assert builds == [SF_DIR]
+
+    builds.clear()
+    monkeypatch.setitem(REGISTRY, name, dataclasses.replace(REGISTRY[name], spark=row_udf_build))
+    for _ in range(2):
+        with pytest.raises(AssertionError, match="BatchEvalPython"):
+            assert_python_ban(spark, name, SF_DIR)
+    assert builds == [SF_DIR, SF_DIR]

@@ -3,9 +3,11 @@ pushdown, pruning, broadcast choices and shuffle counts are asserted
 properties of the physical plans.
 
 The no-row-Python ban is checked on every registered query by
-``oracle_compare.timed_parity``, on the plan parity executes, so no
-test here builds the registry again; one test here checks that the
-ban's node list sees every Python exec node."""
+``oracle_compare.timed_parity``, on the plan parity executes.  The ban
+tests here go through ``oracle_compare.assert_python_ban``, which
+builds a query only if parity has not checked it this session, so a
+full run builds the registry once; one test here checks that the ban's
+node list sees every Python exec node."""
 
 from __future__ import annotations
 
@@ -26,6 +28,7 @@ from kinesis_to_opensearch_lambda_spark.plans import (
 from kinesis_to_opensearch_lambda_spark.queries import REGISTRY
 
 from .conftest import SF_DIR
+from .oracle_compare import assert_python_ban
 
 
 def q(spark, name):
@@ -115,6 +118,13 @@ def test_sink_serialize_strips_raw_json_once(spark):
 
 def test_minhash_signatures_shuffle_free(spark):
     assert shuffle_exchange_count(q(spark, "dedup_minhash_signature")) == 0
+
+
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_no_row_python_anywhere(spark, name):
+    """Row-at-a-time Python UDFs are banned engine-wide; only
+    Arrow-batched nodes may appear, and only in the allowlisted ops."""
+    assert_python_ban(spark, name, SF_DIR)
 
 
 def test_python_eval_nodes_sees_every_arrow_node(spark):
@@ -703,6 +713,12 @@ def test_psi_drift_two_exchanges_max(spark):
     df = q(spark, "quality_psi_drift")
     assert len(read_schemas(df)) == 1
     assert shuffle_exchange_count(df) <= 2
+
+
+def test_iterative_graph_ops_no_python(spark):
+    """k-core peel and BFS frontier: int-key joins only, no Python."""
+    for name in ("graph_kcore_peel", "graph_bfs_reachability"):
+        assert_python_ban(spark, name, SF_DIR)
 
 
 def test_round5_late_ops_no_python_no_allpairs(spark):
